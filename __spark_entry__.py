@@ -27,30 +27,13 @@ def entry(spark: SparkSession) -> DataFrame:
     SimHash radius 3) — extract -> sign -> LSH join -> verify -> CC."""
     from pyspark.sql import functions as F
 
-    from name_deduplication_python_spark import DEFAULT_CONFIG as C
-    from name_deduplication_python_spark.operators.components import (
-        components_with_singletons,
-    )
-    from name_deduplication_python_spark.operators.lsh import band_keys, candidate_pairs
-    from name_deduplication_python_spark.operators.signatures import signature_stage
-    from name_deduplication_python_spark.operators.verify import verify_stage
+    from name_deduplication_python_spark import DEFAULT_CONFIG
+    from name_deduplication_python_spark.trainset import near_dup_clusters
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         F.col("doc_id").cast("string").alias("url"), "text"
     )
-    sigs = signature_stage(
-        docs, num_hashes=C["num_hashes"], shingle_k=C["shingle_k"], seed=C["seed"]
-    )
-    keys = band_keys(sigs, bands=C["bands"], rows_per_band=C["rows_per_band"])
-    pairs, _ = candidate_pairs(keys, bucket_cap=C["bucket_cap"], with_stats=False)
-    edges = verify_stage(
-        pairs,
-        sigs,
-        num_hashes=C["num_hashes"],
-        jaccard_threshold=C["jaccard_threshold"],
-        simhash_radius=C["simhash_radius"],
-    )
-    return components_with_singletons(edges.select("src", "dst"), docs, "url")
+    return near_dup_clusters(docs, DEFAULT_CONFIG)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

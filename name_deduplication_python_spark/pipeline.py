@@ -3,21 +3,24 @@ stages and per-partition lineage.
 
 The reference is one monolithic in-memory run — a crash loses everything
 (/root/reference/main.py:546-683, SURVEY §4.2 'no incremental/resume').
-Here every stage materializes to parquet under a work dir; re-running the
-pipeline skips stages whose output already exists (atomic via Spark's
-_SUCCESS marker), so any stage resumes idempotently (north_rule). Each
-stage also appends a lineage/metrics row set: (stage, partition_id,
-n_rows) plus stage wall-clock, written to <workdir>/metrics.
+Here the pipeline is one ordered stage table (DedupPipeline.TABLE): each
+entry names its builder and the earlier stages it reads. run() walks it
+in one loop — a stage whose output exists (atomic via Spark's _SUCCESS
+marker) is read back, so any stage resumes idempotently (north_rule); a
+persisted stage is written by _materialize, which also appends lineage
+rows (stage, partition_id, n_rows) and records the stage wall-clock; a
+fused stage stays a lazy DataFrame feeding the next stage.
 
-Stages:
-  1 extracted   url, warc_ts, text, lang         (byte-deterministic)
-  2 signatures  url, minhash[128], simhash, n_shingles
-  2b exact_map  url, rep   (identical-signature collapse; rep = group min
-                url — LSH then runs on reps only; exact_collapse=True)
-  3 pairs       src, dst (surrogate uid = xxhash64(url); 8-byte shuffle
-                keys — see run() comment)                (LSH candidates)
-  4 edges       src, dst (urls), est_jaccard, hamming, status (verified)
-  5 clusters    url, cluster_id                  (CC over edges, min-url label)
+  extracted   url, warc_ts, text, lang              (byte-deterministic)
+  signatures  url, minhash[128], simhash, n_shingles, collapse hashes
+  exact_map   url, rep   (identical-signature collapse, exact_collapse)
+  pairs       src, dst   (LSH candidates on 8-byte uids, see _with_uid)
+  edges       src, dst (urls), est_jaccard, hamming, status, via
+  clusters    url, cluster_id                  (CC over edges, min url)
+  + substring_pairs / spans_removed / audit when enabled in cfg.extra
+
+fuse_stages only picks the persisted set: staged writes every stage;
+fused keeps extracted and pairs lazy.
 
 On a real cluster the work dir is an object-store path and the tables
 are Iceberg; parquet-dir + _SUCCESS is the same contract the sandbox can
@@ -29,19 +32,27 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass, field
+from collections.abc import Callable
+from dataclasses import asdict, dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import DEFAULT_CONFIG
+from .operators.audit import audit_edges
 from .operators.components import (
     components_with_exact_map,
     components_with_singletons,
 )
 from .operators.extract import extract_stage
-from .operators.lsh import band_keys, candidate_pairs
-from .operators.signatures import signature_stage
+from .operators.lsh import band_keys, bucket_stats_job, candidate_pairs
+from .operators.signatures import (
+    collapse_hash_exprs,
+    signature_collapse,
+    signature_stage,
+)
+from .operators.substring import dedup_spans, substring_pairs
 from .operators.verify import verify_stage
 
 
@@ -73,12 +84,15 @@ class DedupConfig:
     cc_small_graph_threshold: int = 10_000_000
     cc_string_hash_threshold: int = 200_000
     cc_broadcast_edge_threshold: int = 1_500_000
-    # fuse_stages trades resume granularity for wall-clock: the five-stage
-    # layout becomes three jobs (extract fused into signatures; the pair
-    # explosion fused into the verify join), removing two full
-    # materialize+rescan round-trips and their job-commit barriers. The
-    # checkpoint/recompute tradeoff is the standard lakehouse knob; results
-    # are identical (same kernels, same plans past the fusion point).
+    # fuse_stages only selects which entries of DedupPipeline.TABLE
+    # persist. False (staged): every stage. True (fused): `extracted` and
+    # `pairs` stay lazy — extract pipes into the signature kernel and the
+    # pair explosion into the verify join — so only signatures, exact_map,
+    # edges and clusters (plus enabled optional stages) are written. Two
+    # fewer materialize+rescan round-trips and job-commit barriers, for
+    # coarser resume (the standard lakehouse checkpoint/recompute knob);
+    # results are identical (same builders, same plans past the fusion
+    # point).
     fuse_stages: bool = False
     # exact_collapse: identical-signature docs collapse to one
     # representative before the band shuffle (operators.signatures.
@@ -107,13 +121,11 @@ class DedupConfig:
     extra: dict = field(default_factory=dict)
 
 
-def _done(path: str, table_format: str = "parquet") -> bool:
-    """Stage-complete probe. Parquet stages commit atomically via Spark's
-    _SUCCESS marker; an Iceberg table's commit marker is its metadata
-    version file (snapshot commit — the same atomicity contract)."""
-    if table_format == "iceberg":
-        return os.path.exists(os.path.join(path, "metadata", "version-hint.text"))
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
+def _fingerprint(cfg: DedupConfig) -> dict:
+    """The config as a run dir's config.json holds it: every field,
+    ``extra`` included (it enables and tunes the optional stages), JSON-
+    normalized so it compares equal to what json.load returns."""
+    return json.loads(json.dumps(asdict(cfg), sort_keys=True))
 
 
 def allocate_run_dir(base: str, cfg: "DedupConfig | None" = None) -> str:
@@ -130,12 +142,9 @@ def allocate_run_dir(base: str, cfg: "DedupConfig | None" = None) -> str:
         colliding.
     """
     import hashlib
-    from dataclasses import asdict
 
-    cfg = cfg or DedupConfig()
-    fp = {k: v for k, v in asdict(cfg).items() if k != "extra"}
-    blob = json.dumps(fp, sort_keys=True).encode()
-    tag = hashlib.sha256(blob).hexdigest()[:12]
+    fp = _fingerprint(cfg or DedupConfig())
+    tag = hashlib.sha256(json.dumps(fp, sort_keys=True).encode()).hexdigest()[:12]
     for seq in range(1000):
         path = os.path.join(base, f"run-{tag}" + (f"-{seq}" if seq else ""))
         cfg_path = os.path.join(path, "config.json")
@@ -176,6 +185,17 @@ def _lineage_rows(path: str, stage: str) -> list[dict]:
     return rows
 
 
+class _Stage(NamedTuple):
+    """One entry of DedupPipeline.TABLE. ``build`` is called with the
+    pipeline and the frames of ``reads`` (None for a disabled stage)."""
+
+    name: str
+    build: Callable[..., DataFrame]
+    reads: tuple[str, ...]
+    fusable: bool = False  # stays lazy (never persisted) under fuse_stages
+    when: Callable[[DedupConfig], object] = lambda cfg: True  # runs if truthy
+
+
 class DedupPipeline:
     """Resumable near-dup pipeline over a web_pages DataFrame."""
 
@@ -199,10 +219,8 @@ class DedupPipeline:
         in the same workdir would silently reuse checkpoints computed
         under the old config — refuse instead (caller picks a new workdir
         or deletes the stale one)."""
-        from dataclasses import asdict
-
         fp_path = os.path.join(self.workdir, "config.json")
-        fp = {k: v for k, v in asdict(self.cfg).items() if k != "extra"}
+        fp = _fingerprint(self.cfg)
         if os.path.exists(fp_path):
             with open(fp_path) as f:
                 existing = json.load(f)
@@ -223,7 +241,13 @@ class DedupPipeline:
         return os.path.join(self.workdir, stage)
 
     def _stage_done(self, stage: str) -> bool:
-        return _done(self._path(stage), self.cfg.table_format)
+        """Stage-complete probe. Parquet stages commit atomically via
+        Spark's _SUCCESS marker; an Iceberg table's commit marker is its
+        metadata version file (snapshot commit — the same atomicity
+        contract)."""
+        iceberg = self.cfg.table_format == "iceberg"
+        marker = ("metadata", "version-hint.text") if iceberg else ("_SUCCESS",)
+        return os.path.exists(os.path.join(self._path(stage), *marker))
 
     # catalog name is derived from the workdir so two pipelines with
     # different workdirs in one session never share a warehouse setting
@@ -306,43 +330,40 @@ class DedupPipeline:
         ]
 
     def _materialize(self, stage: str, df: DataFrame) -> DataFrame:
-        """Write stage output + lineage unless already done; read it back
-        (so downstream plans start from the checkpoint, not the lineage)."""
-        path = self._path(stage)
-        if not self._stage_done(stage):
-            t0 = time.time()
-            self._write_stage(df, stage)
-            self.stage_seconds[stage] = time.time() - t0
-            rows = (
-                self._lineage_rows_iceberg(stage)
-                if self.cfg.table_format == "iceberg"
-                else _lineage_rows(path, stage)
-            )
-            # lineage rows are driver-side metadata (a handful per stage):
-            # a pyarrow write keeps the parquet-table contract without
-            # paying a Spark job per stage (scheduling latency was pure
-            # fixed overhead in the e2e critical path)
-            import pyarrow as pa
-            import pyarrow.parquet as pq
+        """Write stage output + lineage, then read it back (so downstream
+        plans start from the checkpoint, not the lineage)."""
+        t0 = time.time()
+        self._write_stage(df, stage)
+        self.stage_seconds[stage] = time.time() - t0
+        rows = (
+            self._lineage_rows_iceberg(stage)
+            if self.cfg.table_format == "iceberg"
+            else _lineage_rows(self._path(stage), stage)
+        )
+        # lineage rows are driver-side metadata (a handful per stage):
+        # a pyarrow write keeps the parquet-table contract without
+        # paying a Spark job per stage (scheduling latency was pure
+        # fixed overhead in the e2e critical path)
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-            mdir = os.path.join(self.workdir, "metrics_lineage")
-            os.makedirs(mdir, exist_ok=True)
-            tbl = pa.Table.from_pylist(
-                rows,
-                schema=pa.schema(
-                    [
-                        ("stage", pa.string()),
-                        ("partition_id", pa.int32()),
-                        ("n_rows", pa.int64()),
-                        ("file", pa.string()),
-                    ]
-                ),
-            )
-            pq.write_table(tbl, os.path.join(mdir, f"{stage}.parquet"))
+        mdir = os.path.join(self.workdir, "metrics_lineage")
+        os.makedirs(mdir, exist_ok=True)
+        tbl = pa.Table.from_pylist(
+            rows,
+            schema=pa.schema(
+                [
+                    ("stage", pa.string()),
+                    ("partition_id", pa.int32()),
+                    ("n_rows", pa.int64()),
+                    ("file", pa.string()),
+                ]
+            ),
+        )
+        pq.write_table(tbl, os.path.join(mdir, f"{stage}.parquet"))
         return self._read_stage(stage)
 
-
-    def _stage_rowcount(self, stage: str, df) -> int:
+    def _stage_rowcount(self, stage: str) -> int:
         """Row count of a just-materialized stage. Parquet: footer sum —
         no Spark job, and overwrite mode guarantees the dir holds exactly
         this write's files. Iceberg: data/ may hold ORPHANED files from a
@@ -353,41 +374,30 @@ class DedupPipeline:
             return self._read_stage(stage).count()
         return sum(r["n_rows"] for r in _lineage_rows(self._path(stage), ""))
 
-    # ---- stages ----------------------------------------------------------
+    def _write_bucket_stats(self, stage: str) -> None:
+        """bucket_stats.json from the Observation that the write of
+        ``stage`` — the first write consuming `pairs` — populated. A
+        zero-row write may mean AQE's empty-relation pruning skipped the
+        CollectMetrics node: recompute explicitly then (tiny input)."""
+        obs, keys = self._bucket_obs
+        self._bucket_obs = None
+        if self._stage_rowcount(stage) > 0:
+            stats = obs.get
+        else:
+            stats = bucket_stats_job(keys, self.cfg.bucket_cap)
+        with open(os.path.join(self.workdir, "bucket_stats.json"), "w") as f:
+            json.dump({k: float(v) for k, v in stats.items()}, f)
 
-    def _with_collapse_hashes(self, sig_df: DataFrame) -> DataFrame:
-        """Append the exact-collapse content-hash columns to the
-        signature stage output (round 7): computed in the same map pass
-        that already holds the minhash array in memory, so the exact_map
-        stage scans (url, sig_h[, sig_h2]) — ~8 B/doc — instead of
-        re-reading and re-hashing the 512 B minhash payload (~90% of
-        that stage's input bytes). signature_collapse picks the columns
-        up when present and falls back to computing them for pre-round-7
-        checkpoints."""
-        if not self.cfg.exact_collapse:
-            return sig_df
-        from .operators.signatures import collapse_hash_exprs
-
-        for name, expr in collapse_hash_exprs(
-            id_col="url", hash_bits=self.cfg.collapse_hash_bits
-        ).items():
-            sig_df = sig_df.withColumn(name, expr)
-        return sig_df
-
-    def _exact_map_stage(self, sigs: DataFrame) -> DataFrame:
-        """Materialize the exact-duplicate map (url, rep) from signature
-        content (operators.signatures.signature_collapse). Materialized
-        rather than derived: two jobs consume it (edges rep-filter,
-        clusters expansion) — at 10^12 docs one ~50 B/doc write+scan beats
-        recomputing the (sig_hash, url) shuffle+join twice."""
-        if self._stage_done("exact_map"):
-            return self._read_stage("exact_map")
-        from .operators.signatures import signature_collapse
-
-        return self._materialize(
-            "exact_map",
-            signature_collapse(sigs, hash_bits=self.cfg.collapse_hash_bits),
-        )
+    # band/candidate/verify run on an 8-byte surrogate uid = xxhash64(url)
+    # instead of full url strings: the band explode ships 25 rows/doc
+    # through the hottest shuffle, so key width is shuffle bytes x25
+    # (measured ~40% of that exchange); the verify join relabels back to
+    # urls before anything is persisted as edges. Collision odds are
+    # n^2/2^65 (~5e-8 at 1.36M docs); a 10^12-doc deployment widens this
+    # to 128 bits (two seeded xxhash64 columns) — same plan shape.
+    @staticmethod
+    def _with_uid(sigs: DataFrame) -> DataFrame:
+        return sigs.withColumn("uid", F.xxhash64("url"))
 
     @staticmethod
     def _rep_sigs(sigs_u: DataFrame, exact_map: DataFrame | None) -> DataFrame:
@@ -403,269 +413,160 @@ class DedupPipeline:
         )
         return sigs_u.join(F.broadcast(rep_uids), "uid", "left_semi")
 
-    def run(self, pages: DataFrame) -> DataFrame:
+    # ---- stage builders (rows of TABLE) ----------------------------------
+
+    def _extracted(self, pages: DataFrame) -> DataFrame:
+        return extract_stage(pages)
+
+    def _signatures(self, extracted: DataFrame) -> DataFrame:
         cfg = self.cfg
-        if cfg.fuse_stages:
-            return self._run_fused(pages)
-        if self._stage_done("extracted"):
-            extracted = self._read_stage("extracted")
-        else:
-            extracted = self._materialize("extracted", extract_stage(pages))
-
-        if self._stage_done("signatures"):
-            sigs = self._read_stage("signatures")
-        else:
-            sigs = self._materialize(
-                "signatures",
-                self._with_collapse_hashes(
-                    signature_stage(
-                        extracted,
-                        num_hashes=cfg.num_hashes,
-                        shingle_k=cfg.shingle_k,
-                        seed=cfg.seed,
-                    )
-                ),
+        sigs = signature_stage(
+            extracted, num_hashes=cfg.num_hashes, shingle_k=cfg.shingle_k, seed=cfg.seed
+        )
+        if cfg.exact_collapse:
+            # exact-collapse content hashes (round 7), computed in the map
+            # pass that already holds the minhash array: exact_map then
+            # scans (url, sig_h[, sig_h2]) — ~8 B/doc — instead of
+            # re-reading and re-hashing the 512 B minhash payload (~90% of
+            # that stage's input bytes)
+            sigs = sigs.withColumns(
+                collapse_hash_exprs(id_col="url", hash_bits=cfg.collapse_hash_bits)
             )
+        return sigs
 
-        # band/candidate/verify run on an 8-byte surrogate uid =
-        # xxhash64(url) instead of full url strings: the band explode
-        # ships 25 rows/doc through the hottest shuffle, so key width is
-        # shuffle bytes x25 (measured ~40% of that exchange); the verify
-        # join relabels back to urls before anything is persisted as
-        # edges. Collision odds are n^2/2^65 (~5e-8 at 1.36M docs); a
-        # 10^12-doc deployment widens this to 128 bits (two seeded
-        # xxhash64 columns) — same plan shape.
-        sigs_u = sigs.withColumn("uid", F.xxhash64("url"))
-        exact_map = self._exact_map_stage(sigs) if cfg.exact_collapse else None
-        if self._stage_done("pairs"):
-            pairs = self._read_stage("pairs")
+    def _exact_map(self, sigs: DataFrame) -> DataFrame:
+        """The exact-duplicate map (url, rep) from signature content
+        (operators.signatures.signature_collapse). Persisted in both
+        layouts: two jobs consume it (edges rep-filter, clusters
+        expansion) — at 10^12 docs one ~50 B/doc write+scan beats
+        recomputing the (sig_hash, url) shuffle+join twice."""
+        return signature_collapse(sigs, hash_bits=self.cfg.collapse_hash_bits)
+
+    def _pairs(self, sigs: DataFrame, exact_map: DataFrame | None) -> DataFrame:
+        cfg = self.cfg
+        rep_sigs = self._rep_sigs(self._with_uid(sigs), exact_map)
+        keys = band_keys(
+            rep_sigs, id_col="uid", bands=cfg.bands, rows_per_band=cfg.rows_per_band
+        )
+        pairs, obs = candidate_pairs(keys, id_col="uid", bucket_cap=cfg.bucket_cap)
+        # no separate stats job: the first write that consumes these pairs
+        # populates the Observation (run() -> _write_bucket_stats)
+        self._bucket_obs = (obs, keys)
+        return pairs
+
+    def _edges(self, pairs: DataFrame, sigs: DataFrame) -> DataFrame:
+        cfg = self.cfg
+        return verify_stage(
+            pairs,
+            self._with_uid(sigs),
+            id_col="uid",
+            label_col="url",
+            num_hashes=cfg.num_hashes,
+            jaccard_threshold=cfg.jaccard_threshold,
+            simhash_radius=cfg.simhash_radius,
+            hamming_est_floor=cfg.hamming_est_floor,
+        )
+
+    def _clusters(
+        self, edges: DataFrame, exact_map: DataFrame | None, sigs: DataFrame
+    ) -> DataFrame:
+        cfg = self.cfg
+        if exact_map is not None:
+            cc, ids = components_with_exact_map, {"exact_map": exact_map}
         else:
-            keys = band_keys(
-                self._rep_sigs(sigs_u, exact_map),
-                id_col="uid",
-                bands=cfg.bands,
-                rows_per_band=cfg.rows_per_band,
-            )
-            pairs_df, bucket_obs = candidate_pairs(
-                keys, id_col="uid", bucket_cap=cfg.bucket_cap
-            )
-            # the parquet write below is the action that populates the
-            # bucket-stats Observation — no separate stats job runs
-            pairs = self._materialize("pairs", pairs_df)
-            n_pairs = self._stage_rowcount("pairs", pairs)
-            if n_pairs > 0:
-                stats = bucket_obs.get
-            else:
-                # zero pairs: AQE empty-relation pruning skipped the
-                # CollectMetrics node — recompute explicitly (tiny input)
-                from .operators.lsh import bucket_stats_job
-
-                stats = bucket_stats_job(keys, cfg.bucket_cap)
-            with open(os.path.join(self.workdir, "bucket_stats.json"), "w") as f:
-                json.dump({k: float(v) for k, v in stats.items()}, f)
-
-        if self._stage_done("edges"):
-            edges = self._read_stage("edges")
-        else:
-            edges = self._materialize(
-                "edges",
-                verify_stage(
-                    pairs,
-                    sigs_u,
-                    id_col="uid",
-                    label_col="url",
-                    num_hashes=cfg.num_hashes,
-                    jaccard_threshold=cfg.jaccard_threshold,
-                    simhash_radius=cfg.simhash_radius,
-                    hamming_est_floor=cfg.hamming_est_floor,
-                ),
-            )
-
-        if self.cfg.extra.get("substring_pass"):
-            # exact long-repeat pass (north-star suffix-array analog):
-            # separate output table — sharing a boilerplate run does NOT
-            # make two pages near-duplicates, so these pairs are reported
-            # for span-removal jobs rather than merged into clusters
-            if not self._stage_done("substring_pairs"):
-                from .operators.substring import substring_pairs
-
-                self._materialize(
-                    "substring_pairs",
-                    substring_pairs(
-                        extracted,
-                        gram_chars=self.cfg.extra.get("substring_gram", 64),
-                        window=self.cfg.extra.get("substring_window", 32),
-                        bucket_cap=cfg.bucket_cap,
-                    ),
-                )
-
-        if self.cfg.extra.get("span_dedup"):
-            # substring SPAN REMOVAL (Lee et al. 2022 keep-first policy):
-            # a rewritten-text table alongside the cluster output — span
-            # cuts change documents, they don't merge them, so this is a
-            # sibling artifact, not a cluster input (operators.substring.
-            # dedup_spans docstring has the guarantee + capping caveat)
-            if not self._stage_done("spans_removed"):
-                from .operators.substring import dedup_spans
-
-                self._materialize(
-                    "spans_removed",
-                    dedup_spans(
-                        extracted,
-                        gram_chars=self.cfg.extra.get("substring_gram", 64),
-                        window=self.cfg.extra.get("substring_window", 32),
-                        bucket_cap=cfg.bucket_cap,
-                    ),
-                )
-
-        if self._stage_done("clusters"):
-            clusters = self._read_stage("clusters")
-        else:
+            # singletons from signatures: 1:1 with pages by url in both
+            # layouts, so the distinct's full-table shuffle is skipped
+            cc, ids = components_with_singletons, {"all_ids": sigs, "ids_unique": True}
+        return cc(
+            edges.select("src", "dst"),
+            **ids,
             # edge count from the materialized stage's parquet footers —
             # spares CC its count-probe job
-            n_edges = self._stage_rowcount("edges", edges)
-            if exact_map is not None:
-                clusters_df = components_with_exact_map(
-                    edges.select("src", "dst"),
-                    exact_map,
-                    edge_count_hint=n_edges,
-                    edges_distinct=True,
-                    small_graph_threshold=cfg.cc_small_graph_threshold,
-                    string_hash_threshold=cfg.cc_string_hash_threshold,
-                    broadcast_edge_threshold=cfg.cc_broadcast_edge_threshold,
-                )
-            else:
-                clusters_df = components_with_singletons(
-                    edges.select("src", "dst"),
-                    extracted,
-                    "url",
-                    edge_count_hint=n_edges,
-                    ids_unique=True,  # stage outputs are keyed by url
-                    edges_distinct=True,  # candidate_pairs already dedups
-                    small_graph_threshold=cfg.cc_small_graph_threshold,
-                    string_hash_threshold=cfg.cc_string_hash_threshold,
-                    broadcast_edge_threshold=cfg.cc_broadcast_edge_threshold,
-                )
-            clusters = self._materialize("clusters", clusters_df)
+            edge_count_hint=self._stage_rowcount("edges"),
+            edges_distinct=True,  # candidate_pairs already dedups
+            small_graph_threshold=cfg.cc_small_graph_threshold,
+            string_hash_threshold=cfg.cc_string_hash_threshold,
+            broadcast_edge_threshold=cfg.cc_broadcast_edge_threshold,
+        )
 
-        if self.cfg.extra.get("audit") and not self._stage_done("audit"):
-            # post-hoc adversarial verification (R1-R5 analog): re-check a
-            # sample of kept edges against exact shingle Jaccard
-            from .operators.audit import audit_edges
+    def _substring_args(self) -> dict:
+        x = self.cfg.extra
+        return {
+            "gram_chars": x.get("substring_gram", 64),
+            "window": x.get("substring_window", 32),
+            "bucket_cap": self.cfg.bucket_cap,
+        }
 
-            self._materialize(
-                "audit",
-                audit_edges(
-                    edges,
-                    extracted,
-                    shingle_k=cfg.shingle_k,
-                    sample_fraction=self.cfg.extra.get("audit_fraction", 0.1),
-                    jaccard_threshold=cfg.jaccard_threshold,
-                    seed=cfg.seed,
-                ),
-            )
-        return clusters
+    # exact long-repeat pass (north-star suffix-array analog): separate
+    # output table — sharing a boilerplate run does NOT make two pages
+    # near-duplicates, so these pairs are reported for span-removal jobs
+    # rather than merged into clusters
+    def _substring_pairs(self, extracted: DataFrame) -> DataFrame:
+        return substring_pairs(extracted, **self._substring_args())
 
-    def _run_fused(self, pages: DataFrame) -> DataFrame:
-        """Three-job layout (fuse_stages=True):
+    # substring SPAN REMOVAL (Lee et al. 2022 keep-first policy): a
+    # rewritten-text table alongside the cluster output — span cuts change
+    # documents, they don't merge them, so this is a sibling artifact, not
+    # a cluster input (operators.substring.dedup_spans docstring has the
+    # guarantee + capping caveat)
+    def _spans_removed(self, extracted: DataFrame) -> DataFrame:
+        return dedup_spans(extracted, **self._substring_args())
 
-          1 signatures  extract_stage piped straight into signature_stage —
-                        the text column never hits disk; the ArrowEvalPython
-                        extract node and the mapInArrow signature kernel
-                        pipeline inside one stage.
-          2 edges       band_keys -> candidate_pairs -> verify, one job —
-                        the pair explosion feeds the verify join without a
-                        parquet round-trip; bucket stats still ride the
-                        write action as an Observation.
-          3 clusters    same CC as the five-stage path; all_ids come from
-                        the signatures table (1:1 with pages by url).
-
-        Resume granularity is signatures/edges/clusters instead of all five
-        stages — that is the documented tradeoff.
-        """
+    # post-hoc adversarial verification (R1-R5 analog): re-check a sample
+    # of kept edges against exact shingle Jaccard
+    def _audit(self, edges: DataFrame, extracted: DataFrame) -> DataFrame:
         cfg = self.cfg
-        if self._stage_done("signatures"):
-            sigs = self._read_stage("signatures")
-        else:
-            sigs = self._materialize(
-                "signatures",
-                self._with_collapse_hashes(
-                    signature_stage(
-                        extract_stage(pages),
-                        num_hashes=cfg.num_hashes,
-                        shingle_k=cfg.shingle_k,
-                        seed=cfg.seed,
-                    )
-                ),
-            )
+        return audit_edges(
+            edges,
+            extracted,
+            shingle_k=cfg.shingle_k,
+            sample_fraction=cfg.extra.get("audit_fraction", 0.1),
+            jaccard_threshold=cfg.jaccard_threshold,
+            seed=cfg.seed,
+        )
 
-        exact_map = self._exact_map_stage(sigs) if cfg.exact_collapse else None
-        if self._stage_done("edges"):
-            edges = self._read_stage("edges")
-        else:
-            # same 8-byte surrogate-uid keying as the staged path (see
-            # run() comment); urls re-enter via the verify join relabel
-            sigs_u = sigs.withColumn("uid", F.xxhash64("url"))
-            keys = band_keys(
-                self._rep_sigs(sigs_u, exact_map),
-                id_col="uid",
-                bands=cfg.bands,
-                rows_per_band=cfg.rows_per_band,
-            )
-            pairs_df, bucket_obs = candidate_pairs(
-                keys, id_col="uid", bucket_cap=cfg.bucket_cap
-            )
-            edges = self._materialize(
-                "edges",
-                verify_stage(
-                    pairs_df,
-                    sigs_u,
-                    id_col="uid",
-                    label_col="url",
-                    num_hashes=cfg.num_hashes,
-                    jaccard_threshold=cfg.jaccard_threshold,
-                    simhash_radius=cfg.simhash_radius,
-                    hamming_est_floor=cfg.hamming_est_floor,
-                ),
-            )
-            n_edges = self._stage_rowcount("edges", edges)
-            if n_edges > 0:
-                stats = bucket_obs.get
-            else:
-                from .operators.lsh import bucket_stats_job
+    TABLE = (
+        _Stage("extracted", _extracted, ("pages",), fusable=True),
+        _Stage("signatures", _signatures, ("extracted",)),
+        _Stage(
+            "exact_map", _exact_map, ("signatures",),
+            when=lambda c: c.exact_collapse,
+        ),
+        _Stage("pairs", _pairs, ("signatures", "exact_map"), fusable=True),
+        _Stage("edges", _edges, ("pairs", "signatures")),
+        _Stage("clusters", _clusters, ("edges", "exact_map", "signatures")),
+        _Stage(
+            "substring_pairs", _substring_pairs, ("extracted",),
+            when=lambda c: c.extra.get("substring_pass"),
+        ),
+        _Stage(
+            "spans_removed", _spans_removed, ("extracted",),
+            when=lambda c: c.extra.get("span_dedup"),
+        ),
+        _Stage(
+            "audit", _audit, ("edges", "extracted"),
+            when=lambda c: c.extra.get("audit"),
+        ),
+    )
 
-                stats = bucket_stats_job(keys, cfg.bucket_cap)
-            with open(os.path.join(self.workdir, "bucket_stats.json"), "w") as f:
-                json.dump({k: float(v) for k, v in stats.items()}, f)
-
-        if self._stage_done("clusters"):
-            clusters = self._read_stage("clusters")
-        else:
-            n_edges = self._stage_rowcount("edges", edges)
-            if exact_map is not None:
-                clusters_df = components_with_exact_map(
-                    edges.select("src", "dst"),
-                    exact_map,
-                    edge_count_hint=n_edges,
-                    edges_distinct=True,
-                    small_graph_threshold=cfg.cc_small_graph_threshold,
-                    string_hash_threshold=cfg.cc_string_hash_threshold,
-                    broadcast_edge_threshold=cfg.cc_broadcast_edge_threshold,
-                )
-            else:
-                clusters_df = components_with_singletons(
-                    edges.select("src", "dst"),
-                    sigs,
-                    "url",
-                    edge_count_hint=n_edges,
-                    ids_unique=True,
-                    edges_distinct=True,  # candidate_pairs already dedups
-                    small_graph_threshold=cfg.cc_small_graph_threshold,
-                    string_hash_threshold=cfg.cc_string_hash_threshold,
-                    broadcast_edge_threshold=cfg.cc_broadcast_edge_threshold,
-                )
-            clusters = self._materialize("clusters", clusters_df)
-        return clusters
+    def run(self, pages: DataFrame) -> DataFrame:
+        """Walk TABLE once; returns the clusters table."""
+        frames: dict[str, DataFrame | None] = {"pages": pages}
+        self._bucket_obs = None
+        for st in self.TABLE:
+            if not st.when(self.cfg):
+                continue
+            if self._stage_done(st.name):
+                frames[st.name] = self._read_stage(st.name)
+                continue
+            df = st.build(self, *(frames.get(r) for r in st.reads))
+            if not (self.cfg.fuse_stages and st.fusable):
+                df = self._materialize(st.name, df)
+                # the staged `pairs` write or the fused `edges` write
+                if self._bucket_obs is not None and "pairs" in (st.name, *st.reads):
+                    self._write_bucket_stats(st.name)
+            frames[st.name] = df
+        return frames["clusters"]
 
     # ---- reports ---------------------------------------------------------
 

@@ -52,13 +52,7 @@ class IncrementalDedup:
         os.makedirs(os.path.join(store_dir, "signatures"), exist_ok=True)
         os.makedirs(os.path.join(store_dir, "band_keys"), exist_ok=True)
         os.makedirs(os.path.join(store_dir, "edges"), exist_ok=True)
-        # layout versioning: a store whose existing band-key epochs were
-        # written FLAT (pre-bp code) must stay flat — mixing flat and
-        # bp-partitioned epoch dirs breaks Spark's partition discovery,
-        # and the old epochs can't be pruned anyway. New/empty stores use
-        # the bp layout; legacy stores keep working with row-level
-        # (broadcast semi-join) pruning only.
-        self._bp_layout = self._band_store_is_partitioned()
+        self._refuse_flat_band_store()
 
     def _recover_compaction(self) -> None:
         """Complete or discard a compact_store swap interrupted by a crash.
@@ -96,18 +90,19 @@ class IncrementalDedup:
                 os.rename(tmp, root)
             shutil.rmtree(old)
 
-    def _band_store_is_partitioned(self) -> bool:
+    def _refuse_flat_band_store(self) -> None:
+        """Band-key epochs are hive-partitioned by bp (see
+        STORE_KEY_PARTS). An epoch written flat by the pre-bp layout
+        cannot be pruned by partition, and mixing it with bp epochs breaks
+        Spark's partition discovery — refuse such a store."""
         bk = os.path.join(self.store, "band_keys")
         for e in sorted(os.listdir(bk)):
             p = os.path.join(bk, e)
-            if not os.path.isdir(p):
-                continue
-            entries = os.listdir(p)
-            if any(n.endswith(".parquet") for n in entries):
-                return False  # legacy flat epoch present
-            if any(n.startswith("bp=") for n in entries):
-                return True
-        return True  # empty store: adopt the partitioned layout
+            if os.path.isdir(p) and any(n.endswith(".parquet") for n in os.listdir(p)):
+                raise ValueError(
+                    f"band-key store epoch {p} uses the legacy flat layout "
+                    "(no bp= partitions); re-ingest the corpus into a new store"
+                )
 
     @staticmethod
     def _pruned_store_sigs(old_sigs: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -321,17 +316,15 @@ class IncrementalDedup:
         """
         if batch_bh is None:
             batch_bh = new_keys.select("bh").distinct()
-        if "bp" in old_keys.columns:
-            parts = [
-                r.bp
-                for r in batch_bh.select(
-                    F.pmod("bh", F.lit(self.STORE_KEY_PARTS)).alias("bp")
-                )
-                .distinct()
-                .collect()
-            ]
-            old_keys = old_keys.where(F.col("bp").isin(parts)).drop("bp")
-        # legacy flat stores (no bp column) still get row-level pruning
+        parts = [
+            r.bp
+            for r in batch_bh.select(
+                F.pmod("bh", F.lit(self.STORE_KEY_PARTS)).alias("bp")
+            )
+            .distinct()
+            .collect()
+        ]
+        old_keys = old_keys.where(F.col("bp").isin(parts)).drop("bp")
         return old_keys.join(F.broadcast(batch_bh), "bh", "left_semi")
 
     def _read_store(self, sub: str) -> DataFrame | None:
@@ -439,18 +432,12 @@ class IncrementalDedup:
         # keys land hive-partitioned by bp inside the epoch dir so future
         # epochs' reads prune to their own bucket partitions (see
         # _pruned_store_keys); repartition keeps one file per bp partition
-        # instead of tasks x partitions small files. Legacy (pre-bp)
-        # stores keep the flat layout — see __init__.
+        # instead of tasks x partitions small files
         bk_epoch = os.path.join(self.store, "band_keys", f"epoch={epoch_id}")
-        if self._bp_layout:
-            keyed = new_keys.withColumn(
-                "bp", F.pmod("bh", F.lit(self.STORE_KEY_PARTS))
-            )
-            keyed.repartition(F.col("bp")).write.mode("overwrite").partitionBy(
-                "bp"
-            ).parquet(bk_epoch)
-        else:
-            new_keys.write.mode("overwrite").parquet(bk_epoch)
+        keyed = new_keys.withColumn("bp", F.pmod("bh", F.lit(self.STORE_KEY_PARTS)))
+        keyed.repartition(F.col("bp")).write.mode("overwrite").partitionBy(
+            "bp"
+        ).parquet(bk_epoch)
         if self.cfg.get("bloom_prefilter"):
             # per-epoch Bloom word table over this batch's band hashes
             # (<= bloom_bits/64 rows); read side bit_or-merges epochs.
@@ -532,11 +519,8 @@ class IncrementalDedup:
             .localCheckpoint()
         )
         plans = [("signatures", ["epoch"])]
-        bk = self._read_store("band_keys")
-        if bk is not None:
-            plans.append(
-                ("band_keys", ["epoch", "bp"] if "bp" in bk.columns else ["epoch"])
-            )
+        if self._read_store("band_keys") is not None:
+            plans.append(("band_keys", ["epoch", "bp"]))
         for sub, part_cols in plans:
             root = os.path.join(self.store, sub)
             df = self.spark.read.parquet(root).where(F.col("epoch").isin(committed))

@@ -46,11 +46,15 @@ def test_pipeline_end_to_end(spark, workdir):
     assert s["in_dup_clusters"] + s["unique"] == s["total"]
 
 
-def test_pipeline_optional_stages(spark, tmp_path):
+@pytest.mark.parametrize("fuse_stages", [False, True], ids=["staged", "fused"])
+def test_pipeline_optional_stages(spark, tmp_path, fuse_stages):
+    """The optional stages run in both layouts; the fused one feeds them
+    the lazy extract, as `extracted` is not persisted there."""
     pages, _ = generate_corpus(n_base=40, seed=12)
     df = corpus_to_spark(spark, pages)
     cfg = DedupConfig(
-        extra={"substring_pass": True, "audit": True, "audit_fraction": 1.0}
+        fuse_stages=fuse_stages,
+        extra={"substring_pass": True, "audit": True, "audit_fraction": 1.0},
     )
     workdir = str(tmp_path / "opt_run")
     pipe = DedupPipeline(spark, workdir, cfg)
@@ -214,21 +218,41 @@ def test_fused_pipeline_resumes_from_signatures(spark, tmp_path):
 
 
 def test_fused_and_staged_clusters_identical(spark, tmp_path):
-    """fuse_stages claims 'results are identical (same kernels, same
-    plans past the fusion point)' — assert it: the fused 3-job layout and
-    the staged 5-stage layout must produce the same (url, cluster_id) map
-    on the same corpus."""
+    """fuse_stages only selects which stages persist, so the two layouts
+    must give the same clusters, the same edges table and the same
+    bucket_stats.json (read after the pairs write when staged, after the
+    edges write when fused); the fused layout persists exactly
+    signatures, exact_map, edges and clusters."""
+    import json
+
     pages, _ = generate_corpus(n_base=100, seed=71)
     df = corpus_to_spark(spark, pages).cache()
-    fused = DedupPipeline(
-        spark, str(tmp_path / "f"), DedupConfig(fuse_stages=True)
-    ).run(df)
-    staged = DedupPipeline(
-        spark, str(tmp_path / "s"), DedupConfig(fuse_stages=False)
-    ).run(df)
-    a = {r.url: r.cluster_id for r in fused.collect()}
-    b = {r.url: r.cluster_id for r in staged.collect()}
-    assert a == b
+    out = {}
+    for name, fused in (("f", True), ("s", False)):
+        wd = str(tmp_path / name)
+        DedupPipeline(spark, wd, DedupConfig(fuse_stages=fused)).run(df)
+        with open(os.path.join(wd, "bucket_stats.json")) as f:
+            stats = json.load(f)
+        clusters = spark.read.parquet(os.path.join(wd, "clusters")).collect()
+        edges = spark.read.parquet(os.path.join(wd, "edges")).collect()
+        out[name] = (
+            {r.url: r.cluster_id for r in clusters},
+            {tuple(r) for r in edges},
+            stats,
+        )
+    clusters, edges, stats = out["f"]
+    assert clusters == out["s"][0]
+    assert edges and edges == out["s"][1]
+    assert stats["n_buckets"] > 0 and stats == out["s"][2]
+
+    fused_stages = {"signatures", "exact_map", "edges", "clusters"}
+    wd = str(tmp_path / "f")
+    assert {
+        n for n in DedupPipeline.STAGES if os.path.exists(os.path.join(wd, n))
+    } == fused_stages
+    lineage = spark.read.parquet(os.path.join(wd, "metrics_lineage"))
+    got = {r.stage for r in lineage.select("stage").distinct().collect()}
+    assert got == fused_stages
 
 
 def test_collapse_hash_width_parity(spark, tmp_path):
@@ -368,10 +392,10 @@ def test_corpus_truth_pairs_matches_full_generation():
 
 
 def test_round5_knobs_are_fingerprinted(spark, tmp_path):
-    """The precision-tier floor and the CC crossover knobs are part of the
-    config fingerprint — a retune (the VERDICT r4 #5 real-cluster
-    scenario) can never silently reuse checkpoints computed under the old
-    values."""
+    """The precision-tier floor, the CC crossover knobs and the optional
+    stages' ``extra`` settings are part of the config fingerprint — a
+    retune (the VERDICT r4 #5 real-cluster scenario) can never silently
+    reuse checkpoints computed under the old values."""
     import pytest as _pytest
 
     pages, _ = generate_corpus(n_base=20, seed=5)
@@ -383,6 +407,7 @@ def test_round5_knobs_are_fingerprinted(spark, tmp_path):
         DedupConfig(cc_small_graph_threshold=1_000),
         DedupConfig(cc_string_hash_threshold=1_000),
         DedupConfig(cc_broadcast_edge_threshold=1_000),
+        DedupConfig(extra={"substring_gram": 32}),
     ):
         with _pytest.raises(ValueError, match="different DedupConfig"):
             DedupPipeline(spark, wd, cfg)

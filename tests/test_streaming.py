@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 
 from name_deduplication_python_spark.sources.corpus import (
     corpus_to_spark,
@@ -272,45 +273,25 @@ def test_store_key_join_is_pruned_to_touched_buckets(spark, tmp_path):
     ), plan
 
 
-def test_legacy_flat_band_key_store_keeps_working(spark, tmp_path):
-    """A store whose band-key epochs were written FLAT by pre-bp code must
-    keep working after upgrade: the reader skips partition pruning (row-
-    level semi-join pruning only) and new epochs stay flat — mixing flat
-    and bp-partitioned epoch dirs would break partition discovery."""
+def test_legacy_flat_band_key_store_is_refused(spark, tmp_path):
+    """A store whose band-key epochs were written FLAT (no bp= partitions)
+    is refused at open with a clear re-ingest error: its epochs cannot be
+    partition-pruned, and mixing flat and bp-partitioned epoch dirs breaks
+    Spark's partition discovery."""
     import shutil
 
-    pages, truth = generate_corpus(n_base=60, seed=21)
-    df = corpus_to_spark(spark, pages).cache()
-    urls_sorted = sorted(pages["url"])
-    evens = set(urls_sorted[::2])
-    first = df.where(df.url.isin(list(evens)))
-    second = df.where(~df.url.isin(list(evens)))
+    pages, _ = generate_corpus(n_base=20, seed=21)
     store = str(tmp_path / "store")
-
-    inc = IncrementalDedup(spark, store)
-    inc.process_batch(first, 0)
+    IncrementalDedup(spark, store).process_batch(corpus_to_spark(spark, pages), 0)
+    # a bp-partitioned store reopens fine
+    IncrementalDedup(spark, store)
     # rewrite epoch 0 into the legacy flat layout
     bk0 = os.path.join(store, "band_keys", "epoch=0")
     pdf = spark.read.parquet(bk0).select("url", "bh").toPandas()
     shutil.rmtree(bk0)
     spark.createDataFrame(pdf).write.parquet(bk0)
-
-    inc2 = IncrementalDedup(spark, store)
-    assert inc2._bp_layout is False
-    inc2.process_batch(second, 1)
-    # cross-batch exact dups still found through the legacy store
-    got = {(r["src"], r["dst"]) for r in inc2.edges().select("src", "dst").collect()}
-    got |= {(b, a) for a, b in got}
-    exact = truth[truth.kind == "exact"]
-    cross = [
-        (a, b) for a, b in zip(exact.src, exact.dst) if (a in evens) != (b in evens)
-    ]
-    assert cross
-    for a, b in cross:
-        assert (a, b) in got, (a, b)
-    # the new epoch stayed flat (no bp= subdirs)
-    bk1 = os.path.join(store, "band_keys", "epoch=1")
-    assert not any(n.startswith("bp=") for n in os.listdir(bk1))
+    with pytest.raises(ValueError, match="legacy flat layout.*re-ingest"):
+        IncrementalDedup(spark, store)
 
 
 def _pages(spark, rows):
