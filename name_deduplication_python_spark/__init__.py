@@ -20,6 +20,8 @@ __version__ = "0.1.0"
 
 DEFAULT_CONFIG = {
     # Fixed dedup config (BASELINE.md bench protocol): record next to every number.
+    # Every key is read by the engine; a value no caller tunes is a
+    # constant where it is used (e.g. operators.verify.ESTIMATOR_Z).
     "shingle_k": 5,          # words per shingle
     "num_hashes": 128,       # MinHash functions
     # banding: P(candidate | J) = 1 - (1 - J^r)^b. At theta=0.8 the gate
@@ -28,7 +30,6 @@ DEFAULT_CONFIG = {
     # candidates are filtered by the native verifier.
     "bands": 25,             # LSH bands (uses minhash[0:125] of 128)
     "rows_per_band": 5,
-    "simhash_bits": 64,
     "simhash_radius": 3,     # Hamming-ball verify radius
     "jaccard_threshold": 0.80,
     "bucket_cap": 64,        # full pairing below, capped pairing above (skew guard)
@@ -49,24 +50,16 @@ DEFAULT_CONFIG = {
     # settings. trainset.build_training_set / tiers.tiered_dedup honor
     # the knob (round-6 fix) — pass strict_config() as their config.
     "hamming_est_floor": None,
-    # streaming store membership prefilter (operators/bloom.py): when on,
-    # each epoch appends a Bloom word table over its band hashes and
-    # subsequent batches drop definitely-new bh values BEFORE the store
-    # key read — novel-bucket batches skip store partitions entirely.
-    # Off by default (identical results either way; the filter only
-    # prunes). bloom_bits=2^20 -> 16k words (~128 KB broadcast), k=4.
-    "bloom_prefilter": False,
-    "bloom_bits": 1 << 20,
-    "bloom_k": 4,
 }
 
 
 def strict_config(**overrides) -> dict:
     """DEFAULT_CONFIG with the precision tier ON: hamming-only edges must
     also clear ``operators.verify.hamming_floor()`` (theta - 2*z*sigma of
-    the MinHash estimator, ~0.635 at the default 128-hash/theta=0.8
-    config — recomputed here from the actual config, so overriding
-    num_hashes/jaccard_threshold keeps the floor consistent).
+    the MinHash estimator with z = ESTIMATOR_Z, ~0.635 at the default
+    128-hash/theta=0.8 config — recomputed here from the actual config,
+    so overriding num_hashes/jaccard_threshold keeps the floor
+    consistent).
 
     Measured (BENCH_r05.json, planted families at the default config):
     near-J~0.5 false-merge rate 0.112 (default OR-semantics) -> 0.0075
@@ -86,6 +79,5 @@ def strict_config(**overrides) -> dict:
         cfg["hamming_est_floor"] = hamming_floor(
             jaccard_threshold=cfg["jaccard_threshold"],
             num_hashes=cfg["num_hashes"],
-            z=cfg.get("estimator_z", 2.33),
         )
     return cfg

@@ -1,37 +1,13 @@
-"""Pure-stdlib/numpy Fernet: AES-128-CBC + HMAC-SHA256 symmetric tokens.
+"""Fernet key derivation for the encrypted cached-CSV scan.
 
-Closes the S3 descope (encrypted cached CSV scan): the reference decrypts
-cached master/officials CSVs with `Fernet(key).decrypt(...)` before
-parsing (/root/reference/data_utils.py:33-45, 427-443). The token format
-is implemented here dependency-free from its PUBLIC spec
-(https://github.com/fernet/spec/blob/master/Spec.md) so the engine never
-gates a scan on an optional wheel:
-
-    token = base64url( 0x80 || ts_be64 || iv_16 || AES128-CBC(PKCS7(pt))
-                       || HMAC-SHA256(signing_key, all-prior-bytes) )
-    key   = base64url( signing_key_16 || encryption_key_16 )
-
-The AES core follows FIPS-197 directly. The S-box is DERIVED (GF(2^8)
-inverse + affine map) rather than transcribed, and the whole stack is
-pinned by the published FIPS-197 Appendix C.1 block vector and the NIST
-SP 800-38A F.2 CBC-AES128 vectors in tests/test_fernet_readers.py, plus
-a two-way interop test against the real `cryptography.fernet.Fernet`
-(importable in this container — both directions verified green).
-
-Scale shape: Fernet is a whole-payload MAC, so decryption is per-file —
-the distributed reader (sources/readers.py:read_encrypted_csv)
-parallelizes across files via `binaryFile`, which fits the workload
-(encrypted caches are small side tables). Bulk 100 TB data would use
-parquet modular encryption on the JVM scan path instead; this module is
-the side-table ingest, not the hot path. Decrypt is numpy-vectorized
-over all blocks at once (CBC decryption is data-parallel: ECB-decrypt
-every block, then XOR with the shifted ciphertext), ~7 MB/s measured —
-sub-second for typical cache files; CBC *encryption* is inherently sequential
-and python-looped — it only serves key/fixture generation and tests.
+The reference decrypts cached master/officials CSVs with
+`Fernet(key).decrypt(...)` before parsing (its data_utils.py:33-45,
+427-443). The engine does the same with the installed
+`cryptography.fernet.Fernet` (sources/readers.py:read_encrypted_csv).
 
 The reference's legacy fallback re-derives the key from a hard-coded
-password via PBKDF2-HMAC-SHA256 (480k iterations,
-/root/reference/data_utils.py:38-43); `derive_key` reproduces the
+password via PBKDF2-HMAC-SHA256 (480k iterations, its
+data_utils.py:38-43); `derive_key` reproduces the
 derivation shape (stdlib hashlib.pbkdf2_hmac) with the credential left
 to the caller.
 """
@@ -40,246 +16,11 @@ from __future__ import annotations
 
 import base64
 import hashlib
-import hmac
-import os
-import struct
-import time
-
-import numpy as np
-
-
-class InvalidToken(Exception):
-    """Signature mismatch, malformed token, bad padding, or expired TTL."""
-
-
-# --------------------------------------------------------------------------
-# AES-128 (FIPS-197). Tables are derived, not transcribed.
-# --------------------------------------------------------------------------
-
-
-def _build_tables() -> tuple[np.ndarray, np.ndarray, dict[int, np.ndarray]]:
-    # GF(2^8) log/antilog over generator 0x03 (x+1), reduction poly 0x11b
-    alog = [1] * 256
-    for i in range(1, 256):
-        a = alog[i - 1]
-        a = a ^ ((a << 1) ^ (0x11B if a & 0x80 else 0)) & 0xFF  # a * 3
-        alog[i] = a
-    log = [0] * 256
-    for i in range(255):
-        log[alog[i]] = i
-
-    def gmul(a: int, b: int) -> int:
-        if a == 0 or b == 0:
-            return 0
-        return alog[(log[a] + log[b]) % 255]
-
-    def rotl8(x: int, n: int) -> int:
-        return ((x << n) | (x >> (8 - n))) & 0xFF
-
-    sbox = np.zeros(256, dtype=np.uint8)
-    for x in range(256):
-        inv = alog[255 - log[x]] if x else 0
-        sbox[x] = inv ^ rotl8(inv, 1) ^ rotl8(inv, 2) ^ rotl8(inv, 3) ^ rotl8(inv, 4) ^ 0x63
-    inv_sbox = np.zeros(256, dtype=np.uint8)
-    inv_sbox[sbox] = np.arange(256, dtype=np.uint8)
-
-    muls = {
-        c: np.array([gmul(c, x) for x in range(256)], dtype=np.uint8)
-        for c in (2, 3, 9, 11, 13, 14)
-    }
-    return sbox, inv_sbox, muls
-
-
-_SBOX, _INV_SBOX, _MUL = _build_tables()
-
-# byte layout is input order (state column-major per FIPS-197 §3.4):
-# flat index i holds state row i%4, column i//4
-_SHIFT = np.array([0, 5, 10, 15, 4, 9, 14, 3, 8, 13, 2, 7, 12, 1, 6, 11])
-_INV_SHIFT = np.zeros(16, dtype=np.int64)
-_INV_SHIFT[_SHIFT] = np.arange(16)
-
-_RCON = (0x01, 0x02, 0x04, 0x08, 0x10, 0x20, 0x40, 0x80, 0x1B, 0x36)
-
-
-def _expand_key(key16: bytes) -> np.ndarray:
-    """(11, 16) uint8 round keys (FIPS-197 §5.2, Nk=4)."""
-    w = [list(key16[4 * i : 4 * i + 4]) for i in range(4)]
-    for i in range(4, 44):
-        t = list(w[i - 1])
-        if i % 4 == 0:
-            t = t[1:] + t[:1]
-            t = [int(_SBOX[b]) for b in t]
-            t[0] ^= _RCON[i // 4 - 1]
-        w.append([w[i - 4][j] ^ t[j] for j in range(4)])
-    flat = [b for word in w for b in word]
-    return np.array(flat, dtype=np.uint8).reshape(11, 16)
-
-
-def _mix_columns(s: np.ndarray) -> np.ndarray:
-    t = s.reshape(-1, 4, 4)  # (n, column, row)
-    a0, a1, a2, a3 = t[:, :, 0], t[:, :, 1], t[:, :, 2], t[:, :, 3]
-    out = np.empty_like(t)
-    out[:, :, 0] = _MUL[2][a0] ^ _MUL[3][a1] ^ a2 ^ a3
-    out[:, :, 1] = a0 ^ _MUL[2][a1] ^ _MUL[3][a2] ^ a3
-    out[:, :, 2] = a0 ^ a1 ^ _MUL[2][a2] ^ _MUL[3][a3]
-    out[:, :, 3] = _MUL[3][a0] ^ a1 ^ a2 ^ _MUL[2][a3]
-    return out.reshape(-1, 16)
-
-
-def _inv_mix_columns(s: np.ndarray) -> np.ndarray:
-    t = s.reshape(-1, 4, 4)
-    a0, a1, a2, a3 = t[:, :, 0], t[:, :, 1], t[:, :, 2], t[:, :, 3]
-    out = np.empty_like(t)
-    out[:, :, 0] = _MUL[14][a0] ^ _MUL[11][a1] ^ _MUL[13][a2] ^ _MUL[9][a3]
-    out[:, :, 1] = _MUL[9][a0] ^ _MUL[14][a1] ^ _MUL[11][a2] ^ _MUL[13][a3]
-    out[:, :, 2] = _MUL[13][a0] ^ _MUL[9][a1] ^ _MUL[14][a2] ^ _MUL[11][a3]
-    out[:, :, 3] = _MUL[11][a0] ^ _MUL[13][a1] ^ _MUL[9][a2] ^ _MUL[14][a3]
-    return out.reshape(-1, 16)
-
-
-def _ecb_encrypt_blocks(blocks: np.ndarray, rk: np.ndarray) -> np.ndarray:
-    """AES-128 cipher over (n, 16) uint8 blocks, all blocks at once."""
-    s = blocks ^ rk[0]
-    for rnd in range(1, 10):
-        s = _SBOX[s][:, _SHIFT]
-        s = _mix_columns(s) ^ rk[rnd]
-    return _SBOX[s][:, _SHIFT] ^ rk[10]
-
-
-def _ecb_decrypt_blocks(blocks: np.ndarray, rk: np.ndarray) -> np.ndarray:
-    """AES-128 inverse cipher (FIPS-197 §5.3) over (n, 16) blocks."""
-    s = blocks ^ rk[10]
-    for rnd in range(9, 0, -1):
-        s = _INV_SBOX[s[:, _INV_SHIFT]] ^ rk[rnd]
-        s = _inv_mix_columns(s)
-    return _INV_SBOX[s[:, _INV_SHIFT]] ^ rk[0]
-
-
-def aes128_encrypt_block(key16: bytes, block16: bytes) -> bytes:
-    """Single-block cipher (the FIPS-197 C.1 test-vector surface)."""
-    b = np.frombuffer(block16, dtype=np.uint8).reshape(1, 16)
-    return _ecb_encrypt_blocks(b, _expand_key(key16)).tobytes()
-
-
-def aes128_decrypt_block(key16: bytes, block16: bytes) -> bytes:
-    b = np.frombuffer(block16, dtype=np.uint8).reshape(1, 16)
-    return _ecb_decrypt_blocks(b, _expand_key(key16)).tobytes()
-
-
-def cbc_encrypt(key16: bytes, iv16: bytes, plaintext_padded: bytes) -> bytes:
-    """CBC mode (NIST SP 800-38A §6.2); input must be a block multiple.
-    Sequential by construction — fixture/test path only."""
-    if len(plaintext_padded) % 16:
-        raise ValueError("CBC input must be a multiple of 16 bytes")
-    rk = _expand_key(key16)
-    prev = np.frombuffer(iv16, dtype=np.uint8).reshape(1, 16)
-    blocks = np.frombuffer(plaintext_padded, dtype=np.uint8).reshape(-1, 16)
-    out = np.empty_like(blocks)
-    for i in range(len(blocks)):
-        prev = _ecb_encrypt_blocks(blocks[i : i + 1] ^ prev, rk)
-        out[i] = prev[0]
-    return out.tobytes()
-
-
-def cbc_decrypt(key16: bytes, iv16: bytes, ciphertext: bytes) -> bytes:
-    """CBC decryption, data-parallel: ECB-decrypt every block at once,
-    then XOR with (iv || ciphertext[:-1])."""
-    if len(ciphertext) % 16 or not ciphertext:
-        raise ValueError("CBC ciphertext must be a nonzero multiple of 16")
-    rk = _expand_key(key16)
-    blocks = np.frombuffer(ciphertext, dtype=np.uint8).reshape(-1, 16)
-    chain = np.vstack(
-        [np.frombuffer(iv16, dtype=np.uint8).reshape(1, 16), blocks[:-1]]
-    )
-    return (_ecb_decrypt_blocks(blocks, rk) ^ chain).tobytes()
-
-
-def _pkcs7_pad(data: bytes) -> bytes:
-    n = 16 - len(data) % 16
-    return data + bytes([n]) * n
-
-
-def _pkcs7_strip(data: bytes) -> bytes:
-    if not data:
-        raise InvalidToken("empty plaintext")
-    n = data[-1]
-    if not 1 <= n <= 16 or data[-n:] != bytes([n]) * n:
-        raise InvalidToken("bad PKCS7 padding")
-    return data[:-n]
-
-
-# --------------------------------------------------------------------------
-# Fernet token layer
-# --------------------------------------------------------------------------
-
-_VERSION = 0x80
-
-
-def generate_key() -> bytes:
-    """New random urlsafe-base64 32-byte key (spec §Key Format)."""
-    return base64.urlsafe_b64encode(os.urandom(32))
 
 
 def derive_key(password: str, salt: bytes, iterations: int = 480_000) -> bytes:
     """PBKDF2-HMAC-SHA256 key derivation, the reference's legacy-cache
     shape (data_utils.py:38-43) with the credential supplied by the
-    caller rather than hard-coded."""
+    caller rather than hard-coded. Returns a urlsafe-base64 Fernet key."""
     raw = hashlib.pbkdf2_hmac("sha256", password.encode(), salt, iterations, 32)
     return base64.urlsafe_b64encode(raw)
-
-
-def _split_key(key: bytes | str) -> tuple[bytes, bytes]:
-    if isinstance(key, str):
-        key = key.encode()
-    try:
-        raw = base64.urlsafe_b64decode(key)
-    except Exception as e:  # binascii.Error subclasses ValueError
-        raise InvalidToken(f"malformed key: {e}") from None
-    if len(raw) != 32:
-        raise InvalidToken("Fernet key must decode to 32 bytes")
-    return raw[:16], raw[16:]  # (signing, encryption)
-
-
-def encrypt_at_time(
-    key: bytes | str, data: bytes, timestamp: int, iv: bytes | None = None
-) -> bytes:
-    signing, enc = _split_key(key)
-    iv = iv if iv is not None else os.urandom(16)
-    if len(iv) != 16:
-        raise ValueError("IV must be 16 bytes")
-    body = (
-        bytes([_VERSION])
-        + struct.pack(">Q", timestamp)
-        + iv
-        + cbc_encrypt(enc, iv, _pkcs7_pad(data))
-    )
-    return base64.urlsafe_b64encode(body + hmac.new(signing, body, hashlib.sha256).digest())
-
-
-def encrypt(key: bytes | str, data: bytes) -> bytes:
-    return encrypt_at_time(key, data, int(time.time()))
-
-
-def decrypt(key: bytes | str, token: bytes | str, ttl: int | None = None) -> bytes:
-    """Verify-then-decrypt (spec §Verifying). Raises InvalidToken on any
-    failure — signature first (constant-time compare), so padding acts as
-    a sanity check, never an oracle."""
-    signing, enc = _split_key(key)
-    if isinstance(token, str):
-        token = token.encode()
-    try:
-        raw = base64.urlsafe_b64decode(token)
-    except Exception:
-        raise InvalidToken("token is not valid base64") from None
-    if len(raw) < 1 + 8 + 16 + 16 + 32 or raw[0] != _VERSION:
-        raise InvalidToken("token too short or bad version byte")
-    body, sig = raw[:-32], raw[-32:]
-    if not hmac.compare_digest(hmac.new(signing, body, hashlib.sha256).digest(), sig):
-        raise InvalidToken("HMAC verification failed")
-    (ts,) = struct.unpack(">Q", body[1:9])
-    if ttl is not None and ts + ttl < int(time.time()):
-        raise InvalidToken("token expired")
-    iv, ct = body[9:25], body[25:]
-    if len(ct) % 16:
-        raise InvalidToken("ciphertext is not a block multiple")
-    return _pkcs7_strip(cbc_decrypt(enc, iv, ct))

@@ -171,6 +171,10 @@ def _cc_single_task_hashed(edges: DataFrame) -> DataFrame:
 
 DEFAULT_SMALL_GRAPH_THRESHOLD = 10_000_000
 DEFAULT_STRING_HASH_THRESHOLD = 200_000
+# explicit-broadcast bound for the CC member map (2x|edges| rows of two
+# ids each) in components_with_exact_map / components_with_singletons:
+# keep well under the driver/executor broadcast budget — ~100 MB here.
+# Retune with executor memory on a real cluster.
 DEFAULT_BROADCAST_EDGE_THRESHOLD = 1_500_000
 
 
@@ -183,8 +187,7 @@ def connected_components(
     # while the iterative path's per-round scheduling cost ~12 s extra at
     # 2M edges (measured on the 5.44M-page protocol corpus). At 10^12-doc
     # scale the raw edge set still far exceeds this and runs iteratively.
-    # DedupConfig.cc_small_graph_threshold exposes (and fingerprints) it;
-    # on a real cluster retune DOWN to whatever edge count one executor
+    # On a real cluster retune DOWN to whatever edge count one executor
     # labels faster than the iterative path's ~2 scheduling rounds — the
     # kernel is ~16 B/edge through a single task, so memory bounds it at
     # roughly executor_mem / 32 B (pandas copies) edges.
@@ -192,7 +195,7 @@ def connected_components(
     # string ids above this edge count take the hashed-kernel + distributed
     # relabel route (the serial string factorize/Arrow tail dominates above
     # it; below it the two relabel joins dominate — measured crossover
-    # ~200k on local[8], see DedupConfig.cc_string_hash_threshold).
+    # ~200k on local[8]).
     string_hash_threshold: int = DEFAULT_STRING_HASH_THRESHOLD,
     edge_count_hint: int | None = None,
     edges_distinct: bool = False,
@@ -274,13 +277,6 @@ def components_with_exact_map(
     exact_map: DataFrame,
     edge_count_hint: int | None = None,
     edges_distinct: bool = False,
-    small_graph_threshold: int = DEFAULT_SMALL_GRAPH_THRESHOLD,
-    string_hash_threshold: int = DEFAULT_STRING_HASH_THRESHOLD,
-    # explicit-broadcast bound for the member map (2x|edges| rows of two
-    # ids each): keep well under the driver/executor broadcast budget —
-    # ~100 MB at the default. Retune with executor memory on a real
-    # cluster (DedupConfig.cc_broadcast_edge_threshold fingerprints it).
-    broadcast_edge_threshold: int = DEFAULT_BROADCAST_EDGE_THRESHOLD,
 ) -> DataFrame:
     """Cluster expansion through an exact-duplicate map (signature_collapse
     output): CC runs over REPRESENTATIVE edges only; every url then joins
@@ -289,16 +285,15 @@ def components_with_exact_map(
     uncollapsed pipeline (parity-tested). Reps without edges label
     themselves via the left-join coalesce (singleton semantics)."""
     comp = connected_components(
-        edges,
-        edge_count_hint=edge_count_hint,
-        edges_distinct=edges_distinct,
-        small_graph_threshold=small_graph_threshold,
-        string_hash_threshold=string_hash_threshold,
+        edges, edge_count_hint=edge_count_hint, edges_distinct=edges_distinct
     )
     comp = comp.select(F.col("url").alias("rep"), "cluster_id").where(
         F.col("rep") != F.col("cluster_id")
     )
-    if edge_count_hint is not None and edge_count_hint <= broadcast_edge_threshold:
+    if (
+        edge_count_hint is not None
+        and edge_count_hint <= DEFAULT_BROADCAST_EDGE_THRESHOLD
+    ):
         comp = F.broadcast(comp)
     return exact_map.join(comp, "rep", "left").select(
         "url", F.coalesce("cluster_id", "rep").alias("cluster_id")
@@ -312,9 +307,6 @@ def components_with_singletons(
     edge_count_hint: int | None = None,
     ids_unique: bool = False,
     edges_distinct: bool = False,
-    small_graph_threshold: int = DEFAULT_SMALL_GRAPH_THRESHOLD,
-    string_hash_threshold: int = DEFAULT_STRING_HASH_THRESHOLD,
-    broadcast_edge_threshold: int = DEFAULT_BROADCAST_EDGE_THRESHOLD,
 ) -> DataFrame:
     """Assign every id a cluster: edge components get min-id labels,
     untouched ids are their own singleton cluster (reference analog: rows
@@ -324,17 +316,16 @@ def components_with_singletons(
     (true for pipeline stage outputs keyed by url) — skips the distinct's
     full-table shuffle."""
     comp = connected_components(
-        edges,
-        edge_count_hint=edge_count_hint,
-        edges_distinct=edges_distinct,
-        small_graph_threshold=small_graph_threshold,
-        string_hash_threshold=string_hash_threshold,
+        edges, edge_count_hint=edge_count_hint, edges_distinct=edges_distinct
     )
     # roots label themselves — the left-join coalesce reconstructs them, so
     # only MEMBER rows (url != cluster_id) need to flow into the join
     # (~40% fewer rows out of the CC stage)
     comp = comp.where(F.col("url") != F.col("cluster_id"))
-    if edge_count_hint is not None and edge_count_hint <= broadcast_edge_threshold:
+    if (
+        edge_count_hint is not None
+        and edge_count_hint <= DEFAULT_BROADCAST_EDGE_THRESHOLD
+    ):
         # small-graph regime: the member map is bounded by 2x|edges| rows —
         # broadcast it so the big ids side never shuffles (the CC output is
         # a single partition; a shuffle join would serialize on its one

@@ -200,7 +200,7 @@ def eval_leak_report(
     corpus-owner's view of the same overlap).
 
     Returns (id_col, n_grams, n_leaking_docs, n_gram_hits) covering
-    EVERY eval document:
+    EVERY eval document, both counts bigint:
 
       n_grams         distinct n-token grams in the eval doc
       n_leaking_docs  training documents sharing >= 1 of those grams
@@ -233,12 +233,8 @@ def eval_leak_report(
         .select(
             F.col("_eval_id").alias(id_col),
             "n_grams",
-            F.coalesce("n_leaking_docs", F.lit(0)).cast("int").alias(
-                "n_leaking_docs"
-            ),
-            F.coalesce("n_gram_hits", F.lit(0)).cast("int").alias(
-                "n_gram_hits"
-            ),
+            F.coalesce("n_leaking_docs", F.lit(0)).alias("n_leaking_docs"),
+            F.coalesce("n_gram_hits", F.lit(0)).alias("n_gram_hits"),
         )
     )
 

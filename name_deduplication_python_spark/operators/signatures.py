@@ -305,28 +305,21 @@ def compute_signatures_np(
     )
 
 
-def collapse_hash_exprs(id_col: str = "url", hash_bits: int = 64) -> dict:
-    """The signature-content hash columns signature_collapse groups on,
-    exposed so the SIGNATURE stage can compute them in its own map pass
-    (round 7): the collapse stage then scans two 8-byte columns instead
+def collapse_hash_exprs(id_col: str = "url") -> dict:
+    """The signature-content hash column signature_collapse groups on,
+    exposed so the SIGNATURE stage can compute it in its own map pass
+    (round 7): the collapse stage then scans one 8-byte column instead
     of re-reading and re-hashing the 512 B minhash arrays (~90% of the
     exact_map stage's input bytes at the bench corpus)."""
     empty = F.col("n_shingles") <= 0
-    out = {
+    return {
         "sig_h": F.when(
             ~empty, F.xxhash64("minhash", "simhash", "n_shingles")
         ).otherwise(F.xxhash64(F.lit("empty:"), id_col))
     }
-    if hash_bits == 128:
-        out["sig_h2"] = F.when(
-            ~empty, F.xxhash64(F.lit("seed2:"), "minhash", "simhash", "n_shingles")
-        ).otherwise(F.xxhash64(F.lit("empty2:"), id_col))
-    return out
 
 
-def signature_collapse(
-    sigs: DataFrame, id_col: str = "url", hash_bits: int = 64
-) -> DataFrame:
+def signature_collapse(sigs: DataFrame, id_col: str = "url") -> DataFrame:
     """Exact-duplicate collapse AFTER the (map-only) signature pass:
     docs with identical signature content (minhash + simhash +
     n_shingles — byte-identical texts by construction, or J~1 texts whose
@@ -348,35 +341,22 @@ def signature_collapse(
     duplicates of each other, matching the band_keys n_shingles>0 filter.
 
     Cost: one narrow shuffle of (sig_hash, url) — no text, no minhash
-    payload. hash_bits picks the content-hash width: 64 (default, one
-    xxhash64 — collision risk ~n^2/2^65, ~5e-8 at 10^6 docs but ~3% per
-    corpus at 10^12) or 128 (two xxhash64 columns over the same inputs
-    distinguished by a prepended seed literal — the wide setting for
-    10^12-doc runs). Honest bound for the 128 mode (ADVICE r4): the two
-    words are seed-variants of one hash family, not provably independent
-    128-bit output, so n^2/2^129 is the heuristic target, not a theorem;
-    no xxhash64 cross-seed correlation is known, and any residual
-    correlation still leaves the joint collision rate far below the
-    single-word n^2/2^65. A deployment wanting the formal bound swaps the
-    pair for md5(payload) split into two longs — same grouping plan, one
-    digest instead of two hashes. Collapse groups are identical under
-    both widths whenever neither collides (parity-tested).
+    payload. The content hash is one xxhash64: collision risk ~n^2/2^65,
+    ~5e-8 at 10^6 docs but ~3% per corpus at 10^12 — a 10^12-doc
+    deployment groups on md5(payload) split into two longs instead (same
+    grouping plan, a second key column).
     A giant identical family makes its sig_h a skewed join key on the
     map-back join; the groupBy side is map-side combined and AQE skew
     join (on in session.py) splits the residual.
     """
-    if hash_bits not in (64, 128):
-        raise ValueError(f"hash_bits must be 64 or 128, got {hash_bits}")
-    # a signature frame that already carries the content-hash columns
+    # a signature frame that already carries the content-hash column
     # (collapse_hash_exprs, computed during the signature write) collapses
-    # from the narrow columns alone — no minhash-array re-read/re-hash;
-    # the 128 mode's second column is the independently-seeded twin
-    exprs = collapse_hash_exprs(id_col=id_col, hash_bits=hash_bits)
-    grp = list(exprs)
-    cols = [F.col(id_col).alias("url")] + [
-        (F.col(name) if name in sigs.columns else expr).alias(name)
-        for name, expr in exprs.items()
-    ]
+    # from the narrow column alone — no minhash-array re-read/re-hash
+    sig_h = (
+        F.col("sig_h")
+        if "sig_h" in sigs.columns
+        else collapse_hash_exprs(id_col=id_col)["sig_h"]
+    )
     from pyspark.sql import Window
 
     # window-min instead of groupBy+self-join (round 7): the join form
@@ -388,8 +368,8 @@ def signature_collapse(
     # but the key is a 64-bit content hash: a skewed sig_h IS a giant
     # identical-duplicate family, whose rows are exactly what this
     # operator exists to collapse — the window state per key is one min.
-    m = sigs.select(*cols)
-    w = Window.partitionBy(*grp)
+    m = sigs.select(F.col(id_col).alias("url"), sig_h.alias("sig_h"))
+    w = Window.partitionBy("sig_h")
     return m.select("url", F.min("url").over(w).alias("rep"))
 
 

@@ -94,15 +94,17 @@ def score_pairs(
     return scored
 
 
-def hamming_floor(
-    jaccard_threshold: float = 0.80, num_hashes: int = 128, z: float = 2.33
-) -> float:
+# one-sided z of the fuzzy tier's lower confidence bound (classify_pairs)
+ESTIMATOR_Z = 2.33
+
+
+def hamming_floor(jaccard_threshold: float = 0.80, num_hashes: int = 128) -> float:
     """The recommended strict-mode hamming_est_floor: theta - 2*z*sigma —
     the same symmetric-tail bound the estimator-band PRECISION gate uses
     (tests/test_recall.py::test_precision_of_widened_estimator_band).
     ~0.635 at the default config."""
     sigma = (jaccard_threshold * (1 - jaccard_threshold) / num_hashes) ** 0.5
-    return jaccard_threshold - 2 * z * sigma
+    return jaccard_threshold - 2 * ESTIMATOR_Z * sigma
 
 
 def classify_pairs(
@@ -110,7 +112,6 @@ def classify_pairs(
     jaccard_threshold: float = 0.80,
     simhash_radius: int = 3,
     num_hashes: int = 128,
-    estimator_z: float = 2.33,
     hamming_est_floor: float | None = None,
 ) -> DataFrame:
     """Threshold classification (F3 analog): keep verified edges only.
@@ -124,8 +125,9 @@ def classify_pairs(
 
         est >= theta - z * sqrt(theta*(1-theta)/num_hashes)
 
-    z=2.33 caps the miss rate at ~1% for pairs AT the threshold (better
-    above it), which is what the recall>=0.99 gate needs by construction.
+    z = ESTIMATOR_Z = 2.33 caps the miss rate at ~1% for pairs AT the
+    threshold (better above it), which is what the recall>=0.99 gate
+    needs by construction.
     The symmetric cost — sub-threshold pairs admitted with the same tail
     probability — is bounded the same way and is what the audit stage's
     exact-Jaccard recompute exists to measure.
@@ -140,7 +142,7 @@ def classify_pairs(
     {'both','estimator','hamming'} so audit/reporting can stratify on the
     admission channel either way.
     """
-    slack = estimator_z * (jaccard_threshold * (1 - jaccard_threshold) / num_hashes) ** 0.5
+    slack = ESTIMATOR_Z * (jaccard_threshold * (1 - jaccard_threshold) / num_hashes) ** 0.5
     est_ok = F.col("est_jaccard") >= jaccard_threshold - slack
     ham_ok = F.col("hamming") <= simhash_radius
     if hamming_est_floor is not None:
@@ -172,7 +174,6 @@ def verify_stage(
     num_hashes: int = 128,
     jaccard_threshold: float = 0.80,
     simhash_radius: int = 3,
-    estimator_z: float = 2.33,
     label_col: str | None = None,
     hamming_est_floor: float | None = None,
 ) -> DataFrame:
@@ -183,6 +184,5 @@ def verify_stage(
         jaccard_threshold=jaccard_threshold,
         simhash_radius=simhash_radius,
         num_hashes=num_hashes,
-        estimator_z=estimator_z,
         hamming_est_floor=hamming_est_floor,
     )

@@ -58,6 +58,11 @@ from .operators.verify import verify_stage
 
 @dataclass
 class DedupConfig:
+    # Every field is fingerprinted into the run dir's config.json. Values
+    # no caller tunes are constants in their operators, not fields: the
+    # CC crossovers (operators.components.DEFAULT_*), the 64-bit collapse
+    # hash (operators.signatures.collapse_hash_exprs) and the estimator z
+    # (operators.verify.ESTIMATOR_Z).
     shingle_k: int = DEFAULT_CONFIG["shingle_k"]
     num_hashes: int = DEFAULT_CONFIG["num_hashes"]
     bands: int = DEFAULT_CONFIG["bands"]
@@ -75,15 +80,6 @@ class DedupConfig:
     # 0.11-0.22 to ~0 while leaving J>=0.8 recall intact (gate-tested).
     # Every edge carries a `via` tier column under BOTH settings.
     hamming_est_floor: float | None = None
-    # connected-components crossovers (VERDICT r4 #5) — measured defaults
-    # from operators/components.py docstrings; fingerprinted so retuning
-    # never silently reuses checkpoints. On a real cluster: lower
-    # cc_small_graph_threshold to what one executor labels quickly
-    # (~16 B/edge through a single task), raise cc_broadcast_edge_threshold
-    # with executor memory (~64 B/edge of broadcast table).
-    cc_small_graph_threshold: int = 10_000_000
-    cc_string_hash_threshold: int = 200_000
-    cc_broadcast_edge_threshold: int = 1_500_000
     # fuse_stages only selects which entries of DedupPipeline.TABLE
     # persist. False (staged): every stage. True (fused): `extracted` and
     # `pairs` stay lazy — extract pipes into the signature kernel and the
@@ -109,15 +105,6 @@ class DedupConfig:
     # rewrite; without the runtime jars the 'iceberg' branch raises a
     # clear error at first write.
     table_format: str = "parquet"
-    # collapse_hash_bits: width of the signature-collapse content hash
-    # (operators.signatures.signature_collapse): 64 (one xxhash64 — fine
-    # to ~10^9 docs, collision odds n^2/2^65) or 128 (two seeded xxhash64
-    # columns — the 10^12-doc setting; heuristically ~n^2/2^129, see the
-    # signature_collapse docstring for the honest caveat on seed-variant
-    # independence). Clusters are identical under both widths
-    # (parity-tested); the knob is part of the config fingerprint so a
-    # width change never reuses checkpoints.
-    collapse_hash_bits: int = 64
     extra: dict = field(default_factory=dict)
 
 
@@ -426,12 +413,10 @@ class DedupPipeline:
         if cfg.exact_collapse:
             # exact-collapse content hashes (round 7), computed in the map
             # pass that already holds the minhash array: exact_map then
-            # scans (url, sig_h[, sig_h2]) — ~8 B/doc — instead of
+            # scans (url, sig_h) — ~8 B/doc — instead of
             # re-reading and re-hashing the 512 B minhash payload (~90% of
             # that stage's input bytes)
-            sigs = sigs.withColumns(
-                collapse_hash_exprs(id_col="url", hash_bits=cfg.collapse_hash_bits)
-            )
+            sigs = sigs.withColumns(collapse_hash_exprs(id_col="url"))
         return sigs
 
     def _exact_map(self, sigs: DataFrame) -> DataFrame:
@@ -440,7 +425,7 @@ class DedupPipeline:
         layouts: two jobs consume it (edges rep-filter, clusters
         expansion) — at 10^12 docs one ~50 B/doc write+scan beats
         recomputing the (sig_hash, url) shuffle+join twice."""
-        return signature_collapse(sigs, hash_bits=self.cfg.collapse_hash_bits)
+        return signature_collapse(sigs)
 
     def _pairs(self, sigs: DataFrame, exact_map: DataFrame | None) -> DataFrame:
         cfg = self.cfg
@@ -470,7 +455,6 @@ class DedupPipeline:
     def _clusters(
         self, edges: DataFrame, exact_map: DataFrame | None, sigs: DataFrame
     ) -> DataFrame:
-        cfg = self.cfg
         if exact_map is not None:
             cc, ids = components_with_exact_map, {"exact_map": exact_map}
         else:
@@ -484,9 +468,6 @@ class DedupPipeline:
             # spares CC its count-probe job
             edge_count_hint=self._stage_rowcount("edges"),
             edges_distinct=True,  # candidate_pairs already dedups
-            small_graph_threshold=cfg.cc_small_graph_threshold,
-            string_hash_threshold=cfg.cc_string_hash_threshold,
-            broadcast_edge_threshold=cfg.cc_broadcast_edge_threshold,
         )
 
     def _substring_args(self) -> dict:

@@ -3037,8 +3037,8 @@ WITH tok AS (
 )
 SELECT e.doc_id,
        len(e.grams)::INT AS n_grams,
-       coalesce(h.n_leaking_docs, 0)::INT AS n_leaking_docs,
-       coalesce(h.n_gram_hits, 0)::INT AS n_gram_hits
+       coalesce(h.n_leaking_docs, 0)::BIGINT AS n_leaking_docs,
+       coalesce(h.n_gram_hits, 0)::BIGINT AS n_gram_hits
 FROM ev e LEFT JOIN h ON e.doc_id = h.eval_id
 """
 

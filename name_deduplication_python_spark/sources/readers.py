@@ -246,14 +246,13 @@ def read_encrypted_csv(
     `spark.read.csv(inferSchema)` performs); every file is then
     reindexed to those columns, missing ones null — mirroring the
     reference's single-file cache contract while tolerating ragged
-    directories. A tampered or wrong-key file fails the HMAC and raises
-    InvalidToken (never a partial parse).
+    directories. A tampered, wrong-key or (with ``ttl``) expired file
+    raises cryptography.fernet.InvalidToken (never a partial parse).
     """
     import io
 
     import pandas as pd
-
-    from ..functions import fernet
+    from cryptography.fernet import Fernet
 
     files = spark.read.format("binaryFile").load(path)
     first = files.select("content").head()
@@ -261,7 +260,7 @@ def read_encrypted_csv(
         raise ValueError(f"no files under {path}")
 
     def _parse(content: bytes) -> pd.DataFrame:
-        text = fernet.decrypt(key, bytes(content), ttl=ttl).decode(errors="ignore")
+        text = Fernet(key).decrypt(bytes(content), ttl).decode(errors="ignore")
         return pd.read_csv(
             io.StringIO(text), dtype=str, engine="python", on_bad_lines="warn"
         )

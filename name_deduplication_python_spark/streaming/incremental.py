@@ -39,6 +39,9 @@ class IncrementalDedup:
     # partitions its own band hashes land in (PartitionFilters at the
     # file listing — untouched store files are never opened)
     STORE_KEY_PARTS = 64
+    # an epoch with no band keys (every doc empty) writes no bp= file, so
+    # the key store is read with its schema, never inferred from files
+    BAND_KEYS_SCHEMA = "url string, bh bigint, epoch int, bp int"
 
     def __init__(self, spark: SparkSession, store_dir: str, config: dict | None = None):
         self.spark = spark
@@ -46,8 +49,9 @@ class IncrementalDedup:
         self.cfg = dict(DEFAULT_CONFIG, **(config or {}))
         # MUST run before the makedirs below: a crash mid-compact_store
         # leaves the real store parked at <sub>__old, and blindly
-        # recreating an empty <sub>/ would make _read_store treat the
-        # store as cold — silently skipping all cross-epoch pairs.
+        # recreating an empty <sub>/ would leave no committed epoch, so
+        # process_batch would treat the store as cold — silently skipping
+        # all cross-epoch pairs.
         self._recover_compaction()
         os.makedirs(os.path.join(store_dir, "signatures"), exist_ok=True)
         os.makedirs(os.path.join(store_dir, "band_keys"), exist_ok=True)
@@ -146,9 +150,8 @@ class IncrementalDedup:
         compacted current-version pointer table maintained per epoch; the
         filter contract is identical."""
         cand = candidates.select("url").distinct()
-        sig_root = os.path.join(self.store, "signatures")
         latest = (
-            self.spark.read.parquet(sig_root)
+            self._read_store("signatures")
             .where(F.col("epoch") < upto_epoch)
             .select("url", "epoch")
             .join(F.broadcast(cand), "url", "left_semi")
@@ -161,142 +164,8 @@ class IncrementalDedup:
             .drop("_last_epoch")
         )
 
-    def _bloom_params(self) -> tuple[int, int]:
-        """(n_bits, k) the Bloom store was keyed with.
-
-        Persisted to store/bloom/_meta.json on first write: build and
-        probe MUST use identical params (operators/bloom.py contract),
-        and probing an old store with a changed live cfg would silently
-        produce false negatives (dropped duplicate edges). Once a store
-        exists, the persisted params WIN; a conflicting live cfg raises
-        at the first use instead of corrupting results — re-key by
-        deleting store/bloom and running backfill_bloom()."""
-        import json
-
-        meta_path = os.path.join(self.store, "bloom", "_meta.json")
-        live = (int(self.cfg["bloom_bits"]), int(self.cfg["bloom_k"]))
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                meta = json.load(f)
-            stored = (int(meta["n_bits"]), int(meta["k"]))
-            if stored != live and (
-                self.cfg["bloom_bits"] != DEFAULT_CONFIG["bloom_bits"]
-                or self.cfg["bloom_k"] != DEFAULT_CONFIG["bloom_k"]
-            ):
-                raise ValueError(
-                    f"bloom store at {meta_path} was built with n_bits="
-                    f"{stored[0]}, k={stored[1]} but cfg requests "
-                    f"{live[0]}/{live[1]}; delete store/bloom and run "
-                    "backfill_bloom() to re-key"
-                )
-            return stored
-        os.makedirs(os.path.dirname(meta_path), exist_ok=True)
-        with open(meta_path, "w") as f:
-            json.dump({"n_bits": live[0], "k": live[1], "hash_fn": "xxh64"}, f)
-        return live
-
-    def _bloom_epochs_done(self) -> set[str]:
-        """Bloom epoch dirs whose write COMPLETED (_SUCCESS) — a partial
-        dir from a crash must not count as coverage (its missing bits
-        would read as definitely-new: false negatives)."""
-        root = os.path.join(self.store, "bloom")
-        if not os.path.isdir(root):
-            return set()
-        return {
-            n
-            for n in os.listdir(root)
-            if n.startswith("epoch=")
-            and os.path.exists(os.path.join(root, n, "_SUCCESS"))
-        }
-
-    def _write_bloom_epoch(self, keys: DataFrame, epoch_id: int) -> None:
-        from ..operators.bloom import bloom_build
-
-        n_bits, k = self._bloom_params()
-        bloom_build(
-            keys.select("bh").distinct(), "bh", n_bits=n_bits, k=k,
-            hash_fn="xxh64",
-        ).write.mode("overwrite").parquet(
-            os.path.join(self.store, "bloom", f"epoch={epoch_id}")
-        )
-
-    def backfill_bloom(self) -> int:
-        """Build Bloom word tables for band-key epochs that predate the
-        knob (or whose write crashed) so the prefilter can activate on an
-        existing store — without this, one uncovered epoch keeps the
-        coverage gate declining forever. Offline maintenance like
-        compact_store (run between epochs). Returns #epochs built."""
-        bk_root = os.path.join(self.store, "band_keys")
-        done = self._bloom_epochs_done()
-        built = 0
-        for n in sorted(os.listdir(bk_root)):
-            if not n.startswith("epoch=") or n in done:
-                continue
-            keys = self.spark.read.parquet(os.path.join(bk_root, n))
-            self._write_bloom_epoch(keys, int(n.split("=", 1)[1]))
-            built += 1
-        return built
-
-    def _bloom_filter_batch_bh(
-        self, new_keys: DataFrame, epoch_id: int
-    ) -> DataFrame | None:
-        """Optional membership prefilter (cfg['bloom_prefilter']): the
-        batch's distinct bh set reduced to values the store Bloom filter
-        says MAYBE exist. Definitely-new bh generate no store I/O at all
-        — their partitions never enter the IN filter and their rows never
-        enter the semi-join broadcast; a fully-novel batch skips the
-        store read entirely. maybe_seen=false is exact, so results are
-        identical with the knob on or off.
-
-        Correctness gate: the Bloom store must cover EVERY band-key epoch
-        < epoch_id with a COMPLETED (_SUCCESS) table (false negatives are
-        otherwise possible for epochs written before the knob was
-        enabled, or mid-crash partials). When coverage is incomplete the
-        prefilter declines (returns None) and the batch takes the
-        unfiltered path — backfill_bloom() closes the gap offline.
-        compact_store only ever REMOVES store rows, so a post-compaction
-        Bloom is merely more permissive (stale bits = extra maybes),
-        never wrong."""
-        from ..operators.bloom import bloom_maybe_contains
-
-        bk_root = os.path.join(self.store, "band_keys")
-        need = {
-            n
-            for n in os.listdir(bk_root)
-            if n.startswith("epoch=") and int(n.split("=", 1)[1]) < epoch_id
-        }
-        if not need:
-            return None  # cold store: nothing to prune against
-        if not need <= self._bloom_epochs_done():
-            return None
-        n_bits, k = self._bloom_params()
-        words = (
-            self.spark.read.parquet(os.path.join(self.store, "bloom"))
-            .where(F.col("epoch") < epoch_id)
-            .groupBy("word_idx")
-            .agg(F.expr("bit_or(bits)").alias("bits"))
-        )
-        return (
-            bloom_maybe_contains(
-                new_keys.select("bh").distinct(),
-                "bh",
-                words,
-                n_bits=n_bits,
-                k=k,
-                hash_fn="xxh64",
-            )
-            .where(F.col("maybe_seen"))
-            .drop("maybe_seen")
-            # reused twice downstream (partition-IN collect + semi-join
-            # broadcast) — same pattern as new_keys/pairs
-            .localCheckpoint()
-        )
-
     def _pruned_store_keys(
-        self,
-        old_keys: DataFrame,
-        new_keys: DataFrame,
-        batch_bh: DataFrame | None = None,
+        self, old_keys: DataFrame, new_keys: DataFrame
     ) -> DataFrame:
         """Store band keys restricted to the BATCH's bucket set — the key
         side of the O(touched) contract (round 3 fixed the verify-payload
@@ -314,8 +183,7 @@ class IncrementalDedup:
              the store is never shuffled; only rows in TOUCHED buckets
              reach the candidate join's exchange.
         """
-        if batch_bh is None:
-            batch_bh = new_keys.select("bh").distinct()
+        batch_bh = new_keys.select("bh").distinct()
         parts = [
             r.bp
             for r in batch_bh.select(
@@ -327,13 +195,11 @@ class IncrementalDedup:
         old_keys = old_keys.where(F.col("bp").isin(parts)).drop("bp")
         return old_keys.join(F.broadcast(batch_bh), "bh", "left_semi")
 
-    def _read_store(self, sub: str) -> DataFrame | None:
-        path = os.path.join(self.store, sub)
-        try:
-            df = self.spark.read.parquet(path)
-            return df if len(df.columns) else None
-        except Exception:
-            return None
+    def _read_store(self, sub: str) -> DataFrame:
+        reader = self.spark.read
+        if sub == "band_keys":
+            reader = reader.schema(self.BAND_KEYS_SCHEMA)
+        return reader.parquet(os.path.join(self.store, sub))
 
     def process_batch(self, pages: DataFrame, epoch_id: int) -> None:
         """foreachBatch body — also callable directly for unit tests.
@@ -355,6 +221,11 @@ class IncrementalDedup:
         read its OWN keys back and cross-join the batch against itself
         (self-edges + duplicated intra-batch pairs). The filter makes the
         replay read exactly what the first attempt read.
+
+        Cold store: the batch is cold iff no epoch below epoch_id has
+        committed (_committed_epochs) — the first epoch, and its replay
+        after a crash before the marker. Any other batch reads the store,
+        and a store that fails to read raises: it never reads as cold.
 
         Verify-side pruning: the store's 512 B minhash payloads are pulled
         ONLY for docs that actually appear in this epoch's candidate pairs
@@ -380,16 +251,12 @@ class IncrementalDedup:
         # new-vs-new self-join
         pairs, _ = candidate_pairs(new_keys, bucket_cap=c["bucket_cap"], with_stats=False)
         all_sigs = new_sigs
-        old_keys = self._read_store("band_keys")
-        if old_keys is not None:
+        # cold-store rule (see docstring)
+        if any(e < epoch_id for e in self._committed_epochs()):
             new_urls = new_sigs.select("url")
-            batch_bh = (
-                self._bloom_filter_batch_bh(new_keys, epoch_id)
-                if self.cfg.get("bloom_prefilter")
-                else None
-            )
             old_keys = self._pruned_store_keys(
-                old_keys.where(F.col("epoch") < epoch_id), new_keys, batch_bh
+                self._read_store("band_keys").where(F.col("epoch") < epoch_id),
+                new_keys,
             )
             # re-crawl guards on the PAIR-GENERATION side: (a) a url in
             # THIS batch supersedes all its store versions — anti-join
@@ -438,13 +305,6 @@ class IncrementalDedup:
         keyed.repartition(F.col("bp")).write.mode("overwrite").partitionBy(
             "bp"
         ).parquet(bk_epoch)
-        if self.cfg.get("bloom_prefilter"):
-            # per-epoch Bloom word table over this batch's band hashes
-            # (<= bloom_bits/64 rows); read side bit_or-merges epochs.
-            # Written BEFORE signatures so the idempotence marker also
-            # covers it (a replay overwrites both). Params come from the
-            # store's persisted _meta.json (build/probe key agreement).
-            self._write_bloom_epoch(new_keys, epoch_id)
         # signatures written LAST: their _SUCCESS is the epoch's idempotence
         # marker, so a crash mid-epoch replays the whole epoch (overwrite
         # mode makes the replay exact)
@@ -518,12 +378,12 @@ class IncrementalDedup:
             # this to a temp table instead.
             .localCheckpoint()
         )
-        plans = [("signatures", ["epoch"])]
-        if self._read_store("band_keys") is not None:
-            plans.append(("band_keys", ["epoch", "bp"]))
-        for sub, part_cols in plans:
+        for sub, part_cols in (
+            ("signatures", ["epoch"]),
+            ("band_keys", ["epoch", "bp"]),
+        ):
             root = os.path.join(self.store, sub)
-            df = self.spark.read.parquet(root).where(F.col("epoch").isin(committed))
+            df = self._read_store(sub).where(F.col("epoch").isin(committed))
             stats[f"{sub}_rows_before"] = df.count()
             kept = df.join(latest, ["url", "epoch"], "left_semi")
             tmp = root + "__compact"
@@ -539,7 +399,7 @@ class IncrementalDedup:
             os.rename(root, old)
             os.rename(tmp, root)
             shutil.rmtree(old)
-            stats[f"{sub}_rows_after"] = self.spark.read.parquet(root).count()
+            stats[f"{sub}_rows_after"] = self._read_store(sub).count()
         return stats
 
     def start(self, source_dir: str, checkpoint_dir: str, available_now: bool = True):

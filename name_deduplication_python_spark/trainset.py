@@ -75,7 +75,6 @@ def near_dup_clusters(docs: DataFrame, cfg: dict) -> DataFrame:
         num_hashes=cfg["num_hashes"],
         jaccard_threshold=cfg["jaccard_threshold"],
         simhash_radius=cfg["simhash_radius"],
-        estimator_z=cfg.get("estimator_z", 2.33),
         hamming_est_floor=cfg.get("hamming_est_floor"),
     )
     return components_with_singletons(edges.select("src", "dst"), docs, "url")

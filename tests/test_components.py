@@ -30,15 +30,18 @@ def _uf_oracle(edges: list[tuple[str, str]]) -> dict[str, str]:
 def _check(spark, edges: list[tuple[str, str]]):
     df = spark.createDataFrame(edges, "src string, dst string")
     want = _uf_oracle(edges)
-    # both code paths: single-task fast path AND iterative large/small-star
-    for threshold in (2_000_000, 0):
+    # every code path: single-task fast path, iterative large/small-star,
+    # and the hashed string-id single task (+ distributed relabel)
+    for kw in (
+        {"small_graph_threshold": 2_000_000},
+        {"small_graph_threshold": 0},
+        {"string_hash_threshold": 0},
+    ):
         got = {
             r["url"]: r["cluster_id"]
-            for r in connected_components(
-                df, small_graph_threshold=threshold
-            ).collect()
+            for r in connected_components(df, **kw).collect()
         }
-        assert got == want, (threshold, got, want)
+        assert got == want, (kw, got, want)
 
 
 def test_cc_simple_chain(spark):

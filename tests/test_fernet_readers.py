@@ -1,87 +1,18 @@
-"""S3 encrypted cached CSV scan: pure-stdlib Fernet + distributed reader.
-
-The AES core is pinned by PUBLISHED vectors (FIPS-197 Appendix C.1;
-NIST SP 800-38A F.2.1/F.2.2 CBC-AES128), the token layer by spec-field
-checks plus an import-gated interop test against the real `cryptography`
-Fernet when that wheel is present (it is in this container). The
-reader mirrors /root/reference/data_utils.py:427-443 (`load_raw_file`).
+"""S3 encrypted cached CSV scan: Fernet-encrypted files through the
+distributed reader. Decryption is the installed `cryptography` Fernet, as
+in the reference; the reader mirrors the reference's `load_raw_file`
+(data_utils.py:427-443).
 """
 
 from __future__ import annotations
 
 import base64
-import struct
 
 import pytest
+from cryptography.fernet import Fernet, InvalidToken
 
-from name_deduplication_python_spark.functions import fernet as fn
+from name_deduplication_python_spark.functions.fernet import derive_key
 from name_deduplication_python_spark.sources.readers import read_encrypted_csv
-
-# --------------------------------------------------------------------------
-# AES / CBC primitives vs published NIST vectors
-# --------------------------------------------------------------------------
-
-FIPS_KEY = bytes.fromhex("000102030405060708090a0b0c0d0e0f")
-FIPS_PT = bytes.fromhex("00112233445566778899aabbccddeeff")
-FIPS_CT = bytes.fromhex("69c4e0d86a7b0430d8cdb78070b4c55a")
-
-SP_KEY = bytes.fromhex("2b7e151628aed2a6abf7158809cf4f3c")
-SP_IV = bytes.fromhex("000102030405060708090a0b0c0d0e0f")
-SP_PT = bytes.fromhex(
-    "6bc1bee22e409f96e93d7e117393172a"
-    "ae2d8a571e03ac9c9eb76fac45af8e51"
-    "30c81c46a35ce411e5fbc1191a0a52ef"
-    "f69f2445df4f9b17ad2b417be66c3710"
-)
-SP_CT = bytes.fromhex(
-    "7649abac8119b246cee98e9b12e9197d"
-    "5086cb9b507219ee95db113a917678b2"
-    "73bed6b8e3c1743b7116e69e22229516"
-    "3ff1caa1681fac09120eca307586e1a7"
-)
-
-
-def test_aes128_fips197_c1_block():
-    assert fn.aes128_encrypt_block(FIPS_KEY, FIPS_PT) == FIPS_CT
-    assert fn.aes128_decrypt_block(FIPS_KEY, FIPS_CT) == FIPS_PT
-
-
-def test_cbc_sp80038a_f21_vector():
-    assert fn.cbc_encrypt(SP_KEY, SP_IV, SP_PT) == SP_CT
-    assert fn.cbc_decrypt(SP_KEY, SP_IV, SP_CT) == SP_PT
-
-
-# --------------------------------------------------------------------------
-# Fernet token layer
-# --------------------------------------------------------------------------
-
-
-def test_fernet_roundtrip_and_token_layout():
-    key = fn.generate_key()
-    tok = fn.encrypt_at_time(key, b"secret,rows", timestamp=499162800, iv=b"\x01" * 16)
-    raw = base64.urlsafe_b64decode(tok)
-    assert raw[0] == 0x80  # spec version byte
-    assert struct.unpack(">Q", raw[1:9])[0] == 499162800
-    assert raw[9:25] == b"\x01" * 16
-    assert fn.decrypt(key, tok) == b"secret,rows"
-    # deterministic given (key, ts, iv) — a pure function, replayable
-    assert tok == fn.encrypt_at_time(key, b"secret,rows", 499162800, iv=b"\x01" * 16)
-
-
-def test_fernet_rejects_tamper_wrong_key_expiry():
-    key = fn.generate_key()
-    tok = fn.encrypt(key, b"payload")
-    raw = bytearray(base64.urlsafe_b64decode(tok))
-    raw[30] ^= 1  # flip a ciphertext bit -> HMAC must fail
-    with pytest.raises(fn.InvalidToken):
-        fn.decrypt(key, base64.urlsafe_b64encode(bytes(raw)))
-    with pytest.raises(fn.InvalidToken):
-        fn.decrypt(fn.generate_key(), tok)
-    old = fn.encrypt_at_time(key, b"payload", timestamp=1000)
-    with pytest.raises(fn.InvalidToken):
-        fn.decrypt(key, old, ttl=60)
-    with pytest.raises(fn.InvalidToken):
-        fn.decrypt(key, b"!!!not-base64!!!")
 
 
 def test_derive_key_is_pbkdf2_sha256():
@@ -89,22 +20,12 @@ def test_derive_key_is_pbkdf2_sha256():
     (reference data_utils.py:38-43 shape, credential caller-supplied)."""
     import hashlib
 
-    k = fn.derive_key("pw", b"salt", iterations=1000)
+    k = derive_key("pw", b"salt", iterations=1000)
     exp = base64.urlsafe_b64encode(
         hashlib.pbkdf2_hmac("sha256", b"pw", b"salt", 1000, 32)
     )
     assert k == exp
-    tok = fn.encrypt(k, b"x")
-    assert fn.decrypt(k, tok) == b"x"
-
-
-def test_fernet_interop_with_cryptography_if_present():
-    """When the real wheel exists, both directions must interoperate."""
-    cf = pytest.importorskip("cryptography.fernet")
-    key = fn.generate_key()
-    theirs = cf.Fernet(key)
-    assert fn.decrypt(key, theirs.encrypt(b"interop")) == b"interop"
-    assert theirs.decrypt(bytes(fn.encrypt(key, b"interop"))) == b"interop"
+    assert Fernet(k).decrypt(Fernet(k).encrypt(b"x")) == b"x"
 
 
 # --------------------------------------------------------------------------
@@ -113,11 +34,11 @@ def test_fernet_interop_with_cryptography_if_present():
 
 
 def _write_encrypted(dirpath, key, name: str, csv_text: str) -> None:
-    (dirpath / name).write_bytes(fn.encrypt(key, csv_text.encode()))
+    (dirpath / name).write_bytes(Fernet(key).encrypt(csv_text.encode()))
 
 
 def test_read_encrypted_csv_multi_file(spark, tmp_path):
-    key = fn.generate_key()
+    key = Fernet.generate_key()
     d = tmp_path / "cache"
     d.mkdir()
     _write_encrypted(d, key, "a.bin", "id,name\n1,ana\n2,bob\n")
@@ -131,9 +52,34 @@ def test_read_encrypted_csv_multi_file(spark, tmp_path):
 
 
 def test_read_encrypted_csv_wrong_key_fails_loud(spark, tmp_path):
-    key = fn.generate_key()
+    key = Fernet.generate_key()
     d = tmp_path / "cache2"
     d.mkdir()
     _write_encrypted(d, key, "a.bin", "id\n1\n")
-    with pytest.raises(fn.InvalidToken):
-        read_encrypted_csv(spark, str(d), fn.generate_key()).collect()
+    with pytest.raises(InvalidToken):
+        read_encrypted_csv(spark, str(d), Fernet.generate_key()).collect()
+
+
+def test_fernet_rejects_tamper_wrong_key_expiry(spark, tmp_path):
+    """A flipped ciphertext bit, a wrong key and an expired token (ttl)
+    each raise InvalidToken from the reader instead of parsing."""
+    key = Fernet.generate_key()
+    csv = b"id\n1\n"
+
+    def scan(name: str, token: bytes, read_key: bytes = key, ttl=None):
+        d = tmp_path / name
+        d.mkdir()
+        (d / "a.bin").write_bytes(token)
+        return read_encrypted_csv(spark, str(d), read_key, ttl=ttl).collect()
+
+    raw = bytearray(base64.urlsafe_b64decode(Fernet(key).encrypt(csv)))
+    raw[30] ^= 1  # flip a ciphertext bit -> HMAC must fail
+    with pytest.raises(InvalidToken):
+        scan("tampered", base64.urlsafe_b64encode(bytes(raw)))
+    with pytest.raises(InvalidToken):
+        scan("wrong_key", Fernet(key).encrypt(csv), Fernet.generate_key())
+    old = Fernet(key).encrypt_at_time(csv, current_time=1000)
+    with pytest.raises(InvalidToken):
+        scan("expired", old, ttl=60)
+    # the same old token without a ttl still reads
+    assert [r["id"] for r in scan("no_ttl", old)] == ["1"]

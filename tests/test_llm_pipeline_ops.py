@@ -860,10 +860,12 @@ def test_eval_leak_report_counts(spark):
         ],
         ["doc_id", "text"],
     )
-    got = {
-        r["doc_id"]: r.asDict()
-        for r in eval_leak_report(tr, ev, n=10).collect()
-    }
+    report = eval_leak_report(tr, ev, n=10)
+    # bigint: an int32 count overflows (and under ANSI fails the job)
+    # past 2^31-1 hits
+    dtypes = dict(report.dtypes)
+    assert dtypes["n_leaking_docs"] == dtypes["n_gram_hits"] == "bigint"
+    got = {r["doc_id"]: r.asDict() for r in report.collect()}
     assert set(got) == {100, 101, 102}
     assert got[100]["n_leaking_docs"] == 2
     assert got[100]["n_gram_hits"] >= 2

@@ -255,50 +255,6 @@ def test_fused_and_staged_clusters_identical(spark, tmp_path):
     assert got == fused_stages
 
 
-def test_collapse_hash_width_parity(spark, tmp_path):
-    """collapse_hash_bits=128 (the 10^12-doc setting) must produce the
-    same collapse groups and final clusters as the 64-bit default when
-    neither collides — i.e. always at test scale."""
-    import pandas as pd
-
-    from name_deduplication_python_spark.operators.signatures import (
-        signature_collapse,
-        signature_stage,
-    )
-
-    pages, _ = generate_corpus(n_base=80, seed=81)
-    fam = pages.iloc[:1].copy()
-    clones = pd.concat([fam] * 10, ignore_index=True)
-    clones["url"] = [f"https://example.org/c128/{i:03d}" for i in range(10)]
-    pages = pd.concat([pages, clones], ignore_index=True)
-    df = corpus_to_spark(spark, pages).cache()
-
-    from name_deduplication_python_spark.operators.extract import extract_stage
-
-    sigs = signature_stage(extract_stage(df)).cache()
-    m64 = {r.url: r.rep for r in signature_collapse(sigs, hash_bits=64).collect()}
-    m128 = {r.url: r.rep for r in signature_collapse(sigs, hash_bits=128).collect()}
-    assert m64 == m128
-    assert len(set(m64.values())) < len(m64)  # the clone family collapsed
-
-    c64 = DedupPipeline(
-        spark, str(tmp_path / "w64"), DedupConfig(collapse_hash_bits=64)
-    ).run(df)
-    c128 = DedupPipeline(
-        spark, str(tmp_path / "w128"), DedupConfig(collapse_hash_bits=128)
-    ).run(df)
-    assert {(r.url, r.cluster_id) for r in c64.collect()} == {
-        (r.url, r.cluster_id) for r in c128.collect()
-    }
-    # the knob is fingerprinted: same workdir + different width refuses
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="different DedupConfig"):
-        DedupPipeline(
-            spark, str(tmp_path / "w64"), DedupConfig(collapse_hash_bits=128)
-        )
-
-
 def test_table_format_dispatch(spark, tmp_path):
     """table_format is the Iceberg swap point: 'parquet' (default) resumes
     exactly as before; 'iceberg' without the runtime jars fails with a
@@ -392,10 +348,9 @@ def test_corpus_truth_pairs_matches_full_generation():
 
 
 def test_round5_knobs_are_fingerprinted(spark, tmp_path):
-    """The precision-tier floor, the CC crossover knobs and the optional
-    stages' ``extra`` settings are part of the config fingerprint — a
-    retune (the VERDICT r4 #5 real-cluster scenario) can never silently
-    reuse checkpoints computed under the old values."""
+    """The precision-tier floor and the optional stages' ``extra``
+    settings are part of the config fingerprint — a retune can never
+    silently reuse checkpoints computed under the old values."""
     import pytest as _pytest
 
     pages, _ = generate_corpus(n_base=20, seed=5)
@@ -404,9 +359,6 @@ def test_round5_knobs_are_fingerprinted(spark, tmp_path):
     DedupPipeline(spark, wd, DedupConfig()).run(df)
     for cfg in (
         DedupConfig(hamming_est_floor=0.635),
-        DedupConfig(cc_small_graph_threshold=1_000),
-        DedupConfig(cc_string_hash_threshold=1_000),
-        DedupConfig(cc_broadcast_edge_threshold=1_000),
         DedupConfig(extra={"substring_gram": 32}),
     ):
         with _pytest.raises(ValueError, match="different DedupConfig"):

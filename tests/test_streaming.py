@@ -428,7 +428,7 @@ def test_compact_store_drops_stale_versions_preserving_semantics(spark, tmp_path
 def test_compact_store_crash_mid_swap_recovers_not_cold(spark, tmp_path):
     """A crash between compact_store's two renames must NOT read as a cold
     store on restart (the round-4 verdict failure mode: __init__ recreated
-    an empty band_keys/, _read_store returned None, and every later epoch
+    an empty store dir, the store read as cold, and every later epoch
     silently skipped all cross pairs). Recovery must roll the completed
     rewrite forward and preserve edge semantics; a stray __compact with no
     swap in flight is discarded."""
@@ -464,7 +464,7 @@ def test_compact_store_crash_mid_swap_recovers_not_cold(spark, tmp_path):
         assert os.path.isdir(root)
         assert not os.path.isdir(root + "__old")
         assert not os.path.isdir(root + "__compact")
-    assert inc2._read_store("band_keys") is not None  # NOT cold
+    assert inc2._committed_epochs() == [0]  # NOT cold
     # cross-epoch pairing against the recovered store still works
     inc2.process_batch(_pages(spark, [("u3", doc(1, mutate=3))]), 1)
     edges = {tuple(sorted((r.src, r.dst))) for r in inc2.edges().collect()}
@@ -476,141 +476,75 @@ def test_compact_store_crash_mid_swap_recovers_not_cold(spark, tmp_path):
     shutil.copytree(sig_root, sig_root + "__compact")
     inc3 = IncrementalDedup(spark, store)
     assert not os.path.isdir(sig_root + "__compact")
-    assert inc3._read_store("signatures") is not None
+    assert inc3._committed_epochs() == [0, 1]
 
     # State C: crashed during rmtree(__old): live root is the rewrite,
     # part-deleted __old is garbage -> dropped.
     os.makedirs(os.path.join(sig_root + "__old", "epoch=0"))
     inc4 = IncrementalDedup(spark, store)
     assert not os.path.isdir(sig_root + "__old")
-    assert inc4._read_store("signatures") is not None
+    assert inc4._committed_epochs() == [0, 1]
 
 
-def test_bloom_prefilter_identical_edges_and_epoch_tables(spark, tmp_path):
-    """cfg['bloom_prefilter'] must be a pure pruning knob: same corpus,
-    same split, same edges with it on or off (maybe_seen=false is exact,
-    so no candidate the unfiltered path finds can be dropped)."""
+def _even_odd_batches(spark):
+    """The 80-page seed-21 corpus split into url-sorted even/odd batches
+    (planted pairs have consecutive ids, so exact pairs cross batches)."""
     pages, _ = generate_corpus(n_base=80, seed=21)
     df = corpus_to_spark(spark, pages).cache()
-    urls_sorted = sorted(pages["url"])
-    evens = set(urls_sorted[::2])
-    first = df.where(df.url.isin(list(evens)))
-    second = df.where(~df.url.isin(list(evens)))
+    evens = sorted(pages["url"])[::2]
+    return df.where(df.url.isin(evens)), df.where(~df.url.isin(evens))
 
-    def run(store, cfg):
-        inc = IncrementalDedup(spark, store, cfg)
-        inc.process_batch(first, 0)
+
+def test_corrupt_store_raises_instead_of_reading_cold(spark, tmp_path):
+    """A committed store that fails to read must raise: treating it as
+    cold would commit the epoch with every cross-epoch pair missing."""
+    first, second = _even_odd_batches(spark)
+    store = str(tmp_path / "store")
+    inc = IncrementalDedup(spark, store)
+    inc.process_batch(first, 0)
+    bk0 = os.path.join(store, "band_keys", "epoch=0")
+    n_files = 0
+    for root, _, files in os.walk(bk0):
+        for f in files:
+            if f.endswith(".parquet"):
+                with open(os.path.join(root, f), "wb") as fh:
+                    fh.write(b"not a parquet file" * 8)
+                n_files += 1
+    assert n_files
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
         inc.process_batch(second, 1)
-        return {
-            (r["src"], r["dst"])
-            for r in inc.edges().select("src", "dst").collect()
-        }
-
-    base = run(str(tmp_path / "off"), None)
-    bloomed = run(str(tmp_path / "on"), {"bloom_prefilter": True})
-    assert bloomed == base and base
-    # per-epoch word tables exist and are tiny (<= bloom_bits/64 rows)
-    for e in (0, 1):
-        p = os.path.join(str(tmp_path / "on"), "bloom", f"epoch={e}")
-        assert os.path.isdir(p)
-    words = spark.read.parquet(os.path.join(str(tmp_path / "on"), "bloom"))
-    from name_deduplication_python_spark import DEFAULT_CONFIG
-
-    assert words.count() <= 2 * DEFAULT_CONFIG["bloom_bits"] // 64
-
-
-def test_bloom_prefilter_declines_without_full_coverage(spark, tmp_path):
-    """Enabling the knob on a store whose earlier epochs predate it must
-    NOT drop candidates: coverage check declines the prefilter (returns
-    None) until every band-key epoch has a Bloom table."""
-    pages, _ = generate_corpus(n_base=60, seed=23)
-    df = corpus_to_spark(spark, pages).cache()
-    urls_sorted = sorted(pages["url"])
-    evens = set(urls_sorted[::2])
-    store = str(tmp_path / "store")
-
-    inc_off = IncrementalDedup(spark, store)  # epoch 0 without bloom
-    inc_off.process_batch(df.where(df.url.isin(list(evens))), 0)
-
-    inc_on = IncrementalDedup(spark, store, {"bloom_prefilter": True})
-    from name_deduplication_python_spark.operators.lsh import band_keys
-    from name_deduplication_python_spark.operators.signatures import (
-        signature_stage,
+    assert not os.path.exists(
+        os.path.join(store, "signatures", "epoch=1", "_SUCCESS")
     )
-    from name_deduplication_python_spark.operators.extract import extract_stage
-
-    cfg = inc_on.cfg
-    second = df.where(~df.url.isin(list(evens)))
-    nk = band_keys(
-        signature_stage(
-            extract_stage(second),
-            num_hashes=cfg["num_hashes"],
-            shingle_k=cfg["shingle_k"],
-            seed=cfg["seed"],
-        ),
-        bands=cfg["bands"],
-        rows_per_band=cfg["rows_per_band"],
-    )
-    assert inc_on._bloom_filter_batch_bh(nk, 1) is None
-    # the batch still processes correctly through the unfiltered path
-    inc_on.process_batch(second, 1)
-    assert inc_on.edges().count() > 0
 
 
-def test_bloom_prefilter_novel_batch_prunes_store_read(spark, tmp_path):
-    """A batch sharing no band hash with the store must reduce to a
-    (near-)empty maybe-seen bh set — the definitely-new fast path that
-    skips store partitions entirely at crawl scale."""
-    pages, _ = generate_corpus(n_base=60, seed=29)
-    df = corpus_to_spark(spark, pages).cache()
-    store = str(tmp_path / "store")
-    inc = IncrementalDedup(spark, store, {"bloom_prefilter": True})
-    inc.process_batch(df, 0)
-
-    # synthetic keys guaranteed absent from the store's bh space
-    novel = spark.createDataFrame(
-        [(f"novel-{i}", -(10**17) - i) for i in range(400)], ["url", "bh"]
-    )
-    kept = inc._bloom_filter_batch_bh(novel, 1)
-    assert kept is not None
-    n_kept = kept.count()
-    # theoretical fpr at n_store~60*25 keys, m=2^20, k=4 is ~1e-11;
-    # anything beyond a couple of rows means the filter is broken
-    assert n_kept <= 2, n_kept
-
-
-def test_bloom_backfill_activates_and_param_drift_raises(spark, tmp_path):
-    """backfill_bloom() closes the coverage gap for epochs predating the
-    knob (review finding: one uncovered epoch kept the gate declining
-    forever); persisted _meta.json params win over a drifted live cfg
-    (probing with changed n_bits/k would silently false-negative)."""
-    import pytest as _pytest
-
-    pages, _ = generate_corpus(n_base=60, seed=23)
-    df = corpus_to_spark(spark, pages).cache()
-    store = str(tmp_path / "store")
-    IncrementalDedup(spark, store).process_batch(df, 0)  # knob off
-
-    inc_on = IncrementalDedup(spark, store, {"bloom_prefilter": True})
-    nk = spark.read.parquet(os.path.join(store, "band_keys")).select(
-        "url", "bh"
-    )
-    assert inc_on._bloom_filter_batch_bh(nk, 1) is None  # uncovered
-    assert inc_on.backfill_bloom() == 1
-    kept = inc_on._bloom_filter_batch_bh(nk, 1)
-    assert kept is not None
-    # the store's own keys must all be maybe-seen (no false negatives)
-    assert kept.count() == nk.select("bh").distinct().count()
-    # a partial (crashed, markerless) bloom epoch must not count
+def test_first_epoch_replay_after_crash_before_marker(spark, tmp_path):
+    """A crash in the first epoch after its band-key write but before the
+    signature marker leaves no committed epoch: the replay is a cold
+    batch and must reproduce the first attempt's edges."""
     import shutil
 
-    part = os.path.join(store, "bloom", "epoch=9")
-    os.makedirs(part)
-    assert "epoch=9" not in inc_on._bloom_epochs_done()
-    shutil.rmtree(part)
-    # explicit conflicting params raise instead of corrupting results
-    drift = IncrementalDedup(
-        spark, store, {"bloom_prefilter": True, "bloom_bits": 1 << 21}
-    )
-    with _pytest.raises(ValueError, match="re-key"):
-        drift._bloom_params()
+    first, _ = _even_odd_batches(spark)
+    store = str(tmp_path / "store")
+    inc = IncrementalDedup(spark, store)
+    inc.process_batch(first, 0)
+    want = {(r.src, r.dst) for r in inc.edges(current_only=False).collect()}
+    assert want
+    shutil.rmtree(os.path.join(store, "signatures", "epoch=0"))
+    inc = IncrementalDedup(spark, store)
+    inc.process_batch(first, 0)
+    got = {(r.src, r.dst) for r in inc.edges(current_only=False).collect()}
+    assert got == want
+
+
+def test_epoch_without_band_keys_then_normal_epoch(spark, tmp_path):
+    """An epoch whose docs are all empty commits without a single band
+    key (no bp= file). The next epoch reads that store, which must read
+    as empty rather than fail schema inference."""
+    text = " ".join(f"w{i}" for i in range(40))
+    inc = IncrementalDedup(spark, str(tmp_path / "store"))
+    inc.process_batch(_pages(spark, [("e1", ""), ("e2", "   ")]), 0)
+    assert inc._committed_epochs() == [0]
+    inc.process_batch(_pages(spark, [("u1", text), ("u2", text)]), 1)
+    got = {tuple(sorted((r.src, r.dst))) for r in inc.edges().collect()}
+    assert got == {("u1", "u2")}
