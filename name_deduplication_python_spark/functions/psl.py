@@ -113,17 +113,40 @@ def _by_depth(suffixes, k: int) -> list[str]:
     return sorted(s for s in suffixes if s.count(".") + 1 == k)
 
 
+def _psl_arms(rules: PslRules):
+    """The public-suffix CASE arms in evaluation order, as (min label
+    count k, rule suffixes, probe depth, ps). Every exception arm comes
+    first, longest first: per the PSL spec a matching exception prevails
+    over any exact or wildcard rule, even a longer one. Then per depth
+    k, longest first: exact (probe depth k) before wildcard (probe the
+    k-1 PARENT); both give ps = k."""
+    out = []
+    top = rules.max_ps_labels
+    for k in range(top, 1, -1):
+        vals = _by_depth(rules.exceptions, k)
+        if vals:
+            out.append((k, vals, k, k - 1))
+    for k in range(top, 0, -1):
+        for vals, probe_depth in (
+            (_by_depth(rules.exact, k), k),
+            (_by_depth(rules.wildcards, k - 1), k - 1),
+        ):
+            if vals and probe_depth >= 1:
+                out.append((k, vals, probe_depth, k))
+    return out
+
+
 def public_suffix_len_expr(host: Column, rules: PslRules) -> Column:
     """Label count of `host`'s public suffix under `rules` (int column).
 
-    PSL algorithm as ONE CaseWhen scanned longest-rule-first; per depth
-    k the precedence is exception (ps = k-1) > exact (ps = k) >
-    wildcard-parent (ps = k); default rule '*' -> 1. Labels are fetched
-    with F.get (0-based, NULL out of range — ANSI-safe where element_at
-    with an out-of-range negative index would abort the stage); a
-    too-short host's concat_ws skips the NULLs and produces a string
-    with fewer dots, which can never equal a depth-k rule, and the
-    n >= k conjunct guards the semantics besides."""
+    PSL algorithm as ONE CaseWhen (_psl_arms): any matching exception
+    prevails (ps = depth - 1, longest exception first), then per depth
+    k, longest first, exact (ps = k) > wildcard-parent (ps = k); default
+    rule '*' -> 1. Labels are fetched with F.get (0-based, NULL out of
+    range — ANSI-safe where element_at with an out-of-range negative
+    index would abort the stage); a too-short host's concat_ws skips the
+    NULLs and produces a string with fewer dots, which can never equal a
+    depth-k rule, and the n >= k conjunct guards the semantics besides."""
     labels = F.split(host, r"\.")
     n = F.size(labels)
 
@@ -133,22 +156,13 @@ def public_suffix_len_expr(host: Column, rules: PslRules) -> Column:
         )
 
     expr = None
-    for k in range(rules.max_ps_labels, 0, -1):
-        # per depth k: exception (probe depth k, ps k-1) beats exact
-        # (probe k, ps k) beats wildcard (probe the k-1 PARENT, ps k)
-        for vals, probe_depth, ps in (
-            (_by_depth(rules.exceptions, k), k, k - 1),
-            (_by_depth(rules.exact, k), k, k),
-            (_by_depth(rules.wildcards, k - 1), k - 1, k),
-        ):
-            if not vals or ps < 1 or probe_depth < 1:
-                continue
-            cond = (n >= k) & suffix(probe_depth).isin(*vals)
-            expr = (
-                F.when(cond, F.lit(ps))
-                if expr is None
-                else expr.when(cond, F.lit(ps))
-            )
+    for k, vals, probe_depth, ps in _psl_arms(rules):
+        cond = (n >= k) & suffix(probe_depth).isin(*vals)
+        expr = (
+            F.when(cond, F.lit(ps))
+            if expr is None
+            else expr.when(cond, F.lit(ps))
+        )
     base = F.lit(1)
     return (expr.otherwise(base) if expr is not None else base).cast("int")
 
@@ -189,21 +203,13 @@ def _sql_suffix(parts: str, k: int) -> str:
 def public_suffix_len_sql(parts: str, rules: PslRules) -> str:
     """DuckDB CASE expression for the public-suffix label count, over a
     `parts` list expression (string_split(host, '.')). Mirrors
-    public_suffix_len_expr rule-for-rule."""
-    arms = []
-    for k in range(rules.max_ps_labels, 0, -1):
-        for vals, ps, depth in (
-            (_by_depth(rules.exceptions, k), k - 1, k),
-            (_by_depth(rules.exact, k), k, k),
-            (_by_depth(rules.wildcards, k - 1), k, k - 1),
-        ):
-            if not vals or ps < 1:
-                continue
-            arms.append(
-                f"WHEN len({parts}) >= {k} AND "
-                f"({_sql_suffix(parts, depth)}) IN ({_sql_in(vals)}) "
-                f"THEN {ps}"
-            )
+    public_suffix_len_expr arm-for-arm (_psl_arms)."""
+    arms = [
+        f"WHEN len({parts}) >= {k} AND "
+        f"({_sql_suffix(parts, depth)}) IN ({_sql_in(vals)}) "
+        f"THEN {ps}"
+        for k, vals, depth, ps in _psl_arms(rules)
+    ]
     return "CASE " + " ".join(arms) + " ELSE 1 END"
 
 

@@ -202,24 +202,6 @@ def _hashed_gram_buckets_kernel(
     return docs.select(id_col, text_col).mapInPandas(gen, schema=out_schema)
 
 
-def _bucket_counts(bucket_frame: DataFrame) -> DataFrame:
-    return (
-        bucket_frame.select(F.explode("buckets").alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-
-
-def _collected_bucket_counts(bucket_frame: DataFrame, buckets: int) -> list[int]:
-    """Dense count vector over [0, buckets) from one map-combined
-    aggregate + one <= buckets-row collect (fit PARAMETERS, never data
-    rows — the IVF-centroid precedent)."""
-    cnts = [0] * buckets
-    for r in _bucket_counts(bucket_frame).collect():
-        cnts[r["bucket"]] = r["c"]
-    return cnts
-
-
 def fit_logratio_values_flagged(
     bucket_frame: DataFrame,
     is_target: Column,
@@ -227,9 +209,7 @@ def fit_logratio_values_flagged(
 ) -> list[float]:
     """fit_logratio_values over ONE featurized frame carrying both
     corpora, split by the ``is_target`` predicate — both count vectors
-    come back from a single explode + (flag, bucket) aggregate + one
-    <= 2B-row collect (half the fit's job count vs two separate count
-    jobs; the arithmetic is identical)."""
+    come back from one _flagged_count_vectors job."""
     import math
 
     ct, cr = _flagged_count_vectors(
@@ -243,12 +223,14 @@ def fit_logratio_values_flagged(
 
 
 def _flagged_count_vectors(flagged: DataFrame, buckets: int):
-    """(target_counts, raw_counts) uint64 vectors from a (_t bool,
-    buckets array<int>) frame: each TASK bincounts its partition locally
-    and ships back two <= buckets-long vectors — a map-only job whose
-    collect is O(tasks * buckets) parameter rows, replacing a
-    corpus-sized explode + (flag, bucket) shuffle (measured ~2.5 s of
-    pure small-task scheduling per fit at local[32])."""
+    """(target_counts, raw_counts) int64 vectors from a (_t bool,
+    buckets array<int>) frame in ONE job: each task bincounts its
+    partition locally into two <= buckets-long vectors (map-only — no
+    corpus-sized explode + (flag, bucket) shuffle, which cost ~2.5 s of
+    pure small-task scheduling per fit at local[32]), and the per-task
+    vectors are summed inside Spark on one reducer keyed by the flag, so
+    the driver receives exactly 2 x buckets values, never
+    O(tasks x buckets)."""
     import numpy as np
 
     def gen(batches):
@@ -274,12 +256,14 @@ def _flagged_count_vectors(flagged: DataFrame, buckets: int):
                 {"t": [True, False], "c": [acc[True], acc[False]]}
             )
 
-    ct = np.zeros(buckets, dtype=np.int64)
-    cr = np.zeros(buckets, dtype=np.int64)
-    for r in flagged.mapInPandas(gen, schema="t boolean, c array<long>").collect():
-        tgt = ct if r["t"] else cr
-        tgt += np.asarray(r["c"], dtype=np.int64)
-    return ct, cr
+    sums = dict(
+        flagged.mapInPandas(gen, schema="t boolean, c array<long>")
+        .rdd.map(lambda r: (r["t"], np.asarray(r["c"], dtype=np.int64)))
+        .reduceByKey(np.add, numPartitions=1)
+        .collect()
+    )
+    zero = np.zeros(buckets, dtype=np.int64)
+    return sums.get(True, zero), sums.get(False, zero)
 
 
 def fit_logratio_values(
@@ -288,23 +272,19 @@ def fit_logratio_values(
     buckets: int = 10_000,
 ) -> list[float]:
     """The DSIR log-ratio PARAMETER VECTOR over the full bucket spine:
-    logratio[b] = ln((ct+1)/(tt+B)) - ln((cr+1)/(tr+B)). One count
-    aggregate + collect per corpus side, the Laplace arithmetic in plain
+    logratio[b] = ln((ct+1)/(tt+B)) - ln((cr+1)/(tr+B)). Both count
+    vectors come from one flagged pass over the two frames
+    (fit_logratio_values_flagged), the Laplace arithmetic in plain
     driver python — the round-6 DataFrame spine (two joins, a totals
     aggregate and a crossJoin over <= B rows) re-ran both corpus count
     passes per consumer and scheduled five extra jobs for what is B
     divisions. (libm vs JVM ln differ at most in the last ulp —
     orders of magnitude inside every caller's 4-decimal rounding, and
     the DuckDB oracle's ln is a third implementation already.)"""
-    import math
-
-    ct = _collected_bucket_counts(target_buckets, buckets)
-    cr = _collected_bucket_counts(raw_buckets, buckets)
-    tt, tr = float(sum(ct) + buckets), float(sum(cr) + buckets)
-    return [
-        math.log((c + 1) / tt) - math.log((r + 1) / tr)
-        for c, r in zip(ct, cr)
-    ]
+    flagged = target_buckets.select(F.lit(True).alias("_t"), "buckets").unionByName(
+        raw_buckets.select(F.lit(False).alias("_t"), "buckets")
+    )
+    return fit_logratio_values_flagged(flagged, F.col("_t"), buckets)
 
 
 def fit_dsir_logratio_buckets(

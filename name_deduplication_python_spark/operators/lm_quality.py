@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dsir import _bucket_counts, hashed_gram_buckets
+from .dsir import hashed_gram_buckets
 
 
 def fit_lm_values(ref_buckets: DataFrame, buckets: int = 4096) -> list[float]:

@@ -203,9 +203,8 @@ def candidate_pairs_two_table(
     """Two-relation linkage analog of J3
     (/root/reference/analysis_engine.py:439-449): candidates across two
     corpora sharing a band bucket. No i<j constraint — sides are meant to
-    be distinct; the src != dst guard makes a caller error (same id on
-    both sides, e.g. a replayed streaming epoch reading its own keys back)
-    degrade to duplicate pairs instead of self-edges."""
+    be distinct; the src != dst guard makes a caller error (the same id on
+    both sides) degrade to duplicate pairs instead of self-edges."""
     a = keys_a.select("bh", F.col(id_col).alias("src"))
     b = keys_b.select("bh", F.col(id_col).alias("dst"))
     return (

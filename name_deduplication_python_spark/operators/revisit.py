@@ -6,7 +6,7 @@ Common-Crawl-style corpora carry many snapshots of the same url
 wants to know, per url, whether a revisit is a trivial re-serve (keep one
 version) or a real content update (both versions are distinct training
 signal). The batch streaming store answers "which version is latest"
-(streaming/incremental.py _latest_only); this operator answers "how
+(streaming/incremental.py _pruned_store_keys); this operator answers "how
 different were the versions" — the revisit analog of the reference's
 already-matched drift check (/root/reference/auditor.py remark
 consistency, R4), re-expressed over crawl time instead of report runs.

@@ -27,21 +27,17 @@ from pyspark.sql import functions as F
 
 from .. import DEFAULT_CONFIG
 from ..operators.extract import extract_stage
-from ..operators.lsh import band_keys, candidate_pairs, candidate_pairs_two_table
+from ..operators.lsh import band_keys, candidate_pairs
 from ..operators.signatures import signature_stage
 from ..operators.verify import verify_stage
 from ..schemas import WEB_PAGES
 
 
 class IncrementalDedup:
-    # the band-key store is hive-partitioned by bp = pmod(bh, N) inside
-    # each epoch dir, so a micro-batch's store read can PRUNE to the
-    # partitions its own band hashes land in (PartitionFilters at the
-    # file listing — untouched store files are never opened)
-    STORE_KEY_PARTS = 64
-    # an epoch with no band keys (every doc empty) writes no bp= file, so
-    # the key store is read with its schema, never inferred from files
-    BAND_KEYS_SCHEMA = "url string, bh bigint, epoch int, bp int"
+    # an epoch dir can hold no key file (compact_store recreates an epoch
+    # whose rows were all superseded as a bare marker dir), so the key
+    # store is read with its schema, never inferred from files
+    BAND_KEYS_SCHEMA = "url string, bh bigint, epoch int"
 
     def __init__(self, spark: SparkSession, store_dir: str, config: dict | None = None):
         self.spark = spark
@@ -56,7 +52,7 @@ class IncrementalDedup:
         os.makedirs(os.path.join(store_dir, "signatures"), exist_ok=True)
         os.makedirs(os.path.join(store_dir, "band_keys"), exist_ok=True)
         os.makedirs(os.path.join(store_dir, "edges"), exist_ok=True)
-        self._refuse_flat_band_store()
+        self._refuse_bp_band_store()
 
     def _recover_compaction(self) -> None:
         """Complete or discard a compact_store swap interrupted by a crash.
@@ -94,106 +90,20 @@ class IncrementalDedup:
                 os.rename(tmp, root)
             shutil.rmtree(old)
 
-    def _refuse_flat_band_store(self) -> None:
-        """Band-key epochs are hive-partitioned by bp (see
-        STORE_KEY_PARTS). An epoch written flat by the pre-bp layout
-        cannot be pruned by partition, and mixing it with bp epochs breaks
-        Spark's partition discovery — refuse such a store."""
+    def _refuse_bp_band_store(self) -> None:
+        """Band-key epochs are plain parquet. An epoch written by the
+        older layout, hive-partitioned by bp = pmod(bh, 64), breaks
+        Spark's partition discovery next to plain epochs (conflicting
+        directory structures) — refuse such a store; there is no
+        dual-layout reader."""
         bk = os.path.join(self.store, "band_keys")
         for e in sorted(os.listdir(bk)):
             p = os.path.join(bk, e)
-            if os.path.isdir(p) and any(n.endswith(".parquet") for n in os.listdir(p)):
+            if os.path.isdir(p) and any(n.startswith("bp=") for n in os.listdir(p)):
                 raise ValueError(
-                    f"band-key store epoch {p} uses the legacy flat layout "
-                    "(no bp= partitions); re-ingest the corpus into a new store"
+                    f"band-key store epoch {p} uses the bp= partitioned layout; "
+                    "re-ingest the corpus into a new store"
                 )
-
-    @staticmethod
-    def _pruned_store_sigs(old_sigs: DataFrame, pairs: DataFrame) -> DataFrame:
-        """Store signatures restricted to docs appearing in this epoch's
-        candidate pairs. Cross pairs carry store docs on the dst side only
-        (candidate_pairs_two_table puts new on src), but the semi-join is
-        run over BOTH sides so the pruning stays correct if a caller feeds
-        symmetric pairs; ids are 8-byte keys, payloads shuffle only for
-        touched docs. Round-2 shipped the WHOLE store's 512 B payloads into
-        the verify join every micro-batch — O(corpus) per epoch. The
-        ``epoch`` column is RETAINED for the re-crawl latest-version filter
-        (_latest_only); callers drop it before verify."""
-        touched = (
-            pairs.select(F.col("src").alias("url"))
-            .union(pairs.select(F.col("dst").alias("url")))
-            .distinct()
-        )
-        return old_sigs.join(touched, "url", "left_semi")
-
-    def _latest_only(
-        self, df: DataFrame, upto_epoch: int, candidates: DataFrame
-    ) -> DataFrame:
-        """Re-crawl semantics (latest-epoch-wins, VERDICT r4 #4): a url
-        crawled in several epochs has one signature/band-key row set PER
-        epoch in the store; unfiltered reads would pair and verify against
-        STALE versions (and the verify join would fan out per version).
-        Keep only rows belonging to each url's LATEST store epoch
-        < upto_epoch.
-
-        The url -> max(epoch) map is derived from the signatures store's
-        (url, epoch) projection — epoch is the hive partition column and
-        url a single string column, so the scan reads one column and never
-        touches the 512 B payloads — restricted FIRST to ``candidates``
-        (O(touched) urls), so the per-epoch shuffle stays O(touched).
-        Crucially the max is computed over the url's FULL store history,
-        not the bucket-pruned subset: a url whose latest version changed
-        text (different buckets) must yield NO rows when only its stale
-        version's buckets collide with the batch — filtering the pruned
-        subset by its own max epoch would resurrect the stale version.
-        A 10^12-doc deployment replaces the projection scan with a
-        compacted current-version pointer table maintained per epoch; the
-        filter contract is identical."""
-        cand = candidates.select("url").distinct()
-        latest = (
-            self._read_store("signatures")
-            .where(F.col("epoch") < upto_epoch)
-            .select("url", "epoch")
-            .join(F.broadcast(cand), "url", "left_semi")
-            .groupBy("url")
-            .agg(F.max("epoch").alias("_last_epoch"))
-        )
-        return (
-            df.join(F.broadcast(latest), "url")
-            .where(F.col("epoch") == F.col("_last_epoch"))
-            .drop("_last_epoch")
-        )
-
-    def _pruned_store_keys(
-        self, old_keys: DataFrame, new_keys: DataFrame
-    ) -> DataFrame:
-        """Store band keys restricted to the BATCH's bucket set — the key
-        side of the O(touched) contract (round 3 fixed the verify-payload
-        side; the key join still shuffled the ENTIRE store by bh every
-        micro-batch: same complexity class as the round-2 finding, smaller
-        constant).
-
-        Two pruning layers, both O(batch) to compute:
-          1. partition pruning: the batch's distinct bp = pmod(bh, N)
-             values become a static IN filter on the store's partition
-             column — untouched store FILES are skipped at listing time
-             (a small crawl batch touches few of the N=64 partitions);
-          2. row pruning: a broadcast left-semi join on the batch's
-             distinct bh drops non-colliding rows inside the scan stage —
-             the store is never shuffled; only rows in TOUCHED buckets
-             reach the candidate join's exchange.
-        """
-        batch_bh = new_keys.select("bh").distinct()
-        parts = [
-            r.bp
-            for r in batch_bh.select(
-                F.pmod("bh", F.lit(self.STORE_KEY_PARTS)).alias("bp")
-            )
-            .distinct()
-            .collect()
-        ]
-        old_keys = old_keys.where(F.col("bp").isin(parts)).drop("bp")
-        return old_keys.join(F.broadcast(batch_bh), "bh", "left_semi")
 
     def _read_store(self, sub: str) -> DataFrame:
         reader = self.spark.read
@@ -201,18 +111,71 @@ class IncrementalDedup:
             reader = reader.schema(self.BAND_KEYS_SCHEMA)
         return reader.parquet(os.path.join(self.store, sub))
 
+    @staticmethod
+    def _pruned_store_keys(
+        old_keys: DataFrame, old_sigs: DataFrame, new_keys: DataFrame, new_urls: DataFrame
+    ) -> DataFrame:
+        """Store band keys ``(url, bh, epoch)`` that may pair with this
+        batch, read in O(batch + touched buckets) from the epoch-filtered
+        store tables ``old_keys`` and ``old_sigs``:
+
+          1. row pruning: a broadcast left-semi join on the batch's bh set
+             drops non-colliding rows inside the scan — the store is never
+             shuffled; only rows in TOUCHED buckets reach the candidate
+             join's exchange;
+          2. re-crawl, latest-epoch-wins (VERDICT r4 #4): a url in THIS
+             batch (``new_urls``) supersedes all its store versions
+             (broadcast anti-join), and of a url's other store versions
+             only its latest may pair.
+
+        The url -> latest-epoch map comes from the signature store's
+        (url, epoch) projection (epoch is the hive partition column, so
+        the scan never touches the 512 B payloads), restricted first to
+        the pruned keys' urls, so its shuffle stays O(touched). The max
+        is taken over the url's FULL store history, not the bucket-pruned
+        subset: a url whose latest version changed text (different
+        buckets) must yield NO rows when only its stale version's buckets
+        collide with the batch. The map is computed once per batch: the
+        verify side fetches payloads by the (url, epoch) these keys carry
+        (_store_sigs_for). A 10^12-doc deployment replaces the projection
+        scan with a compacted current-version pointer table maintained
+        per epoch; the contract is identical."""
+        keys = old_keys.join(F.broadcast(new_keys.select("bh")), "bh", "left_semi").join(
+            F.broadcast(new_urls), "url", "left_anti"
+        )
+        latest = (
+            old_sigs.select("url", "epoch")
+            .join(F.broadcast(keys.select("url")), "url", "left_semi")
+            .groupBy("url")
+            .agg(F.max("epoch").alias("epoch"))
+        )
+        return keys.join(F.broadcast(latest), ["url", "epoch"], "left_semi")
+
+    @staticmethod
+    def _store_sigs_for(old_sigs: DataFrame, cross: DataFrame) -> DataFrame:
+        """Store signatures of exactly the (dst, epoch) versions in this
+        batch's cross pairs — the verify join pulls the 512 B payloads of
+        touched docs only, O(batch + touched docs) per epoch, not
+        O(corpus). Every dst is a store url at its latest epoch and never
+        a batch url (_pruned_store_keys), so no re-crawl filter is needed
+        here."""
+        fetch = cross.select(F.col("dst").alias("url"), "epoch")
+        return old_sigs.join(F.broadcast(fetch), ["url", "epoch"], "left_semi").drop(
+            "epoch"
+        )
+
     def process_batch(self, pages: DataFrame, epoch_id: int) -> None:
         """foreachBatch body — also callable directly for unit tests.
 
-        Band keys are PERSISTED per epoch (store/band_keys/epoch=N,
-        hive-partitioned by bp = pmod(bh, STORE_KEY_PARTS)) and the new
-        batch's keys join against the stored key table through TWO pruning
-        layers (see _pruned_store_keys): partition pruning skips untouched
-        store files at listing time, and a broadcast semi-join on the
-        batch's bh set drops non-colliding rows inside the scan — the
-        store is never shuffled; per-epoch shuffle cost is O(batch +
-        touched buckets). (Round 1 recomputed band_keys over the whole
-        corpus per epoch; round 3 still shuffled the full key store.)
+        Band keys are PERSISTED per epoch as plain parquet
+        (store/band_keys/epoch=N), and the batch's keys join against the
+        key store after _pruned_store_keys cut it to the batch's buckets
+        inside the scan — the store is never shuffled; per-epoch shuffle
+        cost is O(batch + touched buckets). (Round 1 recomputed band_keys
+        over the whole corpus per epoch; round 3 still shuffled the full
+        key store.) The cross pairs carry the store side's epoch, and the
+        verify payloads are fetched by that (url, epoch) — see
+        _store_sigs_for.
 
         Replay exactness: all store reads are filtered to ``epoch <
         epoch_id``. A crash after the band_keys/epoch=N write but before
@@ -226,11 +189,6 @@ class IncrementalDedup:
         committed (_committed_epochs) — the first epoch, and its replay
         after a crash before the marker. Any other batch reads the store,
         and a store that fails to read raises: it never reads as cold.
-
-        Verify-side pruning: the store's 512 B minhash payloads are pulled
-        ONLY for docs that actually appear in this epoch's candidate pairs
-        (a semi-join on the 8-byte ids) — per-epoch shuffle cost is
-        O(batch + touched docs), not O(corpus). See _pruned_store_sigs.
         """
         c = self.cfg
         sig_epoch = os.path.join(self.store, "signatures", f"epoch={epoch_id}")
@@ -253,37 +211,25 @@ class IncrementalDedup:
         all_sigs = new_sigs
         # cold-store rule (see docstring)
         if any(e < epoch_id for e in self._committed_epochs()):
-            new_urls = new_sigs.select("url")
+            old_sigs = self._read_store("signatures").where(F.col("epoch") < epoch_id)
             old_keys = self._pruned_store_keys(
                 self._read_store("band_keys").where(F.col("epoch") < epoch_id),
+                old_sigs,
                 new_keys,
+                new_sigs.select("url"),
             )
-            # re-crawl guards on the PAIR-GENERATION side: (a) a url in
-            # THIS batch supersedes all its store versions — anti-join
-            # them out (the batch url set is small; broadcast); (b) of a
-            # url's remaining store versions only the latest may pair
-            # (_latest_only)
-            old_keys = old_keys.join(F.broadcast(new_urls), "url", "left_anti")
-            old_keys = self._latest_only(old_keys, epoch_id, old_keys)
-            cross = candidate_pairs_two_table(new_keys, old_keys)
-            pairs = pairs.unionByName(cross).distinct()
-            # pairs are reused twice (touched-id semi-join + verify) and are
-            # O(batch): checkpoint so the candidate join runs once
-            pairs = pairs.localCheckpoint()
-            old_sigs = self._read_store("signatures").where(
-                F.col("epoch") < epoch_id
+            # new on src, store on dst with its epoch; the anti-join on
+            # batch urls keeps src != dst and the cross pairs disjoint
+            # from the self-join's. Checkpointed: O(batch), read twice.
+            cross = (
+                new_keys.select("bh", F.col("url").alias("src"))
+                .join(old_keys.select("bh", F.col("url").alias("dst"), "epoch"), "bh")
+                .select("src", "dst", "epoch")
+                .distinct()
+                .localCheckpoint()
             )
-            pruned_sigs = self._pruned_store_sigs(old_sigs, pairs)
-            # same two re-crawl guards on the verify payload side (a stale
-            # version reaching the verify join would fan out the url join
-            # AND score against superseded text)
-            pruned_sigs = pruned_sigs.join(
-                F.broadcast(new_urls), "url", "left_anti"
-            )
-            pruned_sigs = self._latest_only(
-                pruned_sigs, epoch_id, pruned_sigs
-            ).drop("epoch")
-            all_sigs = new_sigs.unionByName(pruned_sigs)
+            pairs = pairs.unionByName(cross.drop("epoch"))
+            all_sigs = new_sigs.unionByName(self._store_sigs_for(old_sigs, cross))
 
         edges = verify_stage(
             pairs,
@@ -296,15 +242,9 @@ class IncrementalDedup:
         edges.write.mode("overwrite").parquet(
             os.path.join(self.store, "edges", f"epoch={epoch_id}")
         )
-        # keys land hive-partitioned by bp inside the epoch dir so future
-        # epochs' reads prune to their own bucket partitions (see
-        # _pruned_store_keys); repartition keeps one file per bp partition
-        # instead of tasks x partitions small files
-        bk_epoch = os.path.join(self.store, "band_keys", f"epoch={epoch_id}")
-        keyed = new_keys.withColumn("bp", F.pmod("bh", F.lit(self.STORE_KEY_PARTS)))
-        keyed.repartition(F.col("bp")).write.mode("overwrite").partitionBy(
-            "bp"
-        ).parquet(bk_epoch)
+        new_keys.write.mode("overwrite").parquet(
+            os.path.join(self.store, "band_keys", f"epoch={epoch_id}")
+        )
         # signatures written LAST: their _SUCCESS is the epoch's idempotence
         # marker, so a crash mid-epoch replays the whole epoch (overwrite
         # mode makes the replay exact)
@@ -327,13 +267,13 @@ class IncrementalDedup:
         """Offline store maintenance (run between epochs, stream stopped):
         physically drop superseded version rows — for each url keep only
         its LATEST committed signature/band-key epoch. This materializes
-        the latest-epoch-wins contract the read paths (_latest_only,
+        the latest-epoch-wins contract the read paths (_pruned_store_keys,
         edges(current_only)) already enforce logically, so re-crawl-heavy
         stores stop growing O(crawls) and revert to O(corpus).
 
         Semantics are preserved exactly:
           - epoch VALUES are kept (rows move nowhere; stale rows vanish),
-            so `epoch < epoch_id` replay filters, _latest_only, and
+            so `epoch < epoch_id` replay filters, _pruned_store_keys, and
             edges(current_only) read identically before/after;
           - every committed epoch keeps its directory + _SUCCESS marker
             (recreated empty when all its rows were superseded), so epoch
@@ -378,16 +318,13 @@ class IncrementalDedup:
             # this to a temp table instead.
             .localCheckpoint()
         )
-        for sub, part_cols in (
-            ("signatures", ["epoch"]),
-            ("band_keys", ["epoch", "bp"]),
-        ):
+        for sub in ("signatures", "band_keys"):
             root = os.path.join(self.store, sub)
             df = self._read_store(sub).where(F.col("epoch").isin(committed))
             stats[f"{sub}_rows_before"] = df.count()
             kept = df.join(latest, ["url", "epoch"], "left_semi")
             tmp = root + "__compact"
-            kept.write.mode("overwrite").partitionBy(*part_cols).parquet(tmp)
+            kept.write.mode("overwrite").partitionBy("epoch").parquet(tmp)
             # finish the rewrite IN PLACE before the swap: epoch marker
             # dirs are recreated inside tmp, so tmp is a complete store
             # the moment the first rename runs (recovery invariant).

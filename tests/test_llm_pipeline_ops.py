@@ -422,6 +422,49 @@ def test_dsir_scoring_plan_is_python_free_and_broadcasts(spark, dsir_corpus):
     assert "aggregate(transform(" in plan   # the literal-lookup fold
 
 
+def test_dsir_count_vectors_reduced_in_spark_at_64_partitions(spark):
+    """The fit's two count vectors are summed inside Spark (the driver
+    receives 2 x B values, not one pair per task): at 64 input partitions
+    they equal a numpy bincount, and the two-frame fit equals the flagged
+    fit on the same rows."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from name_deduplication_python_spark.operators.dsir import (
+        _flagged_count_vectors,
+        fit_logratio_values,
+        fit_logratio_values_flagged,
+    )
+
+    B = 97
+    rng = np.random.default_rng(5)
+    rows = []
+    for i in range(400):
+        n = int(rng.integers(0, 12))
+        arr = None if i % 37 == 0 else rng.integers(0, B, size=n).tolist()
+        rows.append((i, i % 3 == 0, arr))
+    df = spark.createDataFrame(
+        rows, "id long, is_t boolean, buckets array<int>"
+    ).repartition(64)
+    assert df.rdd.getNumPartitions() == 64
+
+    def ref(flag):
+        arrs = [np.asarray(a, dtype=np.int64) for _, t, a in rows if t == flag and a]
+        return np.bincount(np.concatenate(arrs), minlength=B)
+
+    ct, cr = _flagged_count_vectors(
+        df.select(F.col("is_t").alias("_t"), "buckets"), B
+    )
+    assert ct.tolist() == ref(True).tolist()
+    assert cr.tolist() == ref(False).tolist()
+
+    target = df.where("is_t").select("id", "buckets")
+    raw = df.where("not is_t").select("id", "buckets")
+    assert fit_logratio_values(target, raw, B) == fit_logratio_values_flagged(
+        df, F.col("is_t"), B
+    )
+
+
 # --------------------------------------------------------------------------
 # flag_contaminated_fuzzy — NearDup train/eval decontamination
 # --------------------------------------------------------------------------

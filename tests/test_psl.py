@@ -220,3 +220,31 @@ def test_randomized_hosts_duckdb_matches_reference():
     got = dict(con.execute(sql).fetchall())
     for h in hosts:
         assert got[h] == _ref_registered_domain(h, rules), h
+
+
+def test_exception_prevails_over_a_longer_exact_rule(spark):
+    """PSL spec: if any matching rule is an exception, it prevails — even
+    over a longer exact rule. With {a.www.ck, !www.ck, *.ck} the host
+    x.a.www.ck has public suffix ck (ps = 1, registrable www.ck), not
+    a.www.ck; both the Spark expression and the DuckDB mirror agree with
+    the reference."""
+    rules = parse_psl("a.www.ck\n!www.ck\n*.ck\n")
+    hosts = ["x.a.www.ck", "a.www.ck", "www.ck", "x.www.ck", "shop.ck", "x.shop.ck"]
+    want = {h: _ref_registered_domain(h, rules) for h in hosts}
+    assert _ref_public_suffix_len("x.a.www.ck", rules) == 1
+    assert want["x.a.www.ck"] == "www.ck"
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE hosts(host VARCHAR)")
+    con.executemany("INSERT INTO hosts VALUES (?)", [(h,) for h in hosts])
+    sql = f"SELECT host, {registered_domain_sql('host', rules)} AS dom FROM hosts"
+    assert dict(con.execute(sql).fetchall()) == want
+
+    df = spark.createDataFrame([(h,) for h in hosts], ["host"])
+    got = {
+        r["host"]: r["dom"]
+        for r in df.select(
+            "host", registered_domain_expr(F_col("host"), rules).alias("dom")
+        ).collect()
+    }
+    assert got == want
