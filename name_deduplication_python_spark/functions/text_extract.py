@@ -20,23 +20,38 @@ Extraction spec (THE contract, mirrored by the pure-python oracle in
      and finally &amp; -> &   (last, so &amp;lt; -> &lt; stays literal)
   5. collapse runs of [ \\t\\r\\n] to one space and strip ends
 
-Two implementations:
-  * ``extract_series``  — pandas-vectorized (cython str ops, Arrow batch)
-    used inside the mapInArrow/pandas-UDF stage. No per-row Python.
-  * ``extract_text_oracle`` — independent plain-Python reference used by
-    tests to assert byte identity.
+One implementation plus its oracle: ``extract_text_expr`` (native
+Catalyst expressions — codegen, no Python worker — used by the stage) and
+``extract_text_oracle`` (plain Python, the tests' byte-identity reference).
+
+The Java patterns spell out Python's meaning where the dialects differ:
+  * decode: ``make_valid_utf8`` gives one U+FFFD per maximal invalid
+    subpart, as Python does (legacy ``decode``: one for \\xed\\xa0\\x80);
+  * Python's ``\\s`` and ``str.strip`` use the ``str.isspace`` set
+    (White_Space plus \\x1c-\\x1f): the Java forms list it, as a class in
+    the closing tag and as ``btrim``'s set (``trim`` strips spaces only;
+    a regex strip would scan the whole text, ``btrim`` reads the ends);
+  * ``\\b`` after a tag name: Python's word class is exactly
+    [\\p{L}\\p{N}_]; Java's also holds combining marks and connector
+    punctuation and lacks No digits such as U+00B2;
+  * an IGNORECASE back-reference compares simple lowercases in Python
+    (U+017F long s closes only U+017F, U+0131 dotless i only U+0131)
+    but folds through uppercase in Java, so the Java pattern is
+    case-sensitive and lists every lowercase-class spelling of each tag
+    name (8 in all) instead of ``\\1``.
 """
 
 from __future__ import annotations
 
+import itertools
 import re
 
-import pandas as pd
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 # one leftmost-first alternation pass for all three block kinds (spec
 # step 2): a third of the full-document regex scans of three sequential
-# passes; oracle and vectorized path share this exact regex so the
-# byte-identity contract holds by construction
+# passes
 _BLOCK_RE = re.compile(
     r"<(script|style|title)\b.*?</\1\s*>", re.IGNORECASE | re.DOTALL
 )
@@ -53,6 +68,30 @@ _ENTITIES = [
     ("&amp;", "&"),
 ]
 
+# Java forms of _BLOCK_RE and str.strip (module docstring). _SPACES: the
+# str.isspace characters. _FOLDS: the letters a tag-name letter matches
+# under IGNORECASE, by lowercase class
+_SPACES = "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680\u2028\u2029\u202f\u205f\u3000" + "".join(
+    map(chr, range(0x2000, 0x200B))
+)
+_FOLDS = {"s": ("[sS]", "ſ"), "i": ("[iIİ]", "ı")}
+
+
+def _spellings(tag: str) -> list[str]:
+    letters = (_FOLDS.get(c, (f"[{c}{c.upper()}]",)) for c in tag)
+    return ["".join(p) for p in itertools.product(*letters)]
+
+
+_JAVA_BLOCK = (
+    "(?s)<(?:"
+    + "|".join(
+        rf"{n}(?![\p{{L}}\p{{N}}_]).*?</{n}"
+        for tag in ("script", "style", "title")
+        for n in _spellings(tag)
+    )
+    + f")[{_SPACES}]*>"
+)
+
 
 def extract_text_oracle(html: bytes | None) -> str | None:
     """Plain-Python oracle for the extraction spec (tests only)."""
@@ -67,22 +106,16 @@ def extract_text_oracle(html: bytes | None) -> str | None:
     return s
 
 
-def extract_series(html: pd.Series) -> pd.Series:
-    """Vectorized extraction over an Arrow batch of html bytes.
-
-    pandas .str ops run in C per batch — this is the hot path used by the
-    extraction pandas UDF; zero per-row Python.
-    """
-    mask = html.notna()
-    s = html[mask].str.decode("utf-8", errors="replace")
-    s = s.str.replace(_BLOCK_RE, " ", regex=True)
-    s = s.str.replace(_TAG_RE, " ", regex=True)
+def extract_text_expr(html: Column) -> Column:
+    """The extraction spec as one native expression over binary html
+    (null stays null)."""
+    s = F.make_valid_utf8(html.cast("string"))
+    s = F.regexp_replace(s, _JAVA_BLOCK, " ")
+    s = F.regexp_replace(s, _TAG_RE.pattern, " ")
     for pat, rep in _ENTITIES:
-        s = s.str.replace(pat, rep, regex=False)
-    s = s.str.replace(_WS_RE, " ", regex=True).str.strip()
-    out = pd.Series([None] * len(html), index=html.index, dtype=object)
-    out[mask] = s
-    return out
+        s = F.replace(s, F.lit(pat), F.lit(rep))
+    s = F.regexp_replace(s, _WS_RE.pattern, " ")
+    return F.btrim(s, F.lit(_SPACES))
 
 
 def wrap_html(text: str, title: str = "", lang: str = "en") -> bytes:

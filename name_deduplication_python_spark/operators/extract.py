@@ -2,38 +2,28 @@
 
 Analog of the reference's one-time per-row normalization pass
 (_precompute_dataframe, /root/reference/analysis_engine.py:90-106):
-derive the canonical text ONCE before any pairwise work. Vectorized
-pandas UDF over Arrow batches — no per-row Python (input_hint mandate).
+derive the canonical text ONCE before any pairwise work. The spec runs as
+native Catalyst expressions (functions.text_extract.extract_text_expr):
+whole-stage codegen, no Python worker and no Arrow hand-off.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
-from ..functions.text_extract import extract_series
-
-
-@pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return extract_series(html)
+from ..functions.text_extract import extract_text_expr
 
 
 def extract_stage(pages: DataFrame) -> DataFrame:
     """Fill missing ``text`` from ``html`` (byte-deterministic spec).
 
-    Split on ``text.isNull()`` and run the UDF ONLY on the null side, then
-    union. A single ``when(isnotnull(text), text).otherwise(udf(html))``
-    projection does NOT skip the UDF: Catalyst extracts Python UDFs into
-    an ArrowEvalPython node that evaluates unconditionally before the CASE
-    (verified in the round-1 physical plan) — on a corpus where most rows
-    already carry text that wastes nearly the whole stage. With the split,
-    the populated side is a pure native projection whose scan prunes the
-    html column entirely (ReadSchema excludes it), and the UDF side's scan
-    pushes ``isnull(text)`` down to parquet.
+    Split on ``text.isNull()`` and extract ONLY on the null side, then
+    union: the populated side is a plain projection whose scan prunes the
+    html column entirely (ReadSchema excludes it), and the extracting
+    side's scan pushes ``isnull(text)`` down to parquet. A single
+    ``when(isnotnull(text), text).otherwise(...)`` projection would read
+    html for every row.
     """
     have_text = pages.where(F.col("text").isNotNull()).select(
         "url", "warc_ts", "text", "lang"
@@ -41,7 +31,7 @@ def extract_stage(pages: DataFrame) -> DataFrame:
     need_text = pages.where(F.col("text").isNull()).select(
         "url",
         "warc_ts",
-        extract_text_udf(F.col("html")).alias("text"),
+        extract_text_expr(F.col("html")).alias("text"),
         "lang",
     )
     return have_text.unionByName(need_text)

@@ -38,6 +38,7 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from . import DEFAULT_CONFIG
 from .operators.audit import audit_edges
@@ -291,10 +292,13 @@ class DedupPipeline:
         else:
             df.write.mode("overwrite").parquet(self._path(stage))
 
-    def _read_stage(self, stage: str) -> DataFrame:
+    def _read_stage(self, stage: str, schema: StructType | None = None) -> DataFrame:
+        """``schema``: the schema the stage was written with, when known —
+        a parquet read then skips Spark's schema-inference job."""
         if self.cfg.table_format == "iceberg":
             return self.spark.read.table(self._iceberg_table(stage))
-        return self.spark.read.parquet(self._path(stage))
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self._path(stage))
 
     def _lineage_rows_iceberg(self, stage: str) -> list[dict]:
         """Lineage for an iceberg stage from the COMMITTED snapshot's
@@ -317,8 +321,8 @@ class DedupPipeline:
         ]
 
     def _materialize(self, stage: str, df: DataFrame) -> DataFrame:
-        """Write stage output + lineage, then read it back (so downstream
-        plans start from the checkpoint, not the lineage)."""
+        """Write stage output + lineage, then read it back with its written
+        schema (downstream plans start from the checkpoint, not the lineage)."""
         t0 = time.time()
         self._write_stage(df, stage)
         self.stage_seconds[stage] = time.time() - t0
@@ -348,7 +352,7 @@ class DedupPipeline:
             ),
         )
         pq.write_table(tbl, os.path.join(mdir, f"{stage}.parquet"))
-        return self._read_stage(stage)
+        return self._read_stage(stage, df.schema)
 
     def _stage_rowcount(self, stage: str) -> int:
         """Row count of a just-materialized stage. Parquet: footer sum —

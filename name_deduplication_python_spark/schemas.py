@@ -1,8 +1,10 @@
-"""Fixed schemas for the engine (SURVEY.md §1.5, BASELINE.json input_hint).
+"""Fixed input schema for the engine (SURVEY.md §1.5, BASELINE.json input_hint).
 
 The reference projects every input onto a fixed all-string schema
 (/root/reference/data_utils.py:289-314); our analog is the fixed
-Common-Crawl-style web_pages schema below plus typed stage outputs.
+Common-Crawl-style web_pages schema below. Stage tables are read back
+with the schema they were written with (DedupPipeline._materialize,
+IncrementalDedup's store schemas).
 """
 
 from __future__ import annotations
@@ -17,52 +19,5 @@ WEB_PAGES = T.StructType(
         T.StructField("html", T.BinaryType(), True),
         T.StructField("text", T.StringType(), True),
         T.StructField("lang", T.StringType(), True),
-    ]
-)
-
-# Stage outputs (each is a checkpointable parquet table).
-EXTRACTED = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-    ]
-)
-
-SIGNATURES = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("minhash", T.ArrayType(T.LongType(), False), True),
-        T.StructField("simhash", T.LongType(), True),
-        T.StructField("n_shingles", T.IntegerType(), True),
-    ]
-)
-
-EDGES = T.StructType(
-    [
-        T.StructField("src", T.StringType(), False),
-        T.StructField("dst", T.StringType(), False),
-        T.StructField("est_jaccard", T.DoubleType(), True),
-        T.StructField("hamming", T.IntegerType(), True),
-        T.StructField("status", T.StringType(), True),  # Exact Match / Fuzzy Match
-    ]
-)
-
-CLUSTERS = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("cluster_id", T.StringType(), False),
-    ]
-)
-
-# Driver-provided documents table (/root/testdata/sf*/documents.parquet).
-DOCUMENTS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
     ]
 )

@@ -34,10 +34,17 @@ from ..schemas import WEB_PAGES
 
 
 class IncrementalDedup:
-    # an epoch dir can hold no key file (compact_store recreates an epoch
-    # whose rows were all superseded as a bare marker dir), so the key
-    # store is read with its schema, never inferred from files
+    # store tables are read with the schemas they are written with: an
+    # epoch dir can hold no file (compact_store's bare marker dir for an
+    # all-superseded epoch), and each inference is a Spark job of its own
     BAND_KEYS_SCHEMA = "url string, bh bigint, epoch int"
+    SIGNATURES_SCHEMA = (
+        "url string, minhash array<int>, simhash bigint, n_shingles int, epoch int"
+    )
+    EDGES_SCHEMA = (
+        "src string, dst string, est_jaccard double, hamming int, status string, "
+        "via string, epoch int"
+    )
 
     def __init__(self, spark: SparkSession, store_dir: str, config: dict | None = None):
         self.spark = spark
@@ -106,10 +113,8 @@ class IncrementalDedup:
                 )
 
     def _read_store(self, sub: str) -> DataFrame:
-        reader = self.spark.read
-        if sub == "band_keys":
-            reader = reader.schema(self.BAND_KEYS_SCHEMA)
-        return reader.parquet(os.path.join(self.store, sub))
+        schema = getattr(self, f"{sub.upper()}_SCHEMA")
+        return self.spark.read.schema(schema).parquet(os.path.join(self.store, sub))
 
     @staticmethod
     def _pruned_store_keys(
@@ -122,34 +127,37 @@ class IncrementalDedup:
           1. row pruning: a broadcast left-semi join on the batch's bh set
              drops non-colliding rows inside the scan — the store is never
              shuffled; only rows in TOUCHED buckets reach the candidate
-             join's exchange;
-          2. re-crawl, latest-epoch-wins (VERDICT r4 #4): a url in THIS
-             batch (``new_urls``) supersedes all its store versions
-             (broadcast anti-join), and of a url's other store versions
-             only its latest may pair.
+             join;
+          2. re-crawl, latest-epoch-wins (VERDICT r4 #4): a key pairs only
+             if its url has no LATER version — neither a store signature
+             at a higher epoch nor a row in THIS batch (``new_urls``): one
+             broadcast anti-join on ``later.epoch > key.epoch``.
 
-        The url -> latest-epoch map comes from the signature store's
-        (url, epoch) projection (epoch is the hive partition column, so
-        the scan never touches the 512 B payloads), restricted first to
-        the pruned keys' urls, so its shuffle stays O(touched). The max
-        is taken over the url's FULL store history, not the bucket-pruned
-        subset: a url whose latest version changed text (different
-        buckets) must yield NO rows when only its stale version's buckets
-        collide with the batch. The map is computed once per batch: the
-        verify side fetches payloads by the (url, epoch) these keys carry
-        (_store_sigs_for). A 10^12-doc deployment replaces the projection
-        scan with a compacted current-version pointer table maintained
-        per epoch; the contract is identical."""
-        keys = old_keys.join(F.broadcast(new_keys.select("bh")), "bh", "left_semi").join(
-            F.broadcast(new_urls), "url", "left_anti"
-        )
-        latest = (
+        The later versions come from the signature store's (url, epoch)
+        projection (epoch is the hive partition column, so the scan never
+        touches the 512 B payloads), restricted first to the pruned keys'
+        urls, so the broadcast stays O(touched). They span the url's FULL
+        store history, not the bucket-pruned subset: a url whose latest
+        version changed text (different buckets) must yield NO rows when
+        only its stale version's buckets collide with the batch. No
+        aggregate, so no shuffle; the verify side fetches payloads by the
+        (url, epoch) these keys carry (_store_sigs_for). A 10^12-doc
+        deployment replaces the projection scan with a compacted
+        current-version pointer table maintained per epoch; the contract
+        is identical."""
+        keys = old_keys.join(F.broadcast(new_keys.select("bh")), "bh", "left_semi")
+        # a batch url outranks every store epoch
+        later = (
             old_sigs.select("url", "epoch")
             .join(F.broadcast(keys.select("url")), "url", "left_semi")
-            .groupBy("url")
-            .agg(F.max("epoch").alias("epoch"))
+            .unionByName(new_urls.select("url", F.lit(2**31 - 1).alias("epoch")))
+            .select(F.col("url").alias("_later_url"), F.col("epoch").alias("_later"))
         )
-        return keys.join(F.broadcast(latest), ["url", "epoch"], "left_semi")
+        return keys.join(
+            F.broadcast(later),
+            (F.col("url") == F.col("_later_url")) & (F.col("_later") > F.col("epoch")),
+            "left_anti",
+        )
 
     @staticmethod
     def _store_sigs_for(old_sigs: DataFrame, cross: DataFrame) -> DataFrame:
@@ -304,9 +312,8 @@ class IncrementalDedup:
         stats: dict = {"committed_epochs": len(committed)}
         if not committed:
             return stats
-        sig_root = os.path.join(self.store, "signatures")
         latest = (
-            self.spark.read.parquet(sig_root)
+            self._read_store("signatures")
             .where(F.col("epoch").isin(committed))
             .select("url", "epoch")
             .groupBy("url")
@@ -363,11 +370,11 @@ class IncrementalDedup:
         last_crawl_epoch(src) <= e AND last_crawl_epoch(dst) <= e.
         current_only=False returns the raw append-only log (provenance /
         replay debugging)."""
-        e = self.spark.read.parquet(os.path.join(self.store, "edges"))
+        e = self._read_store("edges")
         if not current_only:
             return e
         latest = (
-            self.spark.read.parquet(os.path.join(self.store, "signatures"))
+            self._read_store("signatures")
             .select("url", "epoch")
             .groupBy("url")
             .agg(F.max("epoch").alias("_last"))

@@ -3,15 +3,25 @@ input_hint: 'byte-identical extracted text per url')."""
 
 from __future__ import annotations
 
-import pandas as pd
+import sys
 
 from name_deduplication_python_spark.functions.text_extract import (
-    extract_series,
+    _SPACES,
     extract_text_oracle,
     wrap_html,
 )
 from name_deduplication_python_spark.operators.extract import extract_stage
+from name_deduplication_python_spark.schemas import WEB_PAGES
 from name_deduplication_python_spark.sources.corpus import corpus_to_spark, generate_corpus
+
+_PY_EVAL_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInArrow", "MapInPandas")
+
+
+def _extract(spark, htmls: list) -> list:
+    """``extract_stage`` over html-only rows, in input order."""
+    rows = [(f"u{i:05d}", None, h, None, None) for i, h in enumerate(htmls)]
+    out = extract_stage(spark.createDataFrame(rows, WEB_PAGES)).collect()
+    return [r["text"] for r in sorted(out, key=lambda r: r["url"])]
 
 
 def test_wrap_roundtrip_unicode():
@@ -27,13 +37,11 @@ def test_wrap_roundtrip_unicode():
         assert extract_text_oracle(html) == t
 
 
-def test_series_matches_oracle():
+def test_series_matches_oracle(spark):
     texts = ["x y z", "café & <b>bold</b>", "multi  space input"]
     htmls = [wrap_html(t) for t in texts] + [None, b"<p>a</p><p>b</p>"]
-    s = pd.Series(htmls, dtype=object)
-    got = extract_series(s)
     want = [extract_text_oracle(h) for h in htmls]
-    assert list(got) == want
+    assert _extract(spark, htmls) == want
     assert want[-1] == "a b"  # tag boundary becomes a space
 
 
@@ -43,7 +51,7 @@ def test_entity_ordering():
     assert extract_text_oracle(b"x &lt; y &nbsp;z") == "x < y z"
 
 
-def test_adversarial_html():
+def test_adversarial_html(spark):
     cases = [
         # nested/unclosed script: non-greedy block kill, then tag strip
         (b"<script>a<script>b</script>text<p>x</p>", "text x"),
@@ -65,8 +73,52 @@ def test_adversarial_html():
     for html, want in cases:
         got = extract_text_oracle(html)
         assert got == want, (html, got, want)
-        got_vec = extract_series(pd.Series([html], dtype=object))[0]
-        assert got_vec == want, (html, got_vec)
+    htmls = [html for html, _ in cases]
+    assert _extract(spark, htmls) == [want for _, want in cases]
+
+
+def test_native_extraction_edge_cases_match_oracle(spark):
+    """Where Java's regex and decoder differ from Python's (see the
+    functions.text_extract docstring), the native stage must still equal
+    the oracle byte for byte."""
+    cases = [
+        # invalid UTF-8: one U+FFFD per maximal invalid subpart
+        b"\xed\xa0\x80z",
+        b"caf\xc3\x28",
+        b"\xff\xfe<p>bom</p>",
+        # IGNORECASE: long s, back-reference and mixed-case names
+        "<ſcript>x</ſcript>keep".encode(),
+        "<script>x</ſcript>keep".encode(),
+        "<ſcript>x</script>keep".encode(),
+        "<scrıpt>x</script>keep".encode(),
+        "<tİtle>x</TITLE>keep".encode(),
+        "<STYLE>\u212a</style>keep".encode(),
+        b"<tItLe>x</TITLE>keep",
+        # closing-tag whitespace: \x0b and the \x1c-\x1f separators
+        b"<script>x</script\x0b>keep",
+        b"<script>x</script\x1c>keep",
+        # word boundary after the tag name
+        "<script\u0301>x</script>keep".encode(),
+        "<script²>x</script>keep".encode(),
+        "<title‿>x</title>keep".encode(),
+        # ends stripped as str.strip does
+        "\xa0 nbsp \xa0".encode(),
+        "\u2003 em \u3000".encode(),
+        b"\x0c lead \x0c",
+        "tail\x85".encode(),
+        b"\x1c sep \x1f",
+        "zero\u200b".encode(),
+    ]
+    want = [extract_text_oracle(h) for h in cases]
+    assert want[0] == "\ufffd\ufffd\ufffdz"
+    got = _extract(spark, cases)
+    assert [(h, g) for h, g, w in zip(cases, got, want) if g != w] == []
+
+
+def test_strip_set_is_python_isspace():
+    """The Java forms' whitespace set is exactly what Python's ``\\s`` and
+    ``str.strip`` use."""
+    assert sorted(_SPACES) == [c for c in map(chr, range(sys.maxunicode + 1)) if c.isspace()]
 
 
 def test_extract_stage_byte_identity(spark):
@@ -87,22 +139,21 @@ def test_extract_stage_preserves_existing_text(spark):
 
 
 def test_extract_udf_only_on_null_text_branch(spark, tmp_path):
-    """The extract UDF must not execute on rows that already carry text
-    (round-1 plan audit: a when/otherwise projection evaluated the
-    ArrowEvalPython node unconditionally). The populated branch must be a
-    pure native projection that never reads the html column."""
+    """Extraction is native: the plan holds no Python evaluation node.
+    It runs on the text-is-null side only — the populated branch is a
+    plain projection that never reads the html column."""
     pages, _ = generate_corpus(n_base=30, seed=11, null_text_frac=0.3)
     path = str(tmp_path / "pages.parquet")
     corpus_to_spark(spark, pages).write.parquet(path)
     plan = extract_stage(spark.read.parquet(path))._jdf.queryExecution().executedPlan().toString()
-    # exactly one Python-UDF eval node, on the isnull(text) side only
-    assert plan.count("ArrowEvalPython") == 1, plan
+    assert not [n for n in _PY_EVAL_NODES if n in plan], plan
     # two scans: the populated side's ReadSchema must exclude html
     read_schemas = [
         seg.split("ReadSchema:", 1)[1].splitlines()[0]
         for seg in plan.split("FileScan parquet")[1:]
         if "ReadSchema:" in seg
     ]
+    assert len(read_schemas) == 2, plan
     assert any("html" not in rs for rs in read_schemas), read_schemas
 
 

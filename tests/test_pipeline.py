@@ -363,3 +363,33 @@ def test_round5_knobs_are_fingerprinted(spark, tmp_path):
     ):
         with _pytest.raises(ValueError, match="different DedupConfig"):
             DedupPipeline(spark, wd, cfg)
+
+
+def test_stage_read_back_starts_no_job(spark, tmp_path):
+    """Each materialized stage is read back with the schema it was written
+    with: no parquet schema-inference job, and the same schema inference
+    would give."""
+    import uuid
+
+    pages, _ = generate_corpus(n_base=20, seed=5)
+    wd = str(tmp_path / "rb")
+    pipe = DedupPipeline(spark, wd, DedupConfig())
+    sc = spark.sparkContext
+    group = f"read-back-{uuid.uuid4().hex}"
+    read, back = pipe._read_stage, {}
+
+    def counted_read(stage, *args):
+        sc.setJobGroup(group, "stage read-back")
+        try:
+            back[stage] = read(stage, *args)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return back[stage]
+
+    pipe._read_stage = counted_read
+    pipe.run(corpus_to_spark(spark, pages))
+    assert sorted(back) == sorted(DedupPipeline.STAGES)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    for stage, df in back.items():
+        assert df.schema == spark.read.parquet(os.path.join(wd, stage)).schema, stage

@@ -330,6 +330,39 @@ def test_band_key_epochs_are_plain_and_batch_jobs_bounded(spark, tmp_path):
     assert 0 < len(jobs) <= 20, len(jobs)
 
 
+def test_store_reads_start_no_job(spark, tmp_path):
+    """The signature and edge stores are read with the schemas they are
+    written with: no parquet schema-inference job (one per read
+    before), and the same schemas inference would give."""
+    import uuid
+
+    pages, _ = generate_corpus(n_base=20, seed=33)
+    df = corpus_to_spark(spark, pages).cache()
+    urls = sorted(pages["url"])
+    store = str(tmp_path / "store")
+    inc = IncrementalDedup(spark, store)
+    for e in range(2):
+        inc.process_batch(df.where(df.url.isin(urls[e::2])), e)
+    sc = spark.sparkContext
+    reads = {}
+    for sub, read in (
+        ("signatures", lambda: inc._read_store("signatures")),
+        ("edges", inc.edges),
+    ):
+        group = f"store-read-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, f"{sub} store read")
+        try:
+            reads[sub] = read()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], sub
+    for sub in ("signatures", "edges"):
+        inferred = spark.read.parquet(os.path.join(store, sub)).schema
+        assert inc._read_store(sub).schema == inferred, sub
+    assert reads["edges"].count() > 0
+
+
 def _pages(spark, rows):
     """rows: [(url, text)] -> web_pages DataFrame (pre-extracted text)."""
     from name_deduplication_python_spark.schemas import WEB_PAGES
