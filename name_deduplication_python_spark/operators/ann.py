@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .lsh import bucket_pair_blocks, candidate_pairs
+
 
 def _cosine_expr(a: str, b: str):
     dot = F.aggregate(
@@ -375,8 +377,6 @@ def embedding_near_dup_pairs(
     in the hash aggregate, buckets above bucket_cap get the salted
     chunked pairing — a family of identical embeddings stays one
     connected component at ~cap*n/2 pairs instead of going n^2."""
-    from .lsh import candidate_pairs
-
     dim = _vec_dim(emb, vec_col, dim)
     if bits_per_table is None:
         bits_per_table = auto_bits_per_table(
@@ -434,31 +434,6 @@ def semantic_assign(
     return assign.join(vecs, id_col)
 
 
-def _semantic_pair_blocks(n: int, bucket_cap: int, hot_strategy: str):
-    """The pairing plan of one sorted member list as (i_lo, i_hi, j_lo,
-    j_hi) full blocks plus explicit (i, j) singles — EXACTLY the pair set
-    operators.lsh.candidate_pairs emits for a bucket of n sorted members:
-    full C(n,2) at n <= cap; above the cap either the salted chunk
-    pairing (+ chunk-head chain) or the star+chain form."""
-    blocks: list[tuple[int, int, int, int]] = []
-    singles: list[tuple[int, int]] = []
-    if n <= bucket_cap:
-        blocks.append((0, n, 0, n))
-        return blocks, singles
-    if hot_strategy == "salted":
-        n_chunks = -(-n // bucket_cap)
-        for c in range(n_chunks):
-            lo, hi = c * bucket_cap, min((c + 1) * bucket_cap, n)
-            blocks.append((lo, hi, lo, hi))
-        for c in range(n_chunks - 1):
-            singles.append((c * bucket_cap, (c + 1) * bucket_cap))
-    else:  # star_chain
-        blocks.append((0, 1, 1, n))  # star: min id with every member
-        for i in range(1, n - 1):  # chain over sorted successors
-            singles.append((i, i + 1))
-    return blocks, singles
-
-
 def _semantic_kernel_groups(
     assigned: DataFrame,
     id_col: str,
@@ -468,7 +443,7 @@ def _semantic_kernel_groups(
     mode: str,
 ) -> DataFrame:
     """One grouped-map pass per k-means list: ids sorted ascending, the
-    examined pair set reproduced exactly (see _semantic_pair_blocks), the
+    examined pair set reproduced exactly (see lsh.bucket_pair_blocks), the
     cosine test done as a blocked numpy matmul over the list's vectors.
     Emits (id, list_id, is_kept) for prune or the >=threshold edge set
     for chain. cos = dot/(na*nb) with na/nb the per-vector norms — the
@@ -505,7 +480,7 @@ def _semantic_kernel_groups(
         dropped = np.zeros(n, dtype=bool)
         edges_s: list[np.ndarray] = []
         edges_d: list[np.ndarray] = []
-        blocks, singles = _semantic_pair_blocks(n, bucket_cap, hot_strategy)
+        blocks, singles = bucket_pair_blocks(n, bucket_cap, hot_strategy)
         B = 2048
         for ilo, ihi, jlo, jhi in blocks:
             for j0 in range(jlo, jhi, B):
@@ -616,7 +591,7 @@ def semantic_dedup(
     sf1.0/20k vectors: 69 s -> ~8 s for the lossless driver setting,
     which is quadratic in list size by construction). The examined pair
     set and the cosine formula are bit-for-bit the join form's
-    (_semantic_pair_blocks reproduces full/salted/star_chain pairing;
+    (lsh.bucket_pair_blocks reproduces full/salted/star_chain pairing;
     parity-tested against the DuckDB oracle). The one new bound: a
     list's vectors must fit one task (n_list * dim * 8 B — SemDeDup's
     k-means targets bounded list sizes by construction; a deployment
@@ -660,8 +635,6 @@ def semantic_dedup(
                 ),
             )
         )
-
-    from .lsh import candidate_pairs
 
     keys = assigned.select(
         id_col, F.col("list_id").cast("bigint").alias("bh")

@@ -262,61 +262,34 @@ def expand_group_pairs(
     Groups are typically entity families (small), but CC transitively
     chains capped LSH buckets into arbitrarily large components — that is
     its job — so the LSH bucket_cap does NOT bound component size. Groups
-    above ``member_cap`` members therefore get CHUNKED expansion (the
-    salted-bucket strategy) in TWO explode stages: chunk INDICES explode
-    first (one row per chunk), then each chunk row builds only its own
-    slice's pairs (~cap²/2 structs plus one head-chain edge) — total
-    pairs O(n·cap) instead of C(n,2), and no evaluated pair array ever
-    exceeds ~cap²/2 structs (a single-stage expression would materialize
-    the whole O(n·cap) array in one row before exploding). Every member
-    appears in >= min(cap, chunk size) - 1 audited pairs (the last
-    partial chunk pairs within itself), which is the audit's sampling
-    guarantee (audit is a sampling stage by nature — ``audit_edges``
-    likewise takes sample_fraction). member_cap=None requests FULL R5
-    expansion (every C(n,2) pair, the reference auditor's contract) —
-    quadratic in the largest group, the caller's explicit choice.
-    Coverage dropped by chunking is quantified by ``expansion_coverage``.
-    Documented residual: the sorted
-    member array itself is one collect_list row, O(n) per group — ~100 MB
-    at 2M members; bounding THAT requires pre-chunking the groupBy key,
-    which trades exactness of the chunk boundaries for memory."""
-    from .lsh import _pairs_of
+    above ``member_cap`` members therefore get CHUNKED expansion: this is
+    lsh.candidate_pairs' salted pairing with the group as the bucket —
+    one row per chunk index, each building only its own slice's pairs
+    (~cap²/2 structs plus one head-chain edge), so total pairs are
+    O(n·cap) instead of C(n,2) and no evaluated pair array exceeds
+    ~cap²/2 structs. Every member appears in >= min(cap, chunk size) - 1
+    audited pairs (the last partial chunk pairs within itself), which is
+    the audit's sampling guarantee (audit is a sampling stage by nature —
+    ``audit_edges`` likewise takes sample_fraction). member_cap=None
+    requests FULL R5 expansion (every C(n,2) pair, the reference
+    auditor's contract) — quadratic in the largest group, the caller's
+    explicit choice. Coverage dropped by chunking is quantified by
+    ``expansion_coverage``. Documented residual: the sorted member array
+    itself is one collect_list row, O(n) per group — ~100 MB at 2M
+    members; bounding THAT requires pre-chunking the groupBy key, which
+    trades exactness of the chunk boundaries for memory."""
+    from .lsh import candidate_pairs
 
-    g = (
-        clusters.groupBy(cluster_col)
-        .agg(F.sort_array(F.collect_list(id_col)).alias("m"))
-        .where(F.size("m") > 1)
+    keys = clusters.select(id_col, F.col(cluster_col).alias("bh"))
+    pairs, _ = candidate_pairs(
+        keys,
+        id_col=id_col,
+        # one chunk per group at any array length: full C(n,2)
+        bucket_cap=2**31 - 1 if member_cap is None else member_cap,
+        hot_strategy="salted",
+        with_stats=False,
     )
-    m = F.col("m")
-    n = F.size(m)
-    if member_cap is None:
-        return g.select(F.explode(_pairs_of(m)).alias("p")).select(
-            F.col("p.src").alias("src"), F.col("p.dst").alias("dst")
-        )
-    small = g.where(n <= member_cap).select(
-        F.explode(_pairs_of(m)).alias("p")
-    )
-    n_chunks = F.ceil(n / F.lit(member_cap)).cast("int")
-    chunks = g.where(n > member_cap).select(
-        "m",
-        n_chunks.alias("nc"),
-        F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("c"),
-    )
-    c = F.col("c")
-    chunk_pairs = _pairs_of(F.slice(m, c * member_cap + 1, member_cap))
-    head = F.when(
-        c < F.col("nc") - 1,
-        F.array(
-            F.struct(
-                F.get(m, c * member_cap).alias("src"),
-                F.get(m, (c + 1) * member_cap).alias("dst"),
-            )
-        ),
-    ).otherwise(F.slice(chunk_pairs, 1, 0))
-    big = chunks.select(F.explode(F.concat(chunk_pairs, head)).alias("p"))
-    return small.unionByName(big).select(
-        F.col("p.src").alias("src"), F.col("p.dst").alias("dst")
-    )
+    return pairs
 
 
 def expansion_coverage(

@@ -128,7 +128,8 @@ def candidate_pairs(
       * "salted": DESIGN §Skew item 4 — the sorted member array splits
         into ceil(n/cap) chunks; each chunk pairs fully (~cap^2/2 rows)
         plus a chain across chunk heads reconnects the bucket. Denser
-        in-family verification at the same per-row bound.
+        in-family verification at the same per-row bound. This branch
+        also serves audit.expand_group_pairs (cluster id as ``bh``).
     """
     grouped = keys.groupBy("bh").agg(
         F.sort_array(F.collect_list(id_col)).alias("m")
@@ -150,24 +151,30 @@ def candidate_pairs(
     multi = grouped.where(n > 1)
 
     m = F.col("m")
-    full_expr = _pairs_of(m)
     if hot_strategy == "salted":
-        n_chunks = F.ceil(n / F.lit(bucket_cap)).cast("int")
-        chunk_pairs = F.flatten(
-            F.transform(
-                F.sequence(F.lit(0), n_chunks - 1),
-                lambda c: _pairs_of(F.slice(m, c * bucket_cap + 1, bucket_cap)),
-            )
+        # row-bounded: one row per chunk index, each building only its own
+        # chunk's pairs (~cap^2/2 structs) plus the head edge to the next
+        # chunk, so no evaluated pair array holds a bucket's whole O(n*cap)
+        # pair set. n <= cap is one chunk: full C(n,2).
+        nc = F.ceil(n / F.lit(bucket_cap)).cast("int")
+        chunks = multi.select(
+            "m", nc.alias("nc"), F.explode(F.sequence(F.lit(0), nc - 1)).alias("c")
         )
-        heads = F.transform(
-            F.sequence(F.lit(0), n_chunks - 2),
-            lambda c: F.struct(
-                F.get(m, c * bucket_cap).alias("src"),
-                F.get(m, (c + 1) * bucket_cap).alias("dst"),
-            ),
+        c = F.col("c")
+        head = F.struct(
+            F.get(m, c * bucket_cap).alias("src"),
+            F.get(m, (c + 1) * bucket_cap).alias("dst"),
         )
-        hot_expr = F.concat(chunk_pairs, heads)
+        exploded = chunks.select(
+            F.explode(
+                F.concat(
+                    _pairs_of(F.slice(m, c * bucket_cap + 1, bucket_cap)),
+                    F.slice(F.array(head), 1, (c < F.col("nc") - 1).cast("int")),
+                )
+            ).alias("p")
+        )
     else:
+        full_expr = _pairs_of(m)
         star = F.transform(
             F.slice(m, 2, n - 1),
             lambda y: F.struct(F.get(m, 0).alias("src"), y.alias("dst")),
@@ -185,14 +192,38 @@ def candidate_pairs(
             ),
         ).otherwise(F.slice(star, 1, 0))
         hot_expr = F.concat(star, chain)
-
-    pair_arr = F.when(n <= bucket_cap, full_expr).otherwise(hot_expr)
-    pairs = (
-        multi.select(F.explode(pair_arr).alias("p"))
-        .select(F.col("p.src").alias("src"), F.col("p.dst").alias("dst"))
-        .distinct()
-    )
+        pair_arr = F.when(n <= bucket_cap, full_expr).otherwise(hot_expr)
+        exploded = multi.select(F.explode(pair_arr).alias("p"))
+    pairs = exploded.select(
+        F.col("p.src").alias("src"), F.col("p.dst").alias("dst")
+    ).distinct()
     return pairs, obs
+
+
+def bucket_pair_blocks(n: int, bucket_cap: int, hot_strategy: str):
+    """candidate_pairs' pairing plan for one bucket of n sorted members,
+    as member-index (i_lo, i_hi, j_lo, j_hi) blocks (every i < j inside)
+    plus explicit (i, j) singles — the same pair set, for kernels that
+    pair a bucket's members without building the pairs as rows
+    (ann.semantic_dedup). Full C(n,2) at n <= cap; above the cap either
+    the salted chunks plus the chunk-head chain or the star+chain form."""
+    blocks: list[tuple[int, int, int, int]] = []
+    singles: list[tuple[int, int]] = []
+    if n <= bucket_cap:
+        blocks.append((0, n, 0, n))
+        return blocks, singles
+    if hot_strategy == "salted":
+        n_chunks = -(-n // bucket_cap)
+        for c in range(n_chunks):
+            lo, hi = c * bucket_cap, min((c + 1) * bucket_cap, n)
+            blocks.append((lo, hi, lo, hi))
+        for c in range(n_chunks - 1):
+            singles.append((c * bucket_cap, (c + 1) * bucket_cap))
+    else:  # star_chain
+        blocks.append((0, 1, 1, n))  # star: min id with every member
+        for i in range(1, n - 1):  # chain over sorted successors
+            singles.append((i, i + 1))
+    return blocks, singles
 
 
 def candidate_pairs_two_table(

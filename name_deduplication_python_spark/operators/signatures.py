@@ -324,7 +324,9 @@ def signature_collapse(sigs: DataFrame, id_col: str = "url") -> DataFrame:
     docs with identical signature content (minhash + simhash +
     n_shingles — byte-identical texts by construction, or J~1 texts whose
     128 minhashes all agree, which the Exact tier would merge anyway)
-    map to one representative = the group's MIN id.
+    map to one representative = the group's MIN id. ``sigs`` carries
+    the content hash ``sig_h`` (collapse_hash_exprs, computed in the
+    signature pass), so the collapse scans that narrow column alone.
 
     Returns exact_map(url, rep). Downstream LSH runs on reps only, so
 
@@ -349,14 +351,6 @@ def signature_collapse(sigs: DataFrame, id_col: str = "url") -> DataFrame:
     map-back join; the groupBy side is map-side combined and AQE skew
     join (on in session.py) splits the residual.
     """
-    # a signature frame that already carries the content-hash column
-    # (collapse_hash_exprs, computed during the signature write) collapses
-    # from the narrow column alone — no minhash-array re-read/re-hash
-    sig_h = (
-        F.col("sig_h")
-        if "sig_h" in sigs.columns
-        else collapse_hash_exprs(id_col=id_col)["sig_h"]
-    )
     from pyspark.sql import Window
 
     # window-min instead of groupBy+self-join (round 7): the join form
@@ -368,7 +362,7 @@ def signature_collapse(sigs: DataFrame, id_col: str = "url") -> DataFrame:
     # but the key is a 64-bit content hash: a skewed sig_h IS a giant
     # identical-duplicate family, whose rows are exactly what this
     # operator exists to collapse — the window state per key is one min.
-    m = sigs.select(F.col(id_col).alias("url"), sig_h.alias("sig_h"))
+    m = sigs.select(F.col(id_col).alias("url"), "sig_h")
     w = Window.partitionBy("sig_h")
     return m.select("url", F.min("url").over(w).alias("rep"))
 

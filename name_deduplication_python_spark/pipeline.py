@@ -109,11 +109,21 @@ class DedupConfig:
     extra: dict = field(default_factory=dict)
 
 
+# Bumped whenever a stage table's columns or meaning change, so a workdir
+# written by an older engine is refused instead of resumed from stale
+# checkpoints. 1: signatures carry the collapse hash ``sig_h`` whenever
+# exact_collapse is on.
+STAGE_SCHEMA_VERSION = 1
+
+
 def _fingerprint(cfg: DedupConfig) -> dict:
     """The config as a run dir's config.json holds it: every field,
-    ``extra`` included (it enables and tunes the optional stages), JSON-
-    normalized so it compares equal to what json.load returns."""
-    return json.loads(json.dumps(asdict(cfg), sort_keys=True))
+    ``extra`` included (it enables and tunes the optional stages), plus
+    the stage-schema version, JSON-normalized so it compares equal to
+    what json.load returns."""
+    fp = asdict(cfg)
+    fp["stage_schema_version"] = STAGE_SCHEMA_VERSION
+    return json.loads(json.dumps(fp, sort_keys=True))
 
 
 def allocate_run_dir(base: str, cfg: "DedupConfig | None" = None) -> str:
@@ -573,31 +583,3 @@ class DedupPipeline:
             .collect()[0]
         )
         return {k: int(v) for k, v in agg.asDict().items()}
-
-    def export_pdf(self, pdf_path: str, sample_rows: int = 500) -> str:
-        """S6+S7 presentation pair in one call (the reference's
-        analysis_engine report -> excel_converter PDF hand-off): render
-        the run's Dashboard (summary counters), a User File Data sample
-        (clusters stage, min-url-first), and the Analysis Report
-        (dup-cluster members) into one PDF via the native writer
-        (operators/pdf_report). Driver-bounded by sample_rows per
-        section; the stage tables remain the full result."""
-        from .operators.pdf_report import dashboard_df, export_pdf_report
-
-        clusters = self._read_stage("clusters")
-        sizes = clusters.groupBy("cluster_id").agg(F.count("*").alias("sz"))
-        dups = (
-            clusters.join(sizes.where(F.col("sz") > 1), "cluster_id")
-            .orderBy("cluster_id", "url")
-            .select("cluster_id", "url", "sz")
-        )
-        return export_pdf_report(
-            [
-                ("Dashboard", dashboard_df(self.spark, self.summary())),
-                ("User File Data", clusters.orderBy("url")),
-                ("Analysis Report", dups),
-            ],
-            pdf_path,
-            title=f"Dedup run {os.path.basename(self.workdir)}",
-            section_limit=sample_rows,
-        )

@@ -1271,7 +1271,7 @@ def _lsh_sat_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB brute-force oracle applies VERBATIM (equality required, not
     probabilistic). Selectivity at scale configs (auto log2(n) bits,
     bucket caps) is pytest-gated with planted corpora instead
-    (tests/test_ann_multimodal.py)."""
+    (tests/test_ann.py)."""
     from ..operators.ann import hyperplane_signatures
 
     emb = _emb(spark, sf_dir)
@@ -1377,7 +1377,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     result EQUALS brute-force top-k — SQL_ANN_TOPK is its exact oracle
     (and centroid float nondeterminism cannot affect the output). Probe
     selectivity at nprobe < n_lists is pytest-gated instead
-    (tests/test_ann_multimodal.py)."""
+    (tests/test_ann.py)."""
     from ..operators.ann import ann_ivf_topk
 
     return ann_ivf_topk(
@@ -2890,10 +2890,11 @@ SQL_PSL_DOMAINS = _psl_domains_sql()
 #     Multi-line pages are derived from the single-line corpus with the
 #     established regexp_replace trick plus two planted failure modes
 #     (a duplicated promo line on doc_id%6, a repeated 5-gram block on
-#     doc_id%4). The driver query runs the {2-gram top, 5-gram dup}
-#     subset so the oracle stays two unnests; the full 2..10 table is
-#     reference-parity-tested in tests/test_repetition.py. Every
-#     fraction and the gate conjunction replay in DuckDB (grams via
+#     doc_id%4); pages on doc_id%5 break lines with CRLF, which both
+#     engines split like LF (\r?\n). The driver query runs the {2-gram
+#     top, 5-gram dup} subset so the oracle stays two unnests; the full
+#     2..10 table is reference-parity-tested in tests/test_repetition.py.
+#     Every fraction and the gate conjunction replay in DuckDB (grams via
 #     list comprehension + unnest, top gram via lexicographic list max
 #     — the same (count, length) ordering Spark's struct max uses).
 # --------------------------------------------------------------------------
@@ -2904,10 +2905,11 @@ _REP_BLOCK = "alpha beta gamma delta epsilon "
 
 def _rep_page() -> "F.Column":
     d = F.col("doc_id")
+    nl = F.when(d % 5 == 0, F.lit("\r\n")).otherwise(F.lit("\n"))
     return F.concat(
-        F.regexp_replace(F.col("text"), " (the|a) ", "\n"),
+        F.regexp_replace(F.col("text"), " (the|a) ", nl),
         F.when(
-            d % 6 == 0, F.lit(f"\n{_REP_PROMO}\n{_REP_PROMO}")
+            d % 6 == 0, F.concat(nl, F.lit(_REP_PROMO), nl, F.lit(_REP_PROMO))
         ).otherwise(F.lit("")),
         F.when(
             d % 4 == 0, F.lit(" " + _REP_BLOCK * 2 + "zz")
@@ -2929,14 +2931,17 @@ def q_gopher_repetition_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_GOPHER_REPETITION_FLAGS = """
 WITH p AS (
   SELECT doc_id,
-         regexp_replace(text, ' (the|a) ', chr(10), 'g')
+         regexp_replace(text, ' (the|a) ', nl, 'g')
          || CASE WHEN doc_id % 6 = 0
-                 THEN chr(10) || 'promo line' || chr(10) || 'promo line'
+                 THEN nl || 'promo line' || nl || 'promo line'
                  ELSE '' END
          || CASE WHEN doc_id % 4 = 0
                  THEN ' ' || repeat('alpha beta gamma delta epsilon ', 2) || 'zz'
                  ELSE '' END AS text
-  FROM documents WHERE text IS NOT NULL
+  FROM (SELECT doc_id, text,
+               CASE WHEN doc_id % 5 = 0 THEN chr(13) || chr(10)
+                    ELSE chr(10) END AS nl
+        FROM documents WHERE text IS NOT NULL)
 ), lr AS (
   SELECT doc_id,
          round(coalesce(sum(cnt) FILTER (cnt > 1), 0)
@@ -2945,7 +2950,8 @@ WITH p AS (
                / greatest(sum(len(line) * cnt), 1), 4) AS dup_line_char_frac
   FROM (
     SELECT doc_id, line, count(*) AS cnt
-    FROM (SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM p)
+    FROM (SELECT doc_id, unnest(string_split_regex(text, '\\r?\\n')) AS line
+          FROM p)
     WHERE trim(line) <> '' GROUP BY doc_id, line
   ) GROUP BY doc_id
 ), t2 AS (

@@ -4,9 +4,11 @@
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from name_deduplication_python_spark.operators.lsh import (
     band_keys,
+    bucket_pair_blocks,
     candidate_pairs,
     candidate_pairs_two_table,
 )
@@ -85,6 +87,35 @@ def test_hot_bucket_salted_strategy(spark):
     for r in pairs.collect():
         parent[max(find(r["src"]), find(r["dst"]))] = min(find(r["src"]), find(r["dst"]))
     assert len({find(u) for u in texts}) == 1, "salted bucket must stay connected"
+
+
+@pytest.mark.parametrize("hot_strategy", ["star_chain", "salted"])
+def test_pair_blocks_match_candidate_pairs(spark, hot_strategy):
+    """bucket_pair_blocks (the index form ann.semantic_dedup pairs by) and
+    candidate_pairs' SQL form emit the same pair set on buckets at and
+    around the cap: below, at, one over, whole chunks, a partial chunk."""
+    cap = 4
+    sizes = [2, cap, cap + 1, 2 * cap, 3 * cap + 5]
+    # disjoint, sorted id ranges per bucket: member index i <-> id base+i
+    rows = [(b * 1000 + i, b) for b, n in enumerate(sizes) for i in range(n)]
+    keys = spark.createDataFrame(rows, "uid bigint, bh bigint")
+    pairs, _ = candidate_pairs(
+        keys, id_col="uid", bucket_cap=cap, hot_strategy=hot_strategy,
+        with_stats=False,
+    )
+    got = {(r.src, r.dst) for r in pairs.collect()}
+    want = set()
+    for b, n in enumerate(sizes):
+        blocks, singles = bucket_pair_blocks(n, cap, hot_strategy)
+        for ilo, ihi, jlo, jhi in blocks:
+            want |= {
+                (b * 1000 + i, b * 1000 + j)
+                for i in range(ilo, ihi)
+                for j in range(jlo, jhi)
+                if i < j
+            }
+        want |= {(b * 1000 + i, b * 1000 + j) for i, j in singles}
+    assert got == want
 
 
 def test_singleton_buckets_dropped(spark):

@@ -365,6 +365,21 @@ def test_round5_knobs_are_fingerprinted(spark, tmp_path):
             DedupPipeline(spark, wd, cfg)
 
 
+def test_workdir_without_stage_schema_version_is_refused(tmp_path):
+    """A run dir whose config.json predates the stage-schema version
+    (same DedupConfig, no version key) holds stage tables of an older
+    layout — e.g. signatures without the collapse hash — and must be
+    refused, not resumed."""
+    import json
+    from dataclasses import asdict
+
+    wd = tmp_path / "old"
+    wd.mkdir()
+    (wd / "config.json").write_text(json.dumps(asdict(DedupConfig())))
+    with pytest.raises(ValueError, match="different DedupConfig"):
+        DedupPipeline(None, str(wd), DedupConfig())
+
+
 def test_stage_read_back_starts_no_job(spark, tmp_path):
     """Each materialized stage is read back with the schema it was written
     with: no parquet schema-inference job, and the same schema inference
