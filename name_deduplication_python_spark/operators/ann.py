@@ -373,10 +373,10 @@ def embedding_near_dup_pairs(
 
     bits_per_table=None auto-scales with log2(n) (auto_bits_per_table);
     candidate generation routes through the MinHash LSH join's skew
-    machinery (operators.lsh.candidate_pairs): singleton buckets dropped
-    in the hash aggregate, buckets above bucket_cap get the salted
-    chunked pairing — a family of identical embeddings stays one
-    connected component at ~cap*n/2 pairs instead of going n^2."""
+    machinery (operators.lsh.candidate_pairs): singleton buckets emit
+    no pair, buckets above bucket_cap get the salted chunked pairing —
+    a family of identical embeddings stays one connected component at
+    ~cap*n/2 pairs instead of going n^2."""
     dim = _vec_dim(emb, vec_col, dim)
     if bits_per_table is None:
         bits_per_table = auto_bits_per_table(
@@ -396,7 +396,6 @@ def embedding_near_dup_pairs(
         id_col=id_col,
         bucket_cap=bucket_cap,
         hot_strategy="salted",
-        with_stats=False,
     )
     return (
         cand.join(vecs.select(F.col(id_col).alias("src"), F.col("v").alias("qv")), "src")
@@ -596,8 +595,8 @@ def semantic_dedup(
     list's vectors must fit one task (n_list * dim * 8 B — SemDeDup's
     k-means targets bounded list sizes by construction; a deployment
     with pathological mega-lists sets impl='join' to fall back to the
-    shuffle-join form, whose capped pairing bounds pair volume but
-    still collect_lists the member ids)."""
+    shuffle-join form, whose capped pairing bounds pair volume and
+    holds a list's ids as one sorted run in the pair kernel)."""
     if mode not in ("prune", "chain"):
         raise ValueError(f"mode must be 'prune' or 'chain', got {mode!r}")
     if impl not in ("kernel", "join"):
@@ -644,7 +643,6 @@ def semantic_dedup(
         id_col=id_col,
         bucket_cap=bucket_cap,
         hot_strategy=hot_strategy,
-        with_stats=False,
     )
     a = assigned.select(F.col(id_col).alias("src"), F.col("v").alias("va"))
     b = assigned.select(F.col(id_col).alias("dst"), F.col("v").alias("vb"))

@@ -264,20 +264,18 @@ def expand_group_pairs(
     its job — so the LSH bucket_cap does NOT bound component size. Groups
     above ``member_cap`` members therefore get CHUNKED expansion: this is
     lsh.candidate_pairs' salted pairing with the group as the bucket —
-    one row per chunk index, each building only its own slice's pairs
-    (~cap²/2 structs plus one head-chain edge), so total pairs are
-    O(n·cap) instead of C(n,2) and no evaluated pair array exceeds
-    ~cap²/2 structs. Every member appears in >= min(cap, chunk size) - 1
-    audited pairs (the last partial chunk pairs within itself), which is
-    the audit's sampling guarantee (audit is a sampling stage by nature —
-    ``audit_edges`` likewise takes sample_fraction). member_cap=None
-    requests FULL R5 expansion (every C(n,2) pair, the reference
-    auditor's contract) — quadratic in the largest group, the caller's
-    explicit choice. Coverage dropped by chunking is quantified by
-    ``expansion_coverage``. Documented residual: the sorted member array
-    itself is one collect_list row, O(n) per group — ~100 MB at 2M
-    members; bounding THAT requires pre-chunking the groupBy key, which
-    trades exactness of the chunk boundaries for memory."""
+    each chunk pairs fully (~cap²/2 pairs) plus one head-chain edge to
+    the next chunk, so total pairs are O(n·cap) instead of C(n,2). Every
+    member appears in >= min(cap, chunk size) - 1 audited pairs (the last
+    partial chunk pairs within itself), which is the audit's sampling
+    guarantee (audit is a sampling stage by nature — ``audit_edges``
+    likewise takes sample_fraction). member_cap=None requests FULL R5
+    expansion (every C(n,2) pair, the reference auditor's contract) —
+    quadratic in the largest group, the caller's explicit choice; the
+    pair kernel streams it in bounded batches. Coverage dropped by
+    chunking is quantified by ``expansion_coverage``. A group's members
+    are a sorted run inside one kernel task (O(n) memory per group, no
+    single row holds them)."""
     from .lsh import candidate_pairs
 
     keys = clusters.select(id_col, F.col(cluster_col).alias("bh"))
@@ -287,7 +285,6 @@ def expand_group_pairs(
         # one chunk per group at any array length: full C(n,2)
         bucket_cap=2**31 - 1 if member_cap is None else member_cap,
         hot_strategy="salted",
-        with_stats=False,
     )
     return pairs
 

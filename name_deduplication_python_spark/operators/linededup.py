@@ -10,7 +10,7 @@ surviving lines in original order. This complements document-level dedup
 repeated SPANS inside otherwise-unique pages.
 
 Spark-first shape — no UDF anywhere:
-  1. posexplode(split(text, '\\n'))       -> (url, pos, line)
+  1. posexplode(split(text, '\\r?\\n'))   -> (url, pos, line)
   2. repeated lines = groupBy(line_hash) counting DISTINCT docs, kept as
      an 8-byte-key table (xxhash64(line) — the line string itself never
      enters the shuffle twice); only hashes with >= min_docs docs survive
@@ -37,12 +37,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# unit -> (split regex, rejoin separator). Paragraph mode treats any
-# blank-line run as ONE boundary and rebuilds with a single blank line
-# (documented normalization: a 3-newline run becomes 2 — the paragraph
+# unit -> (split regex, rejoin separator). Both split on LF or CRLF
+# (repetition.py's line rule) and rebuild with LF. Paragraph mode treats
+# any blank-line run as ONE boundary and rebuilds with a single blank
+# line (documented normalization: a 3-newline run becomes 2 — the paragraph
 # STRUCTURE survives, the exact blank-run length does not).
 _UNITS = {
-    "line": ("\n", "\n"),
+    "line": (r"\r?\n", "\n"),
     "paragraph": (r"(\r?\n){2,}", "\n\n"),
 }
 

@@ -6,38 +6,37 @@ emits blocking keys, all C(n,2) pairs within a bucket become candidates.
 Here the keys are MinHash band hashes, with explicit skew handling (the
 reference is single-process and has no skew story, SURVEY §4.2):
 
-  * singleton buckets (the web-scale majority) are dropped right after
-    the aggregation, before any pair is generated;
+  * singleton buckets (the web-scale majority) emit no pair;
   * buckets <= bucket_cap get full C(n,2) pairing (exact, quadratic);
   * hot buckets (> cap, boilerplate pages) get linear star+chain pairing
     (or chunked "salted" pairing): connectivity within the bucket is
     preserved, so downstream connected components see the same clusters;
     recall impact is gate-tested (tests/test_recall.py).
 
-Plan shape (round-2 rewrite): ONE hash-aggregate shuffle —
-``groupBy(band, bh).agg(sort_array(collect_list(id)))`` — then the pair
-list is a NATIVE conditional array expression over the sorted member
-array (nested transform/slice), exploded. The round-1 form (window count
-+ localCheckpoint + equi-self-join) sorted 25x|docs| rows and spilled
-them to local disk per run: measured 38 s at local[8] on 1.36M pages,
-scaling at 0.33 efficiency (I/O-bound). The aggregate form does no sort,
-no checkpoint, and no join, and bucket statistics ride along as an
-``Observation`` (computed inside the SAME action, zero extra jobs).
-
-The only structural risk of collect_list is a mega-bucket's member array
-living in one row (~8 MB per 10^6 ids); bucket pathology beyond that is
-exactly what the banding hash makes astronomically unlikely for
-non-duplicate content, and duplicate families that large should be
-handled by the exact-dup pass first.
-
-Everything is native DataFrame ops — band hashes via xxhash64 over
-signature slices, no UDFs at all in this stage.
+Plan shape: ONE exchange, ``repartition(bh)``, feeds ``pair_kernel``
+(mapInArrow), which sorts its partition on (bh, id), walks the bucket
+runs and expands each bucket's pairs from ``bucket_pair_blocks`` — the
+one statement of the policy — in RecordBatches of at most 2^20 pairs.
+No bucket's members are ever one row (the risk of a collect_list per
+bucket) and a lossless cap streams C(n,2) in bounded pieces; a task
+holds its partition's keys, as a Spark sort would. The kernel counts the
+bucket stats into an ``Observation`` in the same action.
 """
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+# most pairs in one emitted RecordBatch
+_BATCH_PAIRS = 1 << 20
 
 
 def band_keys(
@@ -51,7 +50,7 @@ def band_keys(
     Band hash = xxhash64(band, sig[band*r : (band+1)*r]) computed natively;
     the band index is INSIDE the hash (a seed), so no separate band column
     ships through the big shuffle (round-2: 4 bytes/row off the hottest
-    exchange and a single-long group key for the hash aggregate).
+    exchange and a single-long group key).
     Default 25 bands x 5 rows: P(candidate | J=0.8) = 1-(1-0.8^5)^25 =
     0.99995 >= the 0.99 recall gate (16x8 would give only 0.947).
     """
@@ -67,41 +66,146 @@ def band_keys(
     )
 
 
-def _pairs_of(arr, struct_names=("src", "dst")):
-    """All C(n,2) ordered pairs of a SORTED array as a native expression:
-    flatten(transform(arr, (x,i) -> transform(suffix after x, y ->
-    struct(x,y)))). Sorted input makes src < dst by construction."""
-    sz = F.size(arr)
-    s, d = struct_names
-    return F.flatten(
-        F.transform(
-            arr,
-            lambda x, i: F.transform(
-                F.slice(arr, i + 2, F.greatest(sz - i - 1, F.lit(0))),
-                lambda y: F.struct(x.alias(s), y.alias(d)),
-            ),
-        )
+def bucket_pair_blocks(n: int, bucket_cap: int, hot_strategy: str):
+    """The pairing policy for one bucket of n sorted members: member-index
+    (i_lo, i_hi, j_lo, j_hi) blocks (every i < j inside) plus an (m, 2)
+    array of single (i, j) pairs. Full C(n,2) at n <= cap. Above it,
+    "star_chain" pairs every member with the minimum and with its sorted
+    successor (2n pairs, the cheapest connectivity-preserving form), and
+    "salted" (DESIGN §Skew item 4) pairs ceil(n/cap) chunks fully plus a
+    chain across the chunk heads. pair_kernel emits these pairs;
+    ann.semantic_dedup's kernel scores them without building rows."""
+    if n <= bucket_cap:
+        return [(0, n, 0, n)], np.empty((0, 2), dtype=np.int64)
+    if hot_strategy == "salted":
+        heads = np.arange(0, n, bucket_cap)
+        ends = np.minimum(heads + bucket_cap, n).tolist()
+        blocks = [(a, b, a, b) for a, b in zip(heads.tolist(), ends)]
+        return blocks, np.column_stack([heads[:-1], heads[1:]])
+    chain = np.arange(1, n - 1)
+    return [(0, 1, 1, n)], np.column_stack([chain, chain + 1])
+
+
+def _block_pairs(ilo: int, ihi: int, jlo: int, jhi: int, limit: int):
+    """Every (i, j) with i < j in [ilo, ihi) x [jlo, jhi), as index
+    arrays of at most ``limit`` pairs each."""
+    for j0 in range(jlo, jhi, limit):
+        j1 = min(j0 + limit, jhi)
+        rows = np.arange(ilo, min(ihi, j1 - 1))
+        start = np.maximum(rows + 1, j0)
+        cnt = j1 - start  # 1..limit per row
+        cum = np.cumsum(cnt)
+        a = 0
+        while a < len(rows):
+            b = int(np.searchsorted(cum, (cum[a - 1] if a else 0) + limit, "right"))
+            c = cnt[a:b]
+            # pair p of row r is (r, start[r] + p - first[r])
+            first = np.cumsum(c) - c
+            j = np.arange(int(c.sum())) - np.repeat(first - start[a:b], c)
+            yield np.repeat(rows[a:b], c), j
+            a = b
+
+
+def _shape_pairs(n: int, k: int, bucket_cap: int, hot_strategy: str, limit: int):
+    """(i, j) pieces of <= limit pairs: the policy's pairs for a bucket
+    of n rows whose first member is among its first k rows."""
+    blocks, singles = bucket_pair_blocks(n, bucket_cap, hot_strategy)
+    for ilo, ihi, jlo, jhi in blocks:
+        yield from _block_pairs(ilo, min(ihi, k), jlo, jhi, limit)
+    singles = singles[singles[:, 0] < k]
+    for c in range(0, len(singles), limit):
+        yield singles[c : c + limit, 0], singles[c : c + limit, 1]
+
+
+def _bucket_pieces(starts, sizes, k, bucket_cap, hot_strategy, limit):
+    """Row-index (i, j) pieces of <= limit pairs for every bucket: one
+    shape (n, k) at a time, its pairs broadcast over the bucket starts
+    of that shape unless they alone exceed the limit."""
+    multi = (sizes > 1) & (k > 0)
+    for n, kk in np.unique(np.column_stack([sizes[multi], k[multi]]), axis=0).tolist():
+        s = starts[multi & (sizes == n) & (k == kk)]
+        shape, held = [], 0
+        for piece in _shape_pairs(n, kk, bucket_cap, hot_strategy, limit):
+            shape.append(piece)
+            held += len(piece[0])
+            if held > limit:
+                break
+        if held > limit:
+            for b in s.tolist():
+                for i, j in _shape_pairs(n, kk, bucket_cap, hot_strategy, limit):
+                    yield b + i, b + j
+            continue
+        i, j = (np.concatenate(x) for x in zip(*shape))
+        step = limit // len(i)
+        for c in range(0, len(s), step):
+            yield (s[c : c + step, None] + i).ravel(), (s[c : c + step, None] + j).ravel()
+
+
+def pair_kernel(
+    batches,
+    id_col: str,
+    bucket_cap: int,
+    hot_strategy: str = "star_chain",
+    side_col: str | None = None,
+    dst_cols: tuple[str, ...] = (),
+):
+    """mapInArrow body of candidate_pairs: batches of (bh, id[, side],
+    *dst_cols) -> batches of (src, dst, *dst_cols, _stats).
+
+    Gathers the whole partition (a bucket's rows can span batches), drops
+    null ids, sorts on (bh[, side], id, *dst_cols) — Arrow orders strings
+    by bytes, as Spark does — and finds the bucket runs. The first row
+    out carries the partition's bucket stats in ``_stats``; every other
+    row is a pair, src before dst in sort order (src <= dst within a
+    side, the side-0 member on src for a mixed pair). With a side column
+    only pairs holding a side-0 member are enumerated: side 0 sorts
+    first, so they are the pairs whose first member is among the
+    bucket's k side-0 rows.
+
+    A pure function of the partition's row set: a task Spark re-runs
+    emits the same pairs, whatever its batch split and row order."""
+    batches = list(batches)
+    if not batches:
+        return
+    table = pa.Table.from_batches(batches)
+    table = table.filter(pc.is_valid(table[id_col]))
+    order = ["bh", *([side_col] if side_col else []), id_col, *dst_cols]
+    table = table.take(pc.sort_indices(table, [(c, "ascending") for c in order]))
+    if not table.num_rows:
+        return
+    ends = pc.run_end_encode(table["bh"].combine_chunks()).run_ends.to_numpy()
+    ends = ends.astype(np.int64)
+    starts = np.concatenate([[0], ends[:-1]])
+    sizes = ends - starts
+    k = sizes
+    if side_col:
+        k = np.add.reduceat((table[side_col].to_numpy() == 0).astype(np.int64), starts)
+    ids = table[id_col].combine_chunks()
+    extra = [table[c].combine_chunks() for c in dst_cols]
+    names = ["src", "dst", *dst_cols, "_stats"]
+    stats_t = pa.list_(pa.int64())
+    task = TaskContext.get()
+    stats = [
+        len(sizes),
+        int((sizes == 1).sum()),
+        int((sizes > bucket_cap).sum()),
+        int(sizes.max()),
+        int((sizes * (sizes - 1) // 2).sum()),
+        # keeps two partitions' equal stats rows apart in the distinct
+        task.partitionId() if task else 0,
+    ]
+    yield pa.RecordBatch.from_arrays(
+        [pa.nulls(1, a.type) for a in (ids, ids, *extra)] + [pa.array([stats], stats_t)],
+        names=names,
     )
-
-
-def bucket_stats_job(keys: DataFrame, bucket_cap: int = 64) -> dict:
-    """Explicit bucket-stats aggregate (same five fields the Observation
-    carries). Fallback for the zero-pair case, where AQE's empty-relation
-    propagation prunes the plan before CollectMetrics executes and the
-    Observation never populates (observed on Spark 4.1) — in exactly that
-    case this recompute is near-free (tiny input)."""
-    g = keys.groupBy("bh").agg(F.count("*").alias("n"))
-    row = g.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.count(F.when(F.col("n") == 1, 1)).alias("n_singleton"),
-        F.count(F.when(F.col("n") > bucket_cap, 1)).alias("n_hot"),
-        F.coalesce(F.max("n"), F.lit(0)).alias("max_bucket"),
-        F.coalesce(
-            F.round(F.sum(F.col("n").cast("double") * (F.col("n") - 1) / 2.0), 1),
-            F.lit(0.0),
-        ).alias("full_pairing_cost"),
-    ).collect()[0]
-    return row.asDict()
+    # one batch per bucket shape (or per limit-sized piece of a big one)
+    pieces = _bucket_pieces(starts, sizes, k, bucket_cap, hot_strategy, _BATCH_PAIRS)
+    for i, j in pieces:
+        yield pa.RecordBatch.from_arrays(
+            [ids.take(i), ids.take(j), *(a.take(j) for a in extra)]
+            + [pa.nulls(len(i), stats_t)],
+            names=names,
+        )
 
 
 def candidate_pairs(
@@ -109,121 +213,59 @@ def candidate_pairs(
     id_col: str = "url",
     bucket_cap: int = 64,
     hot_strategy: str = "star_chain",
-    with_stats: bool = True,
-) -> tuple[DataFrame, Observation | None]:
-    """(id, bh) -> canonical candidate pair DataFrame (src < dst),
-    distinct across bands.
+    side_col: str | None = None,
+    dst_cols: tuple[str, ...] = (),
+) -> tuple[DataFrame, Observation]:
+    """(id, bh) -> candidate pairs (src, dst), canonical src < dst and
+    distinct across bands; id and bh may be bigint or string.
 
     Returns (pairs, observation). The observation carries bucket stats
     (n_buckets, n_singleton, n_hot, max_bucket, full_pairing_cost) and is
     populated by the FIRST action on `pairs` — read ``observation.get``
-    after materializing; no extra job runs. None when with_stats=False.
+    after materializing; no extra job runs. hot_strategy picks how
+    buckets above bucket_cap pair (bucket_pair_blocks).
 
-    hot_strategy — how buckets ABOVE bucket_cap pair up (both preserve
-    within-bucket connectivity, so downstream CC sees the same clusters;
-    recall under forced hot buckets is gate-tested for both):
-      * "star_chain" (default): every member pairs with the bucket
-        minimum AND its successor in sorted order — 2n rows, the cheapest
-        connectivity-preserving form.
-      * "salted": DESIGN §Skew item 4 — the sorted member array splits
-        into ceil(n/cap) chunks; each chunk pairs fully (~cap^2/2 rows)
-        plus a chain across chunk heads reconnects the bucket. Denser
-        in-family verification at the same per-row bound. This branch
-        also serves audit.expand_group_pairs (cluster id as ``bh``).
-    """
-    grouped = keys.groupBy("bh").agg(
-        F.sort_array(F.collect_list(id_col)).alias("m")
+    side_col (0 or 1 per row) pairs two relations in one capped pass:
+    side-1 rows never pair with each other, and a mixed pair has its
+    side-0 id on src. The cap applies to the combined bucket, side 0
+    first. ``dst_cols`` are carried from each pair's dst row (the
+    streaming store's epoch)."""
+    out_schema = T.StructType(
+        [T.StructField(c, keys.schema[id_col].dataType) for c in ("src", "dst")]
+        + [keys.schema[c] for c in dst_cols]
+        + [T.StructField("_stats", T.ArrayType(T.LongType()))]
     )
-    n = F.size("m")
-    obs = None
-    if with_stats:
-        obs = Observation("bucket_stats")
-        grouped = grouped.observe(
+    kernel = functools.partial(
+        pair_kernel,
+        id_col=id_col,
+        bucket_cap=bucket_cap,
+        hot_strategy=hot_strategy,
+        side_col=side_col,
+        dst_cols=tuple(dst_cols),
+    )
+    st = F.col("_stats")
+    total = [F.coalesce(F.sum(st[i]), F.lit(0)) for i in range(5)]
+    obs = Observation()
+    # the stats rows pass the distinct and are counted after it, so a
+    # zero-pair result still feeds the observing stage and AQE cannot
+    # prune it as empty before it reports
+    pairs = (
+        keys.select("bh", id_col, *([side_col] if side_col else []), *dst_cols)
+        .repartition("bh")
+        .mapInArrow(kernel, out_schema)
+        .distinct()
+        .observe(
             obs,
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.sum((n == 1).cast("long")).alias("n_singleton"),
-            F.sum((n > bucket_cap).cast("long")).alias("n_hot"),
-            F.coalesce(F.max(n), F.lit(0)).alias("max_bucket"),
-            F.coalesce(
-                F.round(F.sum(n.cast("double") * (n - 1) / 2.0), 1), F.lit(0.0)
-            ).alias("full_pairing_cost"),
+            total[0].alias("n_buckets"),
+            total[1].alias("n_singleton"),
+            total[2].alias("n_hot"),
+            F.coalesce(F.max(st[3]), F.lit(0)).alias("max_bucket"),
+            F.round(total[4].cast("double"), 1).alias("full_pairing_cost"),
         )
-    multi = grouped.where(n > 1)
-
-    m = F.col("m")
-    if hot_strategy == "salted":
-        # row-bounded: one row per chunk index, each building only its own
-        # chunk's pairs (~cap^2/2 structs) plus the head edge to the next
-        # chunk, so no evaluated pair array holds a bucket's whole O(n*cap)
-        # pair set. n <= cap is one chunk: full C(n,2).
-        nc = F.ceil(n / F.lit(bucket_cap)).cast("int")
-        chunks = multi.select(
-            "m", nc.alias("nc"), F.explode(F.sequence(F.lit(0), nc - 1)).alias("c")
-        )
-        c = F.col("c")
-        head = F.struct(
-            F.get(m, c * bucket_cap).alias("src"),
-            F.get(m, (c + 1) * bucket_cap).alias("dst"),
-        )
-        exploded = chunks.select(
-            F.explode(
-                F.concat(
-                    _pairs_of(F.slice(m, c * bucket_cap + 1, bucket_cap)),
-                    F.slice(F.array(head), 1, (c < F.col("nc") - 1).cast("int")),
-                )
-            ).alias("p")
-        )
-    else:
-        full_expr = _pairs_of(m)
-        star = F.transform(
-            F.slice(m, 2, n - 1),
-            lambda y: F.struct(F.get(m, 0).alias("src"), y.alias("dst")),
-        )
-        # chain over sorted successors, skipping the min (covered by star);
-        # empty-typed fallback via a zero-length slice of star (id-type
-        # agnostic). F.get is 0-based and takes column indices.
-        chain = F.when(
-            n >= 3,
-            F.transform(
-                F.sequence(F.lit(1), n - 2),
-                lambda i: F.struct(
-                    F.get(m, i).alias("src"), F.get(m, i + 1).alias("dst")
-                ),
-            ),
-        ).otherwise(F.slice(star, 1, 0))
-        hot_expr = F.concat(star, chain)
-        pair_arr = F.when(n <= bucket_cap, full_expr).otherwise(hot_expr)
-        exploded = multi.select(F.explode(pair_arr).alias("p"))
-    pairs = exploded.select(
-        F.col("p.src").alias("src"), F.col("p.dst").alias("dst")
-    ).distinct()
+        .where(st.isNull())
+        .drop("_stats")
+    )
     return pairs, obs
-
-
-def bucket_pair_blocks(n: int, bucket_cap: int, hot_strategy: str):
-    """candidate_pairs' pairing plan for one bucket of n sorted members,
-    as member-index (i_lo, i_hi, j_lo, j_hi) blocks (every i < j inside)
-    plus explicit (i, j) singles — the same pair set, for kernels that
-    pair a bucket's members without building the pairs as rows
-    (ann.semantic_dedup). Full C(n,2) at n <= cap; above the cap either
-    the salted chunks plus the chunk-head chain or the star+chain form."""
-    blocks: list[tuple[int, int, int, int]] = []
-    singles: list[tuple[int, int]] = []
-    if n <= bucket_cap:
-        blocks.append((0, n, 0, n))
-        return blocks, singles
-    if hot_strategy == "salted":
-        n_chunks = -(-n // bucket_cap)
-        for c in range(n_chunks):
-            lo, hi = c * bucket_cap, min((c + 1) * bucket_cap, n)
-            blocks.append((lo, hi, lo, hi))
-        for c in range(n_chunks - 1):
-            singles.append((c * bucket_cap, (c + 1) * bucket_cap))
-    else:  # star_chain
-        blocks.append((0, 1, 1, n))  # star: min id with every member
-        for i in range(1, n - 1):  # chain over sorted successors
-            singles.append((i, i + 1))
-    return blocks, singles
 
 
 def candidate_pairs_two_table(

@@ -331,8 +331,8 @@ def signature_collapse(sigs: DataFrame, id_col: str = "url") -> DataFrame:
     Returns exact_map(url, rep). Downstream LSH runs on reps only, so
 
       * an m-copy boilerplate family contributes ONE member per band
-        bucket instead of m — the collect_list row-size pathology for
-        exact dups is structurally gone (near-dup hot buckets remain
+        bucket instead of m — the hot-bucket pathology for exact dups
+        is structurally gone (near-dup hot buckets remain
         bucket_cap's job), and the band shuffle shrinks by the corpus
         dup rate (~30-50% on real web crawls);
       * cluster labels are preserved: rep = min(url) per group, so the

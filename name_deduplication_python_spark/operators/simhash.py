@@ -67,7 +67,7 @@ def simhash_hamming_pairs(
 
     Routes the (blk, bv) blocks through the SAME skew machinery as the
     MinHash LSH join (operators.lsh.candidate_pairs): singleton buckets
-    are dropped by the hash aggregate, buckets <= bucket_cap pair fully
+    emit no pair, buckets <= bucket_cap pair fully
     (lossless — the pigeonhole guarantee holds verbatim), and buckets
     ABOVE the cap use the "salted" chunked pairing. Random block-value
     collisions at ~2^-16 never fill a bucket, but a DUPLICATE FAMILY
@@ -94,7 +94,6 @@ def simhash_hamming_pairs(
         id_col=id_col,
         bucket_cap=bucket_cap,
         hot_strategy="salted",
-        with_stats=False,
     )
     s = sigs.select(id_col, sim_col)
     a = s.select(F.col(id_col).alias("src"), F.col(sim_col).alias("sim_a"))

@@ -165,7 +165,7 @@ def substring_pairs(
         extracted, id_col, text_col, gram_chars, window
     ).localCheckpoint()
     keys = fps.select(id_col, F.col("fp").alias("bh"))
-    pairs, _ = candidate_pairs(keys, id_col=id_col, bucket_cap=bucket_cap, with_stats=False)
+    pairs, _ = candidate_pairs(keys, id_col=id_col, bucket_cap=bucket_cap)
     # count shared fingerprints per pair for ranking/auditing
     a = fps.select(F.col(id_col).alias("src"), "fp")
     b = fps.select(F.col(id_col).alias("dst"), "fp")
@@ -281,9 +281,7 @@ def shared_spans(
         extracted, id_col, text_col, gram_chars, window
     ).localCheckpoint()
     keys = anchors.select(id_col, F.col("fp").alias("bh")).distinct()
-    pairs, _ = candidate_pairs(
-        keys, id_col=id_col, bucket_cap=bucket_cap, with_stats=False
-    )
+    pairs, _ = candidate_pairs(keys, id_col=id_col, bucket_cap=bucket_cap)
     a = anchors.select(F.col(id_col).alias("src"), "fp", F.col("pos").alias("pos_a"))
     b = anchors.select(F.col(id_col).alias("dst"), "fp", F.col("pos").alias("pos_b"))
     anch = (

@@ -47,7 +47,7 @@ from .operators.components import (
     components_with_singletons,
 )
 from .operators.extract import extract_stage
-from .operators.lsh import band_keys, bucket_stats_job, candidate_pairs
+from .operators.lsh import band_keys, candidate_pairs
 from .operators.signatures import (
     collapse_hash_exprs,
     signature_collapse,
@@ -377,17 +377,18 @@ class DedupPipeline:
 
     def _write_bucket_stats(self, stage: str) -> None:
         """bucket_stats.json from the Observation that the write of
-        ``stage`` — the first write consuming `pairs` — populated. A
-        zero-row write may mean AQE's empty-relation pruning skipped the
-        CollectMetrics node: recompute explicitly then (tiny input)."""
+        ``stage`` — the first write consuming `pairs` — populated. The
+        kernel's stats rows reach it even with zero pairs, except past
+        another exchange: on a zero-row fused `edges` write AQE's
+        empty-relation pruning drops the observing stage from the final
+        plan (Spark 4.1), so there the (pair-free) pairing runs alone."""
         obs, keys = self._bucket_obs
         self._bucket_obs = None
-        if self._stage_rowcount(stage) > 0:
-            stats = obs.get
-        else:
-            stats = bucket_stats_job(keys, self.cfg.bucket_cap)
+        if stage == "edges" and self._stage_rowcount(stage) == 0:
+            pairs, obs = candidate_pairs(keys, id_col="uid", bucket_cap=self.cfg.bucket_cap)
+            pairs.count()
         with open(os.path.join(self.workdir, "bucket_stats.json"), "w") as f:
-            json.dump({k: float(v) for k, v in stats.items()}, f)
+            json.dump({k: float(v) for k, v in obs.get.items()}, f)
 
     # band/candidate/verify run on an 8-byte surrogate uid = xxhash64(url)
     # instead of full url strings: the band explode ships 25 rows/doc

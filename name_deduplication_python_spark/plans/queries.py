@@ -855,7 +855,7 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that no sf0.01 bucket can reach it — matching the lossless setting
     # q_simhash_hamming_pairs_sql already uses; the engine default remains
     # the scale setting.
-    pairs, _ = candidate_pairs(keys, bucket_cap=1_000_000, with_stats=False)
+    pairs, _ = candidate_pairs(keys, bucket_cap=1_000_000)
     # candidate_pairs canonicalized by STRING url order ("245" < "8");
     # re-canonicalize numerically to match the oracle's a.doc_id < b.doc_id
     s, d = F.col("src").cast("bigint"), F.col("dst").cast("bigint")
@@ -1636,9 +1636,11 @@ FROM s
 # driver query — exact mode (line strings as keys) so the whole rewrite
 # is SQL. Pages derive multi-line structure from the single-line corpus
 # (same regexp derivation as c4_clean_docs) plus planted footer lines
-# repeated across documents; the oracle replays split -> repeated-line
-# table (distinct-doc count >= 2, blanks never boilerplate) -> ordered
-# rebuild, empty-string for fully-boilerplate docs.
+# repeated across documents; pages on doc_id%5 break lines with CRLF,
+# which both engines split like LF (\r?\n). The oracle replays split ->
+# repeated-line table (distinct-doc count >= 2, blanks never
+# boilerplate) -> ordered rebuild, empty-string for fully-boilerplate
+# docs.
 # --------------------------------------------------------------------------
 
 
@@ -1646,10 +1648,12 @@ def q_line_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.linededup import dedup_lines
 
     d = F.col("doc_id")
+    nl = F.when(d % 5 == 0, F.lit("\r\n")).otherwise(F.lit("\n"))
     page = F.concat(
-        F.regexp_replace(F.col("text"), " (the|a) ", "\n"),
-        F.lit("\nshared footer boilerplate appears on every page"),
-        F.when(d % 2 == 0, F.lit("\neven page promo banner text"))
+        F.regexp_replace(F.col("text"), " (the|a) ", nl),
+        nl,
+        F.lit("shared footer boilerplate appears on every page"),
+        F.when(d % 2 == 0, F.concat(nl, F.lit("even page promo banner text")))
         .otherwise(F.lit("")),
     )
     pages = _docs(spark, sf_dir).select("doc_id", page.alias("text"))
@@ -1662,14 +1666,17 @@ def q_line_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_LINE_DEDUP_DOCS = r"""
 WITH p AS (
   SELECT doc_id,
-         regexp_replace(text, ' (the|a) ', chr(10), 'g')
-         || chr(10) || 'shared footer boilerplate appears on every page'
+         regexp_replace(text, ' (the|a) ', nl, 'g')
+         || nl || 'shared footer boilerplate appears on every page'
          || CASE WHEN doc_id % 2 = 0
-                 THEN chr(10) || 'even page promo banner text'
+                 THEN nl || 'even page promo banner text'
                  ELSE '' END AS text
-  FROM documents
+  FROM (SELECT doc_id, text,
+               CASE WHEN doc_id % 5 = 0 THEN chr(13) || chr(10)
+                    ELSE chr(10) END AS nl
+        FROM documents)
 ), t AS (
-  SELECT doc_id, string_split(text, chr(10)) AS lines FROM p
+  SELECT doc_id, string_split_regex(text, '\r?\n') AS lines FROM p
 ), x AS (
   SELECT doc_id,
          unnest([{'pos': i, 'line': lines[i]}

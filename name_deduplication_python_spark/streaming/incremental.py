@@ -6,9 +6,9 @@ that, per micro-batch of new pages,
 
   1. extracts + signs the new pages (same kernels as batch — identical
      signatures by construction),
-  2. LSH-joins the batch's band keys against the accumulated signature
-     store (new-vs-old two-table join, J3 analog, plus new-vs-new
-     self-join),
+  2. pairs the batch's band keys with the store keys sharing their
+     buckets in ONE capped pass (lsh.candidate_pairs with a side column:
+     new-vs-new and new-vs-old together, the J2/J3 analogs),
   3. verifies and appends edges, then appends the new signatures to the
      store (exactly-once per epoch via idempotent epoch subdirs).
 
@@ -164,9 +164,10 @@ class IncrementalDedup:
         """Store signatures of exactly the (dst, epoch) versions in this
         batch's cross pairs — the verify join pulls the 512 B payloads of
         touched docs only, O(batch + touched docs) per epoch, not
-        O(corpus). Every dst is a store url at its latest epoch and never
-        a batch url (_pruned_store_keys), so no re-crawl filter is needed
-        here."""
+        O(corpus). Every dst with an epoch is a store url at its latest
+        epoch and never a batch url (_pruned_store_keys), so no re-crawl
+        filter is needed here; batch-batch pairs carry a null epoch and
+        fetch nothing."""
         fetch = cross.select(F.col("dst").alias("url"), "epoch")
         return old_sigs.join(F.broadcast(fetch), ["url", "epoch"], "left_semi").drop(
             "epoch"
@@ -176,20 +177,22 @@ class IncrementalDedup:
         """foreachBatch body — also callable directly for unit tests.
 
         Band keys are PERSISTED per epoch as plain parquet
-        (store/band_keys/epoch=N), and the batch's keys join against the
-        key store after _pruned_store_keys cut it to the batch's buckets
+        (store/band_keys/epoch=N), and the batch's keys pair with the key
+        store's rows after _pruned_store_keys cut it to the batch's buckets
         inside the scan — the store is never shuffled; per-epoch shuffle
         cost is O(batch + touched buckets). (Round 1 recomputed band_keys
         over the whole corpus per epoch; round 3 still shuffled the full
-        key store.) The cross pairs carry the store side's epoch, and the
-        verify payloads are fetched by that (url, epoch) — see
-        _store_sigs_for.
+        key store.) One candidate_pairs call pairs the batch keys (side 0)
+        with those store keys (side 1): store keys never pair with each
+        other, a hot bucket is capped whatever side its members come from,
+        and a cross pair carries the store side's epoch, by which the
+        verify payloads are fetched — see _store_sigs_for.
 
         Replay exactness: all store reads are filtered to ``epoch <
         epoch_id``. A crash after the band_keys/epoch=N write but before
         the signatures write (the idempotence marker) leaves partial
         epoch-N files in the store; an unfiltered replay of epoch N would
-        read its OWN keys back and cross-join the batch against itself
+        read its OWN keys back and pair the batch against itself
         (self-edges + duplicated intra-batch pairs). The filter makes the
         replay read exactly what the first attempt read.
 
@@ -209,16 +212,17 @@ class IncrementalDedup:
             shingle_k=c["shingle_k"],
             seed=c["seed"],
         ).localCheckpoint()
-        # reused three ways (self-join, store cross-join, persistence)
+        # reused three ways (store pruning, pairing, persistence)
         new_keys = band_keys(
             new_sigs, bands=c["bands"], rows_per_band=c["rows_per_band"]
         ).localCheckpoint()
 
-        # new-vs-new self-join
-        pairs, _ = candidate_pairs(new_keys, bucket_cap=c["bucket_cap"], with_stats=False)
-        all_sigs = new_sigs
+        keys = new_keys.select(
+            "url", "bh", F.lit(0).alias("side"), F.lit(None).cast("int").alias("epoch")
+        )
         # cold-store rule (see docstring)
-        if any(e < epoch_id for e in self._committed_epochs()):
+        warm = any(e < epoch_id for e in self._committed_epochs())
+        if warm:
             old_sigs = self._read_store("signatures").where(F.col("epoch") < epoch_id)
             old_keys = self._pruned_store_keys(
                 self._read_store("band_keys").where(F.col("epoch") < epoch_id),
@@ -226,21 +230,23 @@ class IncrementalDedup:
                 new_keys,
                 new_sigs.select("url"),
             )
-            # new on src, store on dst with its epoch; the anti-join on
-            # batch urls keeps src != dst and the cross pairs disjoint
-            # from the self-join's. Checkpointed: O(batch), read twice.
-            cross = (
-                new_keys.select("bh", F.col("url").alias("src"))
-                .join(old_keys.select("bh", F.col("url").alias("dst"), "epoch"), "bh")
-                .select("src", "dst", "epoch")
-                .distinct()
-                .localCheckpoint()
+            # store keys pair as side 1: never with each other, and with a
+            # batch url on src; the anti-join on batch urls keeps src != dst
+            keys = keys.unionByName(
+                old_keys.select("url", "bh", F.lit(1).alias("side"), "epoch")
             )
-            pairs = pairs.unionByName(cross.drop("epoch"))
-            all_sigs = new_sigs.unionByName(self._store_sigs_for(old_sigs, cross))
+        # one capped pass: new-vs-new and new-vs-store (dst's epoch carried)
+        pairs, _ = candidate_pairs(
+            keys, bucket_cap=c["bucket_cap"], side_col="side", dst_cols=("epoch",)
+        )
+        all_sigs = new_sigs
+        if warm:
+            # O(batch) pairs read twice (store payload fetch, verify)
+            pairs = pairs.localCheckpoint()
+            all_sigs = new_sigs.unionByName(self._store_sigs_for(old_sigs, pairs))
 
         edges = verify_stage(
-            pairs,
+            pairs.drop("epoch"),
             all_sigs,
             num_hashes=c["num_hashes"],
             jaccard_threshold=c["jaccard_threshold"],

@@ -66,9 +66,7 @@ def near_dup_clusters(docs: DataFrame, cfg: dict) -> DataFrame:
     keys = band_keys(
         sigs, bands=cfg["bands"], rows_per_band=cfg["rows_per_band"]
     )
-    pairs, _ = candidate_pairs(
-        keys, bucket_cap=cfg["bucket_cap"], with_stats=False
-    )
+    pairs, _ = candidate_pairs(keys, bucket_cap=cfg["bucket_cap"])
     edges = verify_stage(
         pairs,
         sigs,

@@ -8,7 +8,7 @@ stage is exercised.
 Usage: python scripts/profile_edges.py <cores> <run_dir> <substep>
   substep: keys | pairs | verify | edges
     keys   = scan + rep-filter + 25x band explode (no shuffle)
-    pairs  = keys + band-bucket hash-agg + pair explode + distinct
+    pairs  = keys + bh exchange + pair kernel (mapInArrow) + distinct
     verify = verify join only (pairs read from parquet, written once)
     edges  = the real fused shape (pairs piped into verify)
 Prints one JSON line with wall seconds.
@@ -54,14 +54,14 @@ keys = band_keys(rep_sigs, id_col="uid", bands=C["bands"], rows_per_band=C["rows
 
 pairs_pq = os.path.join(run_dir, "profile_pairs")
 if substep == "verify" and not os.path.exists(os.path.join(pairs_pq, "_SUCCESS")):
-    p, _ = candidate_pairs(keys, id_col="uid", bucket_cap=C["bucket_cap"], with_stats=False)
+    p, _ = candidate_pairs(keys, id_col="uid", bucket_cap=C["bucket_cap"])
     p.write.mode("overwrite").parquet(pairs_pq)
 
 t0 = time.time()
 if substep == "keys":
     _noop(keys)
 elif substep == "pairs":
-    p, _ = candidate_pairs(keys, id_col="uid", bucket_cap=C["bucket_cap"], with_stats=False)
+    p, _ = candidate_pairs(keys, id_col="uid", bucket_cap=C["bucket_cap"])
     _noop(p)
 elif substep == "verify":
     p = spark.read.parquet(pairs_pq)
@@ -74,7 +74,7 @@ elif substep == "verify":
         )
     )
 elif substep == "edges":
-    p, _ = candidate_pairs(keys, id_col="uid", bucket_cap=C["bucket_cap"], with_stats=False)
+    p, _ = candidate_pairs(keys, id_col="uid", bucket_cap=C["bucket_cap"])
     _noop(
         verify_stage(
             p, sigs_u, id_col="uid", label_col="url",

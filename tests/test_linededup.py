@@ -68,6 +68,22 @@ def test_dedup_lines_exact_matches_hashed(spark):
     assert a == b
 
 
+def test_dedup_lines_crlf_boilerplate(spark):
+    """CRLF pages split into lines like LF ones (repetition.py's rule):
+    a boilerplate line shared with an LF page is repeated and removed,
+    and the survivors are rebuilt with LF."""
+    pages = spark.createDataFrame(
+        [
+            ("u1", "intro one\nshared footer line"),
+            ("u2", "intro two\r\nshared footer line\r\nmore text"),
+        ],
+        "url string, text string",
+    )
+    for exact in (True, False):
+        got = {r.url: r.text for r in dedup_lines(pages, exact=exact).collect()}
+        assert got == {"u1": "intro one", "u2": "intro two\nmore text"}, exact
+
+
 def test_dedup_lines_plan_has_no_python(spark):
     plan = (
         dedup_lines(_pages(spark))

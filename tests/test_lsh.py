@@ -89,49 +89,142 @@ def test_hot_bucket_salted_strategy(spark):
     assert len({find(u) for u in texts}) == 1, "salted bucket must stay connected"
 
 
-@pytest.mark.parametrize("hot_strategy", ["star_chain", "salted"])
-def test_pair_blocks_match_candidate_pairs(spark, hot_strategy):
-    """bucket_pair_blocks (the index form ann.semantic_dedup pairs by) and
-    candidate_pairs' SQL form emit the same pair set on buckets at and
-    around the cap: below, at, one over, whole chunks, a partial chunk."""
-    cap = 4
-    sizes = [2, cap, cap + 1, 2 * cap, 3 * cap + 5]
-    # disjoint, sorted id ranges per bucket: member index i <-> id base+i
-    rows = [(b * 1000 + i, b) for b, n in enumerate(sizes) for i in range(n)]
-    keys = spark.createDataFrame(rows, "uid bigint, bh bigint")
-    pairs, _ = candidate_pairs(
-        keys, id_col="uid", bucket_cap=cap, hot_strategy=hot_strategy,
-        with_stats=False,
-    )
-    got = {(r.src, r.dst) for r in pairs.collect()}
-    want = set()
+# ids whose UTF-8 byte order (Spark's string order, and Python's code
+# point order) differs from UTF-16 order: U+1D538 sorts after U+FF41
+_STR_IDS = ["Z", "a", "z", "\u00e9", "\uff41", "\U0001d538", "\u00e9a", "a\u0301"]
+
+
+def _bucket_rows(kind, sizes):
+    """(id, bh, side, tag) rows: ids shuffled within each bucket, sides
+    alternating by row, tag unique per row."""
+    import random
+
+    rng = random.Random(5)
+    rows = []
     for b, n in enumerate(sizes):
-        blocks, singles = bucket_pair_blocks(n, cap, hot_strategy)
-        for ilo, ihi, jlo, jhi in blocks:
-            want |= {
-                (b * 1000 + i, b * 1000 + j)
-                for i in range(ilo, ihi)
-                for j in range(jlo, jhi)
-                if i < j
-            }
-        want |= {(b * 1000 + i, b * 1000 + j) for i, j in singles}
-    assert got == want
+        if kind == "bigint":
+            ids = [b * 1000 + i for i in range(n)]
+        else:
+            ids = [f"{_STR_IDS[i % 8]}{i // 8}.{b}" for i in range(n)]
+        rng.shuffle(ids)
+        rows += [(x, b, i % 2, b * 1000 + i) for i, x in enumerate(ids)]
+    return rows
+
+
+def _policy_pairs(rows, cap, hot_strategy, sided):
+    """Brute force from bucket_pair_blocks: each bucket ordered by
+    (side, id) when sided, else by id; pairs kept when one member is
+    side 0 (the first member, in that order)."""
+    by_bucket: dict = {}
+    for r in rows:
+        by_bucket.setdefault(r[1], []).append(r)
+    want = set()
+    for members in by_bucket.values():
+        m = sorted(members, key=lambda r: (r[2] if sided else 0, r[0]))
+        blocks, singles = bucket_pair_blocks(len(m), cap, hot_strategy)
+        idx = {
+            (i, j)
+            for ilo, ihi, jlo, jhi in blocks
+            for i in range(ilo, ihi)
+            for j in range(jlo, jhi)
+            if i < j
+        } | {(int(i), int(j)) for i, j in singles}
+        want |= {
+            (m[i][0], m[j][0], m[j][3])
+            for i, j in idx
+            if not sided or m[i][2] == 0
+        }
+    return want
+
+
+@pytest.mark.parametrize("sided", [False, True])
+@pytest.mark.parametrize("kind", ["bigint", "string"])
+@pytest.mark.parametrize("hot_strategy", ["star_chain", "salted"])
+def test_pair_blocks_match_candidate_pairs(spark, hot_strategy, kind, sided):
+    """bucket_pair_blocks (the policy the kernel emits and
+    ann.semantic_dedup pairs by) and candidate_pairs emit the same pair
+    set on buckets at and around the cap: below, at, one over, whole
+    chunks, a partial chunk. String ids canonicalize in UTF-8 byte
+    order. With a side column only pairs holding a side-0 member come
+    out, a mixed pair has its side-0 id on src, and dst carries its own
+    row's tag."""
+    cap = 4
+    rows = _bucket_rows(kind, [2, cap, cap + 1, 2 * cap, 3 * cap + 5])
+    keys = spark.createDataFrame(rows, f"uid {kind}, bh bigint, side int, tag bigint")
+    pairs, _ = candidate_pairs(
+        keys,
+        id_col="uid",
+        bucket_cap=cap,
+        hot_strategy=hot_strategy,
+        side_col="side" if sided else None,
+        dst_cols=("tag",),
+    )
+    got = {(r.src, r.dst, r.tag) for r in pairs.collect()}
+    assert got == _policy_pairs(rows, cap, hot_strategy, sided)
+    side = {r[0]: r[2] for r in rows}
+    for s, d, _ in got:
+        if sided and side[s] != side[d]:
+            assert side[s] == 0
+        else:
+            assert s < d
+
+
+@pytest.mark.parametrize("sided", [False, True])
+def test_pair_kernel_same_pairs_under_any_split(sided, monkeypatch):
+    """Retry safety without Spark: the module-level kernel fed the same
+    rows in shuffled order, split into batches of 1, 7 and 512 rows,
+    emits the same pair set (and the same stats) — a task Spark re-runs
+    emits the same pairs. Output batches never exceed the pair limit."""
+    import random
+
+    import pyarrow as pa
+
+    from name_deduplication_python_spark.operators import lsh
+
+    rows = _bucket_rows("string", [1, 2, 3, 5, 9, 17, 40, 1, 6]) + _bucket_rows(
+        "string", [4, 70]
+    )
+    rows = [(x, bh % 7, side, tag) for x, bh, side, tag in rows]
+    rng = random.Random(11)
+    seen = []
+    for size, limit in ((1, 5), (7, 1 << 20), (512, 64)):
+        rng.shuffle(rows)
+        monkeypatch.setattr(lsh, "_BATCH_PAIRS", limit)
+        table = pa.table(
+            {k: [r[i] for r in rows] for i, k in enumerate(("uid", "bh", "side", "tag"))}
+        )
+        out = lsh.pair_kernel(
+            iter(table.to_batches(max_chunksize=size)),
+            id_col="uid",
+            bucket_cap=8,
+            side_col="side" if sided else None,
+            dst_cols=("tag",),
+        )
+        pairs, stats = set(), []
+        for batch in out:
+            assert batch.num_rows <= limit
+            d = batch.to_pydict()
+            for s, t, tag, st in zip(d["src"], d["dst"], d["tag"], d["_stats"]):
+                if st is None:
+                    pairs.add((s, t, tag))
+                else:
+                    stats.append(st)
+        assert pairs and len(stats) == 1
+        seen.append((pairs, stats))
+    assert seen[0] == seen[1] == seen[2]
 
 
 def test_singleton_buckets_dropped(spark):
     texts = {f"u{i}": f"totally unique document number {i} with words w{i}a w{i}b w{i}c w{i}d w{i}e w{i}f" for i in range(20)}
     sigs = _sigs(spark, texts)
     keys = band_keys(sigs)
-    from name_deduplication_python_spark.operators.lsh import bucket_stats_job
-
     total = keys.count()
     pairs, obs = candidate_pairs(keys)
     assert pairs.count() == 0  # all buckets singleton -> no pairs at all
-    # zero-pair plans are AQE-pruned before CollectMetrics (the pipeline
-    # falls back the same way) -> use the explicit stats job
-    st = bucket_stats_job(keys)
-    assert st["n_singleton"] > 0
-    assert st["n_buckets"] <= total
+    # the kernel's stats rows reach the Observation even with zero pairs
+    st = obs.get
+    assert st["n_singleton"] == st["n_buckets"] == total
+    assert st["max_bucket"] == 1 and st["full_pairing_cost"] == 0.0
 
 
 def test_two_table_linkage(spark):

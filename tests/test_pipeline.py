@@ -217,6 +217,31 @@ def test_fused_pipeline_resumes_from_signatures(spark, tmp_path):
     assert a.equals(b)
 
 
+def test_zero_pair_bucket_stats_both_layouts(spark, tmp_path):
+    """A corpus with no shared bucket still gets its bucket stats: the
+    staged pairs write populates the Observation through the kernel's
+    stats rows, and the fused zero-edge write, whose observing stage AQE
+    prunes, re-runs the pair-free pairing for them."""
+    import json
+
+    from name_deduplication_python_spark.schemas import WEB_PAGES
+
+    rows = [
+        (f"u{i}", None, None, f"unique page {i} words w{i}a w{i}b w{i}c w{i}d w{i}e", "en")
+        for i in range(12)
+    ]
+    df = spark.createDataFrame(rows, WEB_PAGES)
+    stats = []
+    for fused in (False, True):
+        wd = str(tmp_path / str(fused))
+        DedupPipeline(spark, wd, DedupConfig(fuse_stages=fused)).run(df)
+        with open(os.path.join(wd, "bucket_stats.json")) as f:
+            stats.append(json.load(f))
+    assert stats[0] == stats[1]
+    assert stats[0]["n_buckets"] == stats[0]["n_singleton"] == 12 * 25
+    assert stats[0]["max_bucket"] == 1.0 and stats[0]["full_pairing_cost"] == 0.0
+
+
 def test_fused_and_staged_clusters_identical(spark, tmp_path):
     """fuse_stages only selects which stages persist, so the two layouts
     must give the same clusters, the same edges table and the same

@@ -617,3 +617,38 @@ def test_epoch_without_band_keys_then_normal_epoch(spark, tmp_path):
     inc.process_batch(_pages(spark, [("u1", text), ("u2", text)]), 1)
     got = {tuple(sorted((r.src, r.dst))) for r in inc.edges().collect()}
     assert got == {("u1", "u2")}
+
+
+def test_hot_store_bucket_is_capped(spark, tmp_path):
+    """A batch landing in a hot store bucket pairs under the same cap as
+    any other bucket: 5 more copies of a page already stored 200 times
+    emit O(n) cross pairs, not 5 x 200 = 1,000, and still join the
+    store's cluster through edges()."""
+    from name_deduplication_python_spark.schemas import WEB_PAGES
+
+    text = " ".join(f"boilerplate token{i} repeated on every page" for i in range(12))
+
+    def pages(lo, hi):
+        rows = [(f"http://hot.example/{i:03d}", None, None, text, "en") for i in range(lo, hi)]
+        return spark.createDataFrame(rows, WEB_PAGES)
+
+    inc = IncrementalDedup(spark, str(tmp_path / "store"))
+    inc.process_batch(pages(0, 200), 0)
+    inc.process_batch(pages(200, 205), 1)
+    edges = inc.edges().select("src", "dst", "epoch").collect()
+    batch = {f"http://hot.example/{i:03d}" for i in range(200, 205)}
+    cross = [r for r in edges if r.epoch == 1 and (r.src in batch) != (r.dst in batch)]
+    # star_chain over the 205-member bucket: the star plus the chain
+    assert 0 < len(cross) <= 2 * 205, len(cross)
+    assert all(r.src in batch for r in cross)
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for r in edges:
+        parent[find(r.src)] = find(r.dst)
+    assert len({find(f"http://hot.example/{i:03d}") for i in range(205)}) == 1
