@@ -137,36 +137,39 @@ def _policy_pairs(rows, cap, hot_strategy, sided):
     return want
 
 
-@pytest.mark.parametrize("sided", [False, True])
-@pytest.mark.parametrize("kind", ["bigint", "string"])
 @pytest.mark.parametrize("hot_strategy", ["star_chain", "salted"])
-def test_pair_blocks_match_candidate_pairs(spark, hot_strategy, kind, sided):
+def test_pair_blocks_match_candidate_pairs(spark, hot_strategy):
     """bucket_pair_blocks (the policy the kernel emits and
     ann.semantic_dedup pairs by) and candidate_pairs emit the same pair
     set on buckets at and around the cap: below, at, one over, whole
-    chunks, a partial chunk. String ids canonicalize in UTF-8 byte
-    order. With a side column only pairs holding a side-0 member come
-    out, a mixed pair has its side-0 id on src, and dst carries its own
-    row's tag."""
+    chunks, a partial chunk; for bigint and string ids, with and without
+    a side column. String ids canonicalize in UTF-8 byte order. With a
+    side column only pairs holding a side-0 member come out, a mixed
+    pair has its side-0 id on src, and dst carries its own row's tag."""
     cap = 4
-    rows = _bucket_rows(kind, [2, cap, cap + 1, 2 * cap, 3 * cap + 5])
-    keys = spark.createDataFrame(rows, f"uid {kind}, bh bigint, side int, tag bigint")
-    pairs, _ = candidate_pairs(
-        keys,
-        id_col="uid",
-        bucket_cap=cap,
-        hot_strategy=hot_strategy,
-        side_col="side" if sided else None,
-        dst_cols=("tag",),
-    )
-    got = {(r.src, r.dst, r.tag) for r in pairs.collect()}
-    assert got == _policy_pairs(rows, cap, hot_strategy, sided)
-    side = {r[0]: r[2] for r in rows}
-    for s, d, _ in got:
-        if sided and side[s] != side[d]:
-            assert side[s] == 0
-        else:
-            assert s < d
+    for kind in ("bigint", "string"):
+        rows = _bucket_rows(kind, [2, cap, cap + 1, 2 * cap, 3 * cap + 5])
+        keys = spark.createDataFrame(
+            rows, f"uid {kind}, bh bigint, side int, tag bigint"
+        )
+        side = {r[0]: r[2] for r in rows}
+        for sided in (False, True):
+            case = f"kind={kind} sided={sided}"
+            pairs, _ = candidate_pairs(
+                keys,
+                id_col="uid",
+                bucket_cap=cap,
+                hot_strategy=hot_strategy,
+                side_col="side" if sided else None,
+                dst_cols=("tag",),
+            )
+            got = {(r.src, r.dst, r.tag) for r in pairs.collect()}
+            assert got == _policy_pairs(rows, cap, hot_strategy, sided), case
+            for s, d, _ in got:
+                if sided and side[s] != side[d]:
+                    assert side[s] == 0, case
+                else:
+                    assert s < d, case
 
 
 @pytest.mark.parametrize("sided", [False, True])
