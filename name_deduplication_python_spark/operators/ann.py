@@ -117,6 +117,20 @@ def _vec_dim(emb: DataFrame, vec_col: str, dim: int | None) -> int:
     return len(emb.select(vec_col).limit(1).collect()[0][0])
 
 
+def _lsh_sigs_and_vecs(emb, id_col, vec_col, dim, n_tables, bits_per_table, seed, n_hint):
+    """Hyperplane-LSH (id, table, bucket) rows and the double-cast (id, v)
+    vectors the ANN joins re-rank by; bits_per_table=None auto-scales
+    from n (n_hint, else one count job)."""
+    if bits_per_table is None:
+        bits_per_table = auto_bits_per_table(n_hint if n_hint is not None else emb.count())
+    sigs = hyperplane_signatures(
+        emb, id_col, vec_col, dim=_vec_dim(emb, vec_col, dim), n_tables=n_tables,
+        bits_per_table=bits_per_table, seed=seed,
+    )
+    vecs = emb.select(id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("v"))
+    return sigs, vecs
+
+
 def ann_lsh_topk(
     emb: DataFrame,
     id_col: str = "vec_id",
@@ -144,18 +158,8 @@ def ann_lsh_topk(
     at cap * |bucket| rows; queries in the bucket still re-rank exactly
     within those candidates.
     """
-    dim = _vec_dim(emb, vec_col, dim)
-    if bits_per_table is None:
-        bits_per_table = auto_bits_per_table(
-            n_hint if n_hint is not None else emb.count()
-        )
-    sigs = hyperplane_signatures(
-        emb, id_col, vec_col, dim=dim, n_tables=n_tables,
-        bits_per_table=bits_per_table, seed=seed,
-    )
-    vecs = emb.select(
-        F.col(id_col),
-        F.transform(vec_col, lambda x: x.cast("double")).alias("v"),
+    sigs, vecs = _lsh_sigs_and_vecs(
+        emb, id_col, vec_col, dim, n_tables, bits_per_table, seed, n_hint
     )
     q_sigs = sigs if query_filter is None else sigs.where(query_filter)
     cand_sigs = sigs.select(F.col(id_col).alias("cand_id"), "table", "bucket")
@@ -377,18 +381,8 @@ def embedding_near_dup_pairs(
     no pair, buckets above bucket_cap get the salted chunked pairing —
     a family of identical embeddings stays one connected component at
     ~cap*n/2 pairs instead of going n^2."""
-    dim = _vec_dim(emb, vec_col, dim)
-    if bits_per_table is None:
-        bits_per_table = auto_bits_per_table(
-            n_hint if n_hint is not None else emb.count()
-        )
-    sigs = hyperplane_signatures(
-        emb, id_col, vec_col, dim=dim, n_tables=n_tables,
-        bits_per_table=bits_per_table, seed=seed,
-    )
-    vecs = emb.select(
-        F.col(id_col),
-        F.transform(vec_col, lambda x: x.cast("double")).alias("v"),
+    sigs, vecs = _lsh_sigs_and_vecs(
+        emb, id_col, vec_col, dim, n_tables, bits_per_table, seed, n_hint
     )
     keys = sigs.select(id_col, F.xxhash64("table", "bucket").alias("bh"))
     cand, _ = candidate_pairs(

@@ -13,14 +13,16 @@ reference is single-process and has no skew story, SURVEY §4.2):
     preserved, so downstream connected components see the same clusters;
     recall impact is gate-tested (tests/test_recall.py).
 
-Plan shape: ONE exchange, ``repartition(bh)``, feeds ``pair_kernel``
-(mapInArrow), which sorts its partition on (bh, id), walks the bucket
-runs and expands each bucket's pairs from ``bucket_pair_blocks`` — the
-one statement of the policy — in RecordBatches of at most 2^20 pairs.
-No bucket's members are ever one row (the risk of a collect_list per
-bucket) and a lossless cap streams C(n,2) in bounded pieces; a task
-holds its partition's keys, as a Spark sort would. The kernel counts the
-bucket stats into an ``Observation`` in the same action.
+Plan shape: ONE exchange, ``repartition(bh)``, then a sort within each
+partition on (bh[, side], id) — Spark's, which spills — feeds
+``pair_kernel`` (mapInArrow). The kernel streams the sorted rows, holds
+a bounded slice of them plus the bucket in progress, and expands each
+bucket's pairs from ``bucket_pair_blocks`` — the one statement of the
+policy — in RecordBatches of at most 2^20 pairs. A Python worker so
+holds _HOLD_ROWS rows plus its largest bucket, never its whole
+partition, and a lossless cap streams C(n,2) in bounded pieces. The
+kernel counts the bucket stats into an ``Observation`` in the same
+action.
 """
 
 from __future__ import annotations
@@ -37,6 +39,9 @@ from pyspark.sql import types as T
 
 # most pairs in one emitted RecordBatch
 _BATCH_PAIRS = 1 << 20
+# input rows pair_kernel holds before it pairs the buckets they complete
+_HOLD_ROWS = 1 << 16
+_STATS_T = pa.list_(pa.int64())
 
 
 def band_keys(
@@ -106,39 +111,57 @@ def _block_pairs(ilo: int, ihi: int, jlo: int, jhi: int, limit: int):
             a = b
 
 
-def _shape_pairs(n: int, k: int, bucket_cap: int, hot_strategy: str, limit: int):
-    """(i, j) pieces of <= limit pairs: the policy's pairs for a bucket
-    of n rows whose first member is among its first k rows."""
-    blocks, singles = bucket_pair_blocks(n, bucket_cap, hot_strategy)
-    for ilo, ihi, jlo, jhi in blocks:
-        yield from _block_pairs(ilo, min(ihi, k), jlo, jhi, limit)
-    singles = singles[singles[:, 0] < k]
-    for c in range(0, len(singles), limit):
-        yield singles[c : c + limit, 0], singles[c : c + limit, 1]
-
-
 def _bucket_pieces(starts, sizes, k, bucket_cap, hot_strategy, limit):
-    """Row-index (i, j) pieces of <= limit pairs for every bucket: one
-    shape (n, k) at a time, its pairs broadcast over the bucket starts
-    of that shape unless they alone exceed the limit."""
+    """Row-index (i, j) pieces of <= limit pairs for every bucket: the
+    policy's pairs whose first member is among the bucket's first k rows.
+    Buckets of one shape (n, k) share one set of member-index pairs,
+    broadcast over their starts unless it alone exceeds the limit."""
     multi = (sizes > 1) & (k > 0)
     for n, kk in np.unique(np.column_stack([sizes[multi], k[multi]]), axis=0).tolist():
         s = starts[multi & (sizes == n) & (k == kk)]
-        shape, held = [], 0
-        for piece in _shape_pairs(n, kk, bucket_cap, hot_strategy, limit):
-            shape.append(piece)
-            held += len(piece[0])
-            if held > limit:
-                break
-        if held > limit:
+        blocks, singles = bucket_pair_blocks(n, bucket_cap, hot_strategy)
+        blocks = [(a, min(b, kk), c, d) for a, b, c, d in blocks]
+        singles = singles[singles[:, 0] < kk]
+        count = len(singles) + sum(
+            int(np.maximum(d - np.maximum(np.arange(a, b) + 1, c), 0).sum())
+            for a, b, c, d in blocks
+        )
+
+        def shape():
+            for blk in blocks:
+                yield from _block_pairs(*blk, limit)
+            for c in range(0, len(singles), limit):
+                yield singles[c : c + limit, 0], singles[c : c + limit, 1]
+
+        if count > limit:
             for b in s.tolist():
-                for i, j in _shape_pairs(n, kk, bucket_cap, hot_strategy, limit):
+                for i, j in shape():
                     yield b + i, b + j
             continue
-        i, j = (np.concatenate(x) for x in zip(*shape))
-        step = limit // len(i)
+        i, j = (np.concatenate(x) for x in zip(*shape()))
+        step = limit // count
         for c in range(0, len(s), step):
             yield (s[c : c + step, None] + i).ravel(), (s[c : c + step, None] + j).ravel()
+
+
+def _run_pairs(table, stats, schema, bucket_cap, hot_strategy, side_col):
+    """Pair batches for the whole buckets in ``table`` (sorted rows of
+    (bh, id[, side], *dst_cols)); adds their bucket stats to ``stats``."""
+    ends = pc.run_end_encode(table["bh"].combine_chunks()).run_ends.to_numpy()
+    starts = np.concatenate([[0], ends[:-1]]).astype(np.int64)
+    sizes = ends - starts
+    k = sizes
+    if side_col:
+        k = np.add.reduceat((table[side_col].to_numpy() == 0).astype(np.int64), starts)
+    stats[:] = [stats[0] + len(sizes), stats[1] + int((sizes == 1).sum()),
+                stats[2] + int((sizes > bucket_cap).sum()), max(stats[3], int(sizes.max())),
+                stats[4] + int((sizes * (sizes - 1) // 2).sum())]
+    ids = table.column(1).combine_chunks()
+    extra = [table[c].combine_chunks() for c in schema.names[2:-1]]
+    # one batch per bucket shape (or per limit-sized piece of a big one)
+    for i, j in _bucket_pieces(starts, sizes, k, bucket_cap, hot_strategy, _BATCH_PAIRS):
+        cols = [ids.take(i), ids.take(j), *(a.take(j) for a in extra)]
+        yield pa.RecordBatch.from_arrays([*cols, pa.nulls(len(i), _STATS_T)], schema=schema)
 
 
 def pair_kernel(
@@ -150,62 +173,42 @@ def pair_kernel(
     dst_cols: tuple[str, ...] = (),
 ):
     """mapInArrow body of candidate_pairs: batches of (bh, id[, side],
-    *dst_cols) -> batches of (src, dst, *dst_cols, _stats).
+    *dst_cols), sorted on all of them with no null id (candidate_pairs
+    sorts each partition before it) -> batches of (src, dst, *dst_cols,
+    _stats).
 
-    Gathers the whole partition (a bucket's rows can span batches), drops
-    null ids, sorts on (bh[, side], id, *dst_cols) — Arrow orders strings
-    by bytes, as Spark does — and finds the bucket runs. The first row
-    out carries the partition's bucket stats in ``_stats``; every other
-    row is a pair, src before dst in sort order (src <= dst within a
-    side, the side-0 member on src for a mixed pair). With a side column
-    only pairs holding a side-0 member are enumerated: side 0 sorts
-    first, so they are the pairs whose first member is among the
-    bucket's k side-0 rows.
-
-    A pure function of the partition's row set: a task Spark re-runs
-    emits the same pairs, whatever its batch split and row order."""
-    batches = list(batches)
-    if not batches:
+    Streams: once it holds _HOLD_ROWS rows it pairs every bucket but the
+    last one held, which may run on into the next batch, so a task holds
+    about _HOLD_ROWS rows plus its largest bucket. Every row out but the
+    last is a pair, src before dst in sort order (src <= dst within a
+    side, the side-0 member on src for a mixed pair); the last carries
+    the partition's bucket stats in ``_stats``. With a side column only
+    pairs holding a side-0 member are enumerated: side 0 sorts first, so
+    they are the pairs whose first member is among the bucket's k side-0
+    rows. A pure function of the sorted rows: a task Spark re-runs emits
+    the same pairs, wherever its batch boundaries fall."""
+    stats, held, n_held, hold = [0] * 5, [], 0, _HOLD_ROWS
+    cols = ["bh", id_col, *([side_col] if side_col else []), *dst_cols]
+    for batch in batches:
+        held.append(batch.select(cols))
+        n_held += batch.num_rows
+        t, dst = batch.schema.field(id_col).type, [batch.schema.field(c) for c in dst_cols]
+        schema = pa.schema([("src", t), ("dst", t), *dst, ("_stats", _STATS_T)])
+        args = (stats, schema, bucket_cap, hot_strategy, side_col)
+        if n_held < hold:
+            continue
+        table = pa.Table.from_batches(held)
+        cut = pc.index(table["bh"], table["bh"][-1]).as_py()  # the last bucket's start
+        if cut:
+            yield from _run_pairs(table.slice(0, cut), *args)
+        held, n_held = table.slice(cut).to_batches(), table.num_rows - cut
+        hold = max(_HOLD_ROWS, 2 * n_held)  # a bucket above the hold doubles it
+    if not n_held:
         return
-    table = pa.Table.from_batches(batches)
-    table = table.filter(pc.is_valid(table[id_col]))
-    order = ["bh", *([side_col] if side_col else []), id_col, *dst_cols]
-    table = table.take(pc.sort_indices(table, [(c, "ascending") for c in order]))
-    if not table.num_rows:
-        return
-    ends = pc.run_end_encode(table["bh"].combine_chunks()).run_ends.to_numpy()
-    ends = ends.astype(np.int64)
-    starts = np.concatenate([[0], ends[:-1]])
-    sizes = ends - starts
-    k = sizes
-    if side_col:
-        k = np.add.reduceat((table[side_col].to_numpy() == 0).astype(np.int64), starts)
-    ids = table[id_col].combine_chunks()
-    extra = [table[c].combine_chunks() for c in dst_cols]
-    names = ["src", "dst", *dst_cols, "_stats"]
-    stats_t = pa.list_(pa.int64())
-    task = TaskContext.get()
-    stats = [
-        len(sizes),
-        int((sizes == 1).sum()),
-        int((sizes > bucket_cap).sum()),
-        int(sizes.max()),
-        int((sizes * (sizes - 1) // 2).sum()),
-        # keeps two partitions' equal stats rows apart in the distinct
-        task.partitionId() if task else 0,
-    ]
-    yield pa.RecordBatch.from_arrays(
-        [pa.nulls(1, a.type) for a in (ids, ids, *extra)] + [pa.array([stats], stats_t)],
-        names=names,
-    )
-    # one batch per bucket shape (or per limit-sized piece of a big one)
-    pieces = _bucket_pieces(starts, sizes, k, bucket_cap, hot_strategy, _BATCH_PAIRS)
-    for i, j in pieces:
-        yield pa.RecordBatch.from_arrays(
-            [ids.take(i), ids.take(j), *(a.take(j) for a in extra)]
-            + [pa.nulls(len(i), stats_t)],
-            names=names,
-        )
+    yield from _run_pairs(pa.Table.from_batches(held), *args)
+    task = TaskContext.get()  # its partition id keeps equal stats rows apart in the distinct
+    stats.append(task.partitionId() if task else 0)
+    yield pa.RecordBatch.from_pylist([{"_stats": stats}], schema=schema)
 
 
 def candidate_pairs(
@@ -228,20 +231,21 @@ def candidate_pairs(
     side_col (0 or 1 per row) pairs two relations in one capped pass:
     side-1 rows never pair with each other, and a mixed pair has its
     side-0 id on src. The cap applies to the combined bucket, side 0
-    first. ``dst_cols`` are carried from each pair's dst row (the
+    first, and needs star_chain: salted chunks past the side-0 rows
+    would pair with no side-0 member, so they would be cut off from the
+    batch. ``dst_cols`` are carried from each pair's dst row (the
     streaming store's epoch)."""
+    if side_col and hot_strategy != "star_chain":
+        raise ValueError("a side column pairs with hot_strategy='star_chain' only")
+    side = [side_col] if side_col else []
     out_schema = T.StructType(
         [T.StructField(c, keys.schema[id_col].dataType) for c in ("src", "dst")]
         + [keys.schema[c] for c in dst_cols]
         + [T.StructField("_stats", T.ArrayType(T.LongType()))]
     )
     kernel = functools.partial(
-        pair_kernel,
-        id_col=id_col,
-        bucket_cap=bucket_cap,
-        hot_strategy=hot_strategy,
-        side_col=side_col,
-        dst_cols=tuple(dst_cols),
+        pair_kernel, id_col=id_col, bucket_cap=bucket_cap,
+        hot_strategy=hot_strategy, side_col=side_col, dst_cols=tuple(dst_cols),
     )
     st = F.col("_stats")
     total = [F.coalesce(F.sum(st[i]), F.lit(0)) for i in range(5)]
@@ -250,8 +254,11 @@ def candidate_pairs(
     # zero-pair result still feeds the observing stage and AQE cannot
     # prune it as empty before it reports
     pairs = (
-        keys.select("bh", id_col, *([side_col] if side_col else []), *dst_cols)
+        keys.select("bh", id_col, *side, *dst_cols)
+        .where(F.col(id_col).isNotNull())
         .repartition("bh")
+        # a spilling sort: the kernel then streams its partition
+        .sortWithinPartitions("bh", *side, id_col, *dst_cols)
         .mapInArrow(kernel, out_schema)
         .distinct()
         .observe(

@@ -1932,20 +1932,19 @@ def q_semantic_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     production default caps hot lists through the shared skew machinery.
     Like q_simhash_near_pairs, invoking this builder eagerly refreshes
     the assignment view so the oracle can never read a stale snapshot."""
+    return _semantic_dedup_view(spark, sf_dir, "prune")
+
+
+def _semantic_dedup_view(spark: SparkSession, sf_dir: str, mode: str) -> DataFrame:
     from ..operators.ann import semantic_assign, semantic_dedup
 
     assigned = semantic_assign(
-        _emb(spark, sf_dir),
-        n_lists=_SEMDEDUP_LISTS,
-        seed=DEFAULT_CONFIG["seed"],
+        _emb(spark, sf_dir), n_lists=_SEMDEDUP_LISTS, seed=DEFAULT_CONFIG["seed"]
     )
-    base = os.path.join(
-        _SEMDEDUP_VIEW_ROOT, os.path.basename(os.path.normpath(sf_dir))
-    )
-    view = _refresh_view(assigned, base)
-    assigned = spark.read.parquet(view)
+    base = os.path.join(_SEMDEDUP_VIEW_ROOT, os.path.basename(os.path.normpath(sf_dir)))
+    assigned = spark.read.parquet(_refresh_view(assigned, base))
     return semantic_dedup(
-        assigned, cos_threshold=_SEMDEDUP_THETA, bucket_cap=1_000_000
+        assigned, cos_threshold=_SEMDEDUP_THETA, bucket_cap=1_000_000, mode=mode
     )
 
 
@@ -1976,24 +1975,7 @@ FROM n LEFT JOIN dup ON n.vec_id = dup.vec_id
 
 
 def q_semantic_dedup_chain_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.ann import semantic_assign, semantic_dedup
-
-    assigned = semantic_assign(
-        _emb(spark, sf_dir),
-        n_lists=_SEMDEDUP_LISTS,
-        seed=DEFAULT_CONFIG["seed"],
-    )
-    base = os.path.join(
-        _SEMDEDUP_VIEW_ROOT, os.path.basename(os.path.normpath(sf_dir))
-    )
-    view = _refresh_view(assigned, base)
-    assigned = spark.read.parquet(view)
-    return semantic_dedup(
-        assigned,
-        cos_threshold=_SEMDEDUP_THETA,
-        bucket_cap=1_000_000,
-        mode="chain",
-    )
+    return _semantic_dedup_view(spark, sf_dir, "chain")
 
 
 SQL_SEMANTIC_DEDUP_CHAIN_DOCS = f"""

@@ -153,7 +153,8 @@ def test_pair_blocks_match_candidate_pairs(spark, hot_strategy):
             rows, f"uid {kind}, bh bigint, side int, tag bigint"
         )
         side = {r[0]: r[2] for r in rows}
-        for sided in (False, True):
+        # salted chunks past the side-0 rows would reach no side-0 member
+        for sided in (False, True) if hot_strategy == "star_chain" else (False,):
             case = f"kind={kind} sided={sided}"
             pairs, _ = candidate_pairs(
                 keys,
@@ -170,14 +171,18 @@ def test_pair_blocks_match_candidate_pairs(spark, hot_strategy):
                     assert side[s] == 0, case
                 else:
                     assert s < d, case
+    if hot_strategy == "salted":
+        with pytest.raises(ValueError):
+            candidate_pairs(keys, id_col="uid", hot_strategy="salted", side_col="side")
 
 
 @pytest.mark.parametrize("sided", [False, True])
 def test_pair_kernel_same_pairs_under_any_split(sided, monkeypatch):
     """Retry safety without Spark: the module-level kernel fed the same
-    rows in shuffled order, split into batches of 1, 7 and 512 rows,
-    emits the same pair set (and the same stats) — a task Spark re-runs
-    emits the same pairs. Output batches never exceed the pair limit."""
+    rows, sorted as candidate_pairs sorts each partition and split into
+    batches of 1, 7 and 512 rows, emits the same pair set (and the same
+    stats) whatever it holds between flushes: a task Spark re-runs emits
+    the same pairs. Output batches never exceed the pair limit."""
     import random
 
     import pyarrow as pa
@@ -190,14 +195,16 @@ def test_pair_kernel_same_pairs_under_any_split(sided, monkeypatch):
     rows = [(x, bh % 7, side, tag) for x, bh, side, tag in rows]
     rng = random.Random(11)
     seen = []
-    for size, limit in ((1, 5), (7, 1 << 20), (512, 64)):
+    for size, limit, hold in ((1, 5, 1), (7, 1 << 20, 20), (512, 64, 1 << 16)):
         rng.shuffle(rows)
+        rows.sort(key=lambda r: (r[1], r[2] if sided else 0, r[0], r[3]))
         monkeypatch.setattr(lsh, "_BATCH_PAIRS", limit)
+        monkeypatch.setattr(lsh, "_HOLD_ROWS", hold)
         table = pa.table(
             {k: [r[i] for r in rows] for i, k in enumerate(("uid", "bh", "side", "tag"))}
         )
         out = lsh.pair_kernel(
-            iter(table.to_batches(max_chunksize=size)),
+            iter(table.select(["bh", "uid", "side", "tag"]).to_batches(max_chunksize=size)),
             id_col="uid",
             bucket_cap=8,
             side_col="side" if sided else None,
@@ -212,9 +219,10 @@ def test_pair_kernel_same_pairs_under_any_split(sided, monkeypatch):
                     pairs.add((s, t, tag))
                 else:
                     stats.append(st)
-        assert pairs and len(stats) == 1
+        assert len(stats) == 1
         seen.append((pairs, stats))
     assert seen[0] == seen[1] == seen[2]
+    assert seen[0][0] == _policy_pairs(rows, 8, "star_chain", sided)
 
 
 def test_singleton_buckets_dropped(spark):

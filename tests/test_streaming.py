@@ -652,3 +652,49 @@ def test_hot_store_bucket_is_capped(spark, tmp_path):
     for r in edges:
         parent[find(r.src)] = find(r.dst)
     assert len({find(f"http://hot.example/{i:03d}") for i in range(205)}) == 1
+
+
+def test_hot_near_duplicate_bucket_keeps_clusters(spark, tmp_path):
+    """A hot combined bucket of near-duplicates (one token changed per
+    page, not identical pages) pairs under the cap as star and chain
+    edges, each verified on its own Jaccard score; the clusters must
+    equal full pairing's (a cap no bucket reaches). 12 stored pages and
+    a batch of 4 put 16 members in most buckets, over the cap of 4."""
+    import numpy as np
+
+    vocab = [f"w{i}" for i in range(500)]
+    base = list(np.random.default_rng(3).choice(vocab, size=240))
+
+    def doc(i):
+        toks = list(base)
+        toks[15 * i + 5] = f"m{i}"
+        return " ".join(toks)
+
+    unrelated = " ".join(np.random.default_rng(4).choice(vocab, size=240))
+    store_rows = [(f"u{i:02d}", doc(i)) for i in range(12)] + [("x0", unrelated)]
+    batch_rows = [(f"u{i:02d}", doc(i)) for i in range(12, 16)]
+    comps, n_edges = {}, {}
+    for cap in (4, 10_000):
+        inc = IncrementalDedup(spark, str(tmp_path / f"cap{cap}"), {"bucket_cap": cap})
+        inc.process_batch(_pages(spark, store_rows), 0)
+        inc.process_batch(_pages(spark, batch_rows), 1)
+        edges = inc.edges().select("src", "dst").collect()
+        parent: dict = {}
+
+        def find(x):
+            while parent.setdefault(x, x) != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for r in edges:
+            parent[find(r.src)] = find(r.dst)
+        groups: dict = {}
+        for u, _ in store_rows + batch_rows:
+            groups.setdefault(find(u), set()).add(u)
+        comps[cap] = sorted(sorted(g) for g in groups.values())
+        n_edges[cap] = len(edges)
+    assert comps[4] == comps[10_000]
+    assert comps[4] == [[f"u{i:02d}" for i in range(16)], ["x0"]]
+    # the cap did bite: star and chain, not the full 120 pairs
+    assert n_edges[4] < n_edges[10_000] == 120
