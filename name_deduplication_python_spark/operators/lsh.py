@@ -13,16 +13,14 @@ reference is single-process and has no skew story, SURVEY §4.2):
     preserved, so downstream connected components see the same clusters;
     recall impact is gate-tested (tests/test_recall.py).
 
-Plan shape: ONE exchange, ``repartition(bh)``, then a sort within each
-partition on (bh[, side], id) — Spark's, which spills — feeds
-``pair_kernel`` (mapInArrow). The kernel streams the sorted rows, holds
-a bounded slice of them plus the bucket in progress, and expands each
+Plan shape: ONE exchange, ``repartition(bh)``, then Spark's spilling
+sort within each partition on (bh[, side], id) feeds ``pair_kernel``
+(mapInArrow). The kernel streams the sorted rows and expands each
 bucket's pairs from ``bucket_pair_blocks`` — the one statement of the
-policy — in RecordBatches of at most 2^20 pairs. A Python worker so
+policy — in RecordBatches of at most 2^20 pairs, so a Python worker
 holds _HOLD_ROWS rows plus its largest bucket, never its whole
-partition, and a lossless cap streams C(n,2) in bounded pieces. The
-kernel counts the bucket stats into an ``Observation`` in the same
-action.
+partition. It counts the bucket stats into an ``Observation`` in the
+same action.
 """
 
 from __future__ import annotations
@@ -146,7 +144,7 @@ def _bucket_pieces(starts, sizes, k, bucket_cap, hot_strategy, limit):
 
 def _run_pairs(table, stats, schema, bucket_cap, hot_strategy, side_col):
     """Pair batches for the whole buckets in ``table`` (sorted rows of
-    (bh, id[, side], *dst_cols)); adds their bucket stats to ``stats``."""
+    (bh, id[, side])); adds their bucket stats to ``stats``."""
     ends = pc.run_end_encode(table["bh"].combine_chunks()).run_ends.to_numpy()
     starts = np.concatenate([[0], ends[:-1]]).astype(np.int64)
     sizes = ends - starts
@@ -157,11 +155,10 @@ def _run_pairs(table, stats, schema, bucket_cap, hot_strategy, side_col):
                 stats[2] + int((sizes > bucket_cap).sum()), max(stats[3], int(sizes.max())),
                 stats[4] + int((sizes * (sizes - 1) // 2).sum())]
     ids = table.column(1).combine_chunks()
-    extra = [table[c].combine_chunks() for c in schema.names[2:-1]]
     # one batch per bucket shape (or per limit-sized piece of a big one)
     for i, j in _bucket_pieces(starts, sizes, k, bucket_cap, hot_strategy, _BATCH_PAIRS):
-        cols = [ids.take(i), ids.take(j), *(a.take(j) for a in extra)]
-        yield pa.RecordBatch.from_arrays([*cols, pa.nulls(len(i), _STATS_T)], schema=schema)
+        cols = [ids.take(i), ids.take(j), pa.nulls(len(i), _STATS_T)]
+        yield pa.RecordBatch.from_arrays(cols, schema=schema)
 
 
 def pair_kernel(
@@ -170,30 +167,23 @@ def pair_kernel(
     bucket_cap: int,
     hot_strategy: str = "star_chain",
     side_col: str | None = None,
-    dst_cols: tuple[str, ...] = (),
 ):
-    """mapInArrow body of candidate_pairs: batches of (bh, id[, side],
-    *dst_cols), sorted on all of them with no null id (candidate_pairs
-    sorts each partition before it) -> batches of (src, dst, *dst_cols,
-    _stats).
-
-    Streams: once it holds _HOLD_ROWS rows it pairs every bucket but the
-    last one held, which may run on into the next batch, so a task holds
-    about _HOLD_ROWS rows plus its largest bucket. Every row out but the
-    last is a pair, src before dst in sort order (src <= dst within a
-    side, the side-0 member on src for a mixed pair); the last carries
-    the partition's bucket stats in ``_stats``. With a side column only
-    pairs holding a side-0 member are enumerated: side 0 sorts first, so
-    they are the pairs whose first member is among the bucket's k side-0
-    rows. A pure function of the sorted rows: a task Spark re-runs emits
-    the same pairs, wherever its batch boundaries fall."""
+    """mapInArrow body of candidate_pairs: batches of (bh, id[, side]),
+    sorted on all of them, no null id -> batches of (src, dst, _stats).
+    Past _HOLD_ROWS rows it pairs every bucket but the last one held,
+    which may run on into the next batch. Each row out but the last is a
+    pair, src before dst in sort order; the last carries the partition's
+    bucket stats. With a side column only pairs with a side-0 member
+    (side 0 sorts first) are enumerated. A pure function of the sorted
+    rows: a task Spark re-runs emits the same pairs, wherever its batch
+    boundaries fall."""
     stats, held, n_held, hold = [0] * 5, [], 0, _HOLD_ROWS
-    cols = ["bh", id_col, *([side_col] if side_col else []), *dst_cols]
+    cols = ["bh", id_col, *([side_col] if side_col else [])]
     for batch in batches:
         held.append(batch.select(cols))
         n_held += batch.num_rows
-        t, dst = batch.schema.field(id_col).type, [batch.schema.field(c) for c in dst_cols]
-        schema = pa.schema([("src", t), ("dst", t), *dst, ("_stats", _STATS_T)])
+        t = batch.schema.field(id_col).type
+        schema = pa.schema([("src", t), ("dst", t), ("_stats", _STATS_T)])
         args = (stats, schema, bucket_cap, hot_strategy, side_col)
         if n_held < hold:
             continue
@@ -217,7 +207,6 @@ def candidate_pairs(
     bucket_cap: int = 64,
     hot_strategy: str = "star_chain",
     side_col: str | None = None,
-    dst_cols: tuple[str, ...] = (),
 ) -> tuple[DataFrame, Observation]:
     """(id, bh) -> candidate pairs (src, dst), canonical src < dst and
     distinct across bands; id and bh may be bigint or string.
@@ -233,20 +222,16 @@ def candidate_pairs(
     side-0 id on src. The cap applies to the combined bucket, side 0
     first, and needs star_chain: salted chunks past the side-0 rows
     would pair with no side-0 member, so they would be cut off from the
-    batch. ``dst_cols`` are carried from each pair's dst row (the
-    streaming store's epoch)."""
+    batch."""
     if side_col and hot_strategy != "star_chain":
         raise ValueError("a side column pairs with hot_strategy='star_chain' only")
     side = [side_col] if side_col else []
     out_schema = T.StructType(
         [T.StructField(c, keys.schema[id_col].dataType) for c in ("src", "dst")]
-        + [keys.schema[c] for c in dst_cols]
         + [T.StructField("_stats", T.ArrayType(T.LongType()))]
     )
-    kernel = functools.partial(
-        pair_kernel, id_col=id_col, bucket_cap=bucket_cap,
-        hot_strategy=hot_strategy, side_col=side_col, dst_cols=tuple(dst_cols),
-    )
+    kernel = functools.partial(pair_kernel, id_col=id_col, bucket_cap=bucket_cap,
+                               hot_strategy=hot_strategy, side_col=side_col)
     st = F.col("_stats")
     total = [F.coalesce(F.sum(st[i]), F.lit(0)) for i in range(5)]
     obs = Observation()
@@ -254,11 +239,11 @@ def candidate_pairs(
     # zero-pair result still feeds the observing stage and AQE cannot
     # prune it as empty before it reports
     pairs = (
-        keys.select("bh", id_col, *side, *dst_cols)
+        keys.select("bh", id_col, *side)
         .where(F.col(id_col).isNotNull())
         .repartition("bh")
         # a spilling sort: the kernel then streams its partition
-        .sortWithinPartitions("bh", *side, id_col, *dst_cols)
+        .sortWithinPartitions("bh", *side, id_col)
         .mapInArrow(kernel, out_schema)
         .distinct()
         .observe(

@@ -110,6 +110,32 @@ def _batch_winnow_anchors(
     return res  # type: ignore[return-value]
 
 
+def _winnow_stage(extracted, id_col, text_col, gram_chars, window, with_pos):
+    """mapInPandas over Arrow batches: (id, fp[, pos]) rows of each
+    text's winnowed fingerprints (distinct per doc without positions);
+    numpy inner kernels per doc (docs are short relative to batches;
+    the per-doc loop is slice arithmetic)."""
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            anchors = _batch_winnow_anchors(list(pdf[text_col]), gram_chars, window)
+            if not with_pos:
+                anchors = [(np.unique(f), None) for f, _ in anchors]
+            counts = [len(f) for f, _ in anchors]
+            if not sum(counts):
+                continue
+            out = {
+                id_col: np.repeat(pdf[id_col].astype(str).to_numpy(), counts),
+                "fp": np.concatenate([f for f, _ in anchors]).view(np.int64),
+            }
+            if with_pos:
+                out["pos"] = np.concatenate([p for _, p in anchors]).astype(np.int32)
+            yield pd.DataFrame(out)
+
+    schema = f"{id_col} string, fp bigint" + (", pos int" if with_pos else "")
+    return extracted.select(id_col, text_col).mapInPandas(gen, schema=schema)
+
+
 def fingerprint_stage(
     extracted: DataFrame,
     id_col: str = "url",
@@ -117,31 +143,8 @@ def fingerprint_stage(
     gram_chars: int = 64,
     window: int = 32,
 ) -> DataFrame:
-    """(id, text) -> (id, fp) — one row per distinct winnowed fingerprint.
-
-    mapInPandas over Arrow batches; numpy inner kernels per doc (docs are
-    short relative to batches; the per-doc loop is slice arithmetic)."""
-    out_schema = f"{id_col} string, fp bigint"
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            anchors = _batch_winnow_anchors(
-                list(pdf[text_col]), gram_chars, window
-            )
-            ids: list[str] = []
-            fps: list[np.ndarray] = []
-            for i, (f, _) in zip(pdf[id_col].astype(str), anchors):
-                fu = np.unique(f)
-                if len(fu):
-                    ids.extend([i] * len(fu))
-                    fps.append(fu)
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {id_col: ids, "fp": np.concatenate(fps).view(np.int64)}
-            )
-
-    return extracted.select(id_col, text_col).mapInPandas(gen, schema=out_schema)
+    """(id, text) -> (id, fp) — one row per distinct winnowed fingerprint."""
+    return _winnow_stage(extracted, id_col, text_col, gram_chars, window, False)
 
 
 def substring_pairs(
@@ -232,32 +235,7 @@ def anchor_stage(
     window: int = 32,
 ) -> DataFrame:
     """(id, text) -> (id, fp, pos): winnowed fingerprints with positions."""
-    out_schema = f"{id_col} string, fp bigint, pos int"
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            anchors = _batch_winnow_anchors(
-                list(pdf[text_col]), gram_chars, window
-            )
-            ids: list[str] = []
-            fps: list[np.ndarray] = []
-            poss: list[np.ndarray] = []
-            for i, (f, p) in zip(pdf[id_col].astype(str), anchors):
-                if len(f):
-                    ids.extend([i] * len(f))
-                    fps.append(f)
-                    poss.append(p)
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "fp": np.concatenate(fps).view(np.int64),
-                    "pos": np.concatenate(poss).astype(np.int32),
-                }
-            )
-
-    return extracted.select(id_col, text_col).mapInPandas(gen, schema=out_schema)
+    return _winnow_stage(extracted, id_col, text_col, gram_chars, window, True)
 
 
 def shared_spans(

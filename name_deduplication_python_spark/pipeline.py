@@ -377,14 +377,14 @@ class DedupPipeline:
 
     def _write_bucket_stats(self, stage: str) -> None:
         """bucket_stats.json from the Observation that the write of
-        ``stage`` — the first write consuming `pairs` — populated. The
-        kernel's stats rows reach it even with zero pairs, except past
-        another exchange: on a zero-row fused `edges` write AQE's
+        ``stage`` — the first write consuming `pairs` — populated. On a
+        zero-row write past another exchange (fused `edges`) AQE's
         empty-relation pruning drops the observing stage from the final
-        plan (Spark 4.1), so there the (pair-free) pairing runs alone."""
+        plan (Spark 4.1), so after any zero-row write the (then cheap)
+        pairing runs alone."""
         obs, keys = self._bucket_obs
         self._bucket_obs = None
-        if stage == "edges" and self._stage_rowcount(stage) == 0:
+        if self._stage_rowcount(stage) == 0:
             pairs, obs = candidate_pairs(keys, id_col="uid", bucket_cap=self.cfg.bucket_cap)
             pairs.count()
         with open(os.path.join(self.workdir, "bucket_stats.json"), "w") as f:

@@ -160,15 +160,15 @@ class IncrementalDedup:
         )
 
     @staticmethod
-    def _store_sigs_for(old_sigs: DataFrame, cross: DataFrame) -> DataFrame:
-        """Store signatures of exactly the (dst, epoch) versions in this
-        batch's cross pairs — the verify join pulls the 512 B payloads of
+    def _store_sigs_for(old_sigs: DataFrame, old_keys: DataFrame) -> DataFrame:
+        """Store signatures of exactly the (url, epoch) versions the pruned
+        store keys carry — the verify join pulls the 512 B payloads of
         touched docs only, O(batch + touched docs) per epoch, not
-        O(corpus). Every dst with an epoch is a store url at its latest
-        epoch and never a batch url (_pruned_store_keys), so no re-crawl
-        filter is needed here; batch-batch pairs carry a null epoch and
-        fetch nothing."""
-        fetch = cross.select(F.col("dst").alias("url"), "epoch")
+        O(corpus). Each is a store url at its latest epoch and never a
+        batch url (_pruned_store_keys), so no re-crawl filter is needed
+        here. Every cross pair's dst is among them; in a capped bucket a
+        few more are fetched than pair."""
+        fetch = old_keys.select("url", "epoch")
         return old_sigs.join(F.broadcast(fetch), ["url", "epoch"], "left_semi").drop(
             "epoch"
         )
@@ -184,9 +184,10 @@ class IncrementalDedup:
         over the whole corpus per epoch; round 3 still shuffled the full
         key store.) One candidate_pairs call pairs the batch keys (side 0)
         with those store keys (side 1): store keys never pair with each
-        other, a hot bucket is capped whatever side its members come from,
-        and a cross pair carries the store side's epoch, by which the
-        verify payloads are fetched — see _store_sigs_for.
+        other and a hot bucket is capped whatever side its members come
+        from. The verify payloads are fetched by the (url, epoch) of those
+        store keys (_store_sigs_for), so the pairs are read once, by the
+        verify join, and need no checkpoint.
 
         Replay exactness: all store reads are filtered to ``epoch <
         epoch_id``. A crash after the band_keys/epoch=N write but before
@@ -217,12 +218,10 @@ class IncrementalDedup:
             new_sigs, bands=c["bands"], rows_per_band=c["rows_per_band"]
         ).localCheckpoint()
 
-        keys = new_keys.select(
-            "url", "bh", F.lit(0).alias("side"), F.lit(None).cast("int").alias("epoch")
-        )
+        keys = new_keys.select("url", "bh", F.lit(0).alias("side"))
+        all_sigs = new_sigs
         # cold-store rule (see docstring)
-        warm = any(e < epoch_id for e in self._committed_epochs())
-        if warm:
+        if any(e < epoch_id for e in self._committed_epochs()):
             old_sigs = self._read_store("signatures").where(F.col("epoch") < epoch_id)
             old_keys = self._pruned_store_keys(
                 self._read_store("band_keys").where(F.col("epoch") < epoch_id),
@@ -232,21 +231,13 @@ class IncrementalDedup:
             )
             # store keys pair as side 1: never with each other, and with a
             # batch url on src; the anti-join on batch urls keeps src != dst
-            keys = keys.unionByName(
-                old_keys.select("url", "bh", F.lit(1).alias("side"), "epoch")
-            )
-        # one capped pass: new-vs-new and new-vs-store (dst's epoch carried)
-        pairs, _ = candidate_pairs(
-            keys, bucket_cap=c["bucket_cap"], side_col="side", dst_cols=("epoch",)
-        )
-        all_sigs = new_sigs
-        if warm:
-            # O(batch) pairs read twice (store payload fetch, verify)
-            pairs = pairs.localCheckpoint()
-            all_sigs = new_sigs.unionByName(self._store_sigs_for(old_sigs, pairs))
+            keys = keys.unionByName(old_keys.select("url", "bh", F.lit(1).alias("side")))
+            all_sigs = new_sigs.unionByName(self._store_sigs_for(old_sigs, old_keys))
+        # one capped pass: new-vs-new and new-vs-store
+        pairs, _ = candidate_pairs(keys, bucket_cap=c["bucket_cap"], side_col="side")
 
         edges = verify_stage(
-            pairs.drop("epoch"),
+            pairs,
             all_sigs,
             num_hashes=c["num_hashes"],
             jaccard_threshold=c["jaccard_threshold"],

@@ -95,8 +95,8 @@ _STR_IDS = ["Z", "a", "z", "\u00e9", "\uff41", "\U0001d538", "\u00e9a", "a\u0301
 
 
 def _bucket_rows(kind, sizes):
-    """(id, bh, side, tag) rows: ids shuffled within each bucket, sides
-    alternating by row, tag unique per row."""
+    """(id, bh, side) rows: ids shuffled within each bucket, sides
+    alternating by row."""
     import random
 
     rng = random.Random(5)
@@ -107,7 +107,7 @@ def _bucket_rows(kind, sizes):
         else:
             ids = [f"{_STR_IDS[i % 8]}{i // 8}.{b}" for i in range(n)]
         rng.shuffle(ids)
-        rows += [(x, b, i % 2, b * 1000 + i) for i, x in enumerate(ids)]
+        rows += [(x, b, i % 2) for i, x in enumerate(ids)]
     return rows
 
 
@@ -129,11 +129,7 @@ def _policy_pairs(rows, cap, hot_strategy, sided):
             for j in range(jlo, jhi)
             if i < j
         } | {(int(i), int(j)) for i, j in singles}
-        want |= {
-            (m[i][0], m[j][0], m[j][3])
-            for i, j in idx
-            if not sided or m[i][2] == 0
-        }
+        want |= {(m[i][0], m[j][0]) for i, j in idx if not sided or m[i][2] == 0}
     return want
 
 
@@ -144,13 +140,13 @@ def test_pair_blocks_match_candidate_pairs(spark, hot_strategy):
     set on buckets at and around the cap: below, at, one over, whole
     chunks, a partial chunk; for bigint and string ids, with and without
     a side column. String ids canonicalize in UTF-8 byte order. With a
-    side column only pairs holding a side-0 member come out, a mixed
-    pair has its side-0 id on src, and dst carries its own row's tag."""
+    side column only pairs holding a side-0 member come out and a mixed
+    pair has its side-0 id on src."""
     cap = 4
     for kind in ("bigint", "string"):
         rows = _bucket_rows(kind, [2, cap, cap + 1, 2 * cap, 3 * cap + 5])
         keys = spark.createDataFrame(
-            rows, f"uid {kind}, bh bigint, side int, tag bigint"
+            rows, f"uid {kind}, bh bigint, side int"
         )
         side = {r[0]: r[2] for r in rows}
         # salted chunks past the side-0 rows would reach no side-0 member
@@ -162,11 +158,10 @@ def test_pair_blocks_match_candidate_pairs(spark, hot_strategy):
                 bucket_cap=cap,
                 hot_strategy=hot_strategy,
                 side_col="side" if sided else None,
-                dst_cols=("tag",),
             )
-            got = {(r.src, r.dst, r.tag) for r in pairs.collect()}
+            got = {(r.src, r.dst) for r in pairs.collect()}
             assert got == _policy_pairs(rows, cap, hot_strategy, sided), case
-            for s, d, _ in got:
+            for s, d in got:
                 if sided and side[s] != side[d]:
                     assert side[s] == 0, case
                 else:
@@ -192,31 +187,30 @@ def test_pair_kernel_same_pairs_under_any_split(sided, monkeypatch):
     rows = _bucket_rows("string", [1, 2, 3, 5, 9, 17, 40, 1, 6]) + _bucket_rows(
         "string", [4, 70]
     )
-    rows = [(x, bh % 7, side, tag) for x, bh, side, tag in rows]
+    rows = [(x, bh % 7, side) for x, bh, side in rows]
     rng = random.Random(11)
     seen = []
     for size, limit, hold in ((1, 5, 1), (7, 1 << 20, 20), (512, 64, 1 << 16)):
         rng.shuffle(rows)
-        rows.sort(key=lambda r: (r[1], r[2] if sided else 0, r[0], r[3]))
+        rows.sort(key=lambda r: (r[1], r[2] if sided else 0, r[0]))
         monkeypatch.setattr(lsh, "_BATCH_PAIRS", limit)
         monkeypatch.setattr(lsh, "_HOLD_ROWS", hold)
         table = pa.table(
-            {k: [r[i] for r in rows] for i, k in enumerate(("uid", "bh", "side", "tag"))}
+            {k: [r[i] for r in rows] for i, k in enumerate(("uid", "bh", "side"))}
         )
         out = lsh.pair_kernel(
-            iter(table.select(["bh", "uid", "side", "tag"]).to_batches(max_chunksize=size)),
+            iter(table.select(["bh", "uid", "side"]).to_batches(max_chunksize=size)),
             id_col="uid",
             bucket_cap=8,
             side_col="side" if sided else None,
-            dst_cols=("tag",),
         )
         pairs, stats = set(), []
         for batch in out:
             assert batch.num_rows <= limit
             d = batch.to_pydict()
-            for s, t, tag, st in zip(d["src"], d["dst"], d["tag"], d["_stats"]):
+            for s, t, st in zip(d["src"], d["dst"], d["_stats"]):
                 if st is None:
-                    pairs.add((s, t, tag))
+                    pairs.add((s, t))
                 else:
                     stats.append(st)
         assert len(stats) == 1

@@ -158,8 +158,8 @@ def test_crash_replay_after_partial_epoch_write_is_exact(spark, tmp_path):
 def test_store_verify_join_is_pruned_to_touched_docs(spark, tmp_path):
     """Per-epoch verify cost must be O(batch + touched docs), not
     O(corpus): the signature store feeds the verify join only for the
-    (url, epoch) versions that appear on the store side of this epoch's
-    cross pairs, with their full payloads."""
+    (url, epoch) versions that this epoch's pruned store keys carry,
+    with their full payloads."""
     pages, _ = generate_corpus(n_base=60, seed=29)
     df = corpus_to_spark(spark, pages).cache()
     urls = sorted(pages["url"])
@@ -170,22 +170,21 @@ def test_store_verify_join_is_pruned_to_touched_docs(spark, tmp_path):
 
     old_sigs = inc._read_store("signatures")
     n_store = old_sigs.count()
-    # a synthetic cross-pair set touching exactly 2 store docs at their
+    # synthetic pruned store keys touching exactly 2 store docs at their
     # stored epoch, plus a store url at an epoch it was never written in
     touched = urls[0], urls[2]
-    cross = spark.createDataFrame(
-        [("new-doc-a", touched[0], 0), ("new-doc-b", touched[1], 0),
-         ("new-doc-c", urls[4], 1)],
-        "src string, dst string, epoch int",
+    keys = spark.createDataFrame(
+        [(touched[0], 7, 0), (touched[0], 9, 0), (touched[1], 7, 0), (urls[4], 7, 1)],
+        "url string, bh bigint, epoch int",
     )
-    pruned = IncrementalDedup._store_sigs_for(old_sigs, cross)
+    pruned = IncrementalDedup._store_sigs_for(old_sigs, keys)
     assert pruned.count() == 2 < n_store
     got = {r.url for r in pruned.select("url").collect()}
     assert got == set(touched)
     # and the pruned frame carries full signature payloads
     assert {"url", "minhash", "simhash"} <= set(pruned.columns)
-    # empty pairs -> zero store rows shuffle
-    empty = spark.createDataFrame([], "src string, dst string, epoch int")
+    # no pruned keys -> zero store rows shuffle
+    empty = spark.createDataFrame([], "url string, bh bigint, epoch int")
     assert IncrementalDedup._store_sigs_for(old_sigs, empty).count() == 0
 
 
